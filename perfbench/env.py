@@ -121,15 +121,9 @@ def _children_map() -> dict[int, list[int]]:
     for name in os.listdir("/proc"):
         if not name.isdigit():
             continue
-        try:
-            with open(f"/proc/{name}/stat") as f:
-                stat = f.read()
-        except OSError:
-            continue  # exited while listing
-        # the command field may hold spaces and parens: split after it
-        fields = stat[stat.rindex(")") + 2:].split()
-        if fields[0] == "Z":
-            continue  # zombie: already exited, only unreaped
+        fields = _stat_fields(int(name))
+        if fields is None or fields[0] == "Z":
+            continue  # exited, or a zombie: exited and only unreaped
         kids.setdefault(int(fields[1]), []).append(int(name))
     return kids
 
@@ -150,6 +144,29 @@ def _cmdline(pid: int) -> str:
             return f.read().replace(b"\0", b" ").decode(errors="replace")[:200]
     except OSError:
         return "?"
+
+
+def _stat_fields(pid: int) -> list[str] | None:
+    """Fields of ``/proc/<pid>/stat`` after the command name."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            stat = f.read()
+    except OSError:
+        return None  # exited while listing
+    # the command field may hold spaces and parens: split after it
+    return stat[stat.rindex(")") + 2:].split()
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds (user + system) used so far by this process, its live
+    descendants (Python driver, JVM, Spark's Python workers) and the
+    children they reaped."""
+    ticks = 0
+    for pid in [os.getpid(), *descendants(os.getpid())]:
+        fields = _stat_fields(pid)
+        if fields is not None:  # utime, stime, cutime, cstime
+            ticks += sum(int(x) for x in fields[11:15])
+    return ticks / os.sysconf("SC_CLK_TCK")
 
 
 def _vm_hwm_kb(pid: int) -> int:

@@ -10,6 +10,7 @@ from __future__ import annotations
 import json
 import os
 import random
+import time
 
 import numpy as np
 import pandas as pd
@@ -216,6 +217,30 @@ def test_precision_recall():
     assert gold.precision_recall({1, 2}, {1, 2}) == (1.0, 1.0)
     assert gold.precision_recall({1, 2, 3}, {1, 2}) == (2 / 3, 1.0)
     assert gold.precision_recall(set(), set()) == (1.0, 1.0)
+
+
+# --- operation timing ------------------------------------------------------------
+
+
+def test_stopwatch_counts_cpu_inside_steps_only():
+    from perfbench.workloads import Stopwatch
+
+    def spin(seconds):
+        end = time.perf_counter() + seconds
+        while time.perf_counter() < end:
+            pass
+
+    sw = Stopwatch()
+    with sw.step("busy"):
+        spin(0.3)
+    spin(0.3)  # between steps, as the checks are: counted in neither
+    with sw.step("idle"):
+        time.sleep(0.2)
+    r = sw.result(extra=1.0)
+    assert r["busy_s"] >= 0.3 and r["idle_s"] >= 0.2 and r["extra"] == 1.0
+    assert r["op_s"] == pytest.approx(r["busy_s"] + r["idle_s"])
+    # CPU ticks are 10 ms; a busy step may lose some CPU to other tenants
+    assert 0.1 <= r["cpu_s"] <= r["busy_s"] + 0.05
 
 
 # --- the benchmark spec ------------------------------------------------------------

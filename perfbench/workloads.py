@@ -13,12 +13,13 @@ import contextlib
 import os
 import shutil
 import time
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 
 from . import gold
-from .env import Phases
+from .env import Phases, tree_cpu_s
 from .trace import MB, Tracer
 
 ALL_SINKS = ("triples", "edges", "mentions", "entities")
@@ -38,16 +39,38 @@ def _dir_mb(path: str) -> float:
                for d, _, files in os.walk(path) for f in files) / MB
 
 
-def _xor_checksum(a: str, b: str) -> str:
-    return format(int(a, 16) ^ int(b, 16), "016x")
+class Stopwatch:
+    """Wall time of each timed step of one operation, and the CPU time
+    the whole process tree (driver, JVM, Python workers) spent in them;
+    the untimed checks between steps count in neither."""
+
+    def __init__(self) -> None:
+        self.steps: dict[str, float] = {}
+        self.cpu_s = 0.0
+
+    @contextlib.contextmanager
+    def step(self, name: str) -> Iterator[None]:
+        w0, c0 = time.perf_counter(), tree_cpu_s()
+        try:
+            yield
+        finally:
+            self.steps[name] = time.perf_counter() - w0
+            self.cpu_s += tree_cpu_s() - c0
+
+    def result(self, **extra: float) -> dict[str, float]:
+        """``op_s`` (wall), ``cpu_s`` and ``<step>_s`` per step."""
+        return {"op_s": sum(self.steps.values()), "cpu_s": self.cpu_s,
+                **{f"{k}_s": v for k, v in self.steps.items()}, **extra}
 
 
 class Workload:
-    """Base: subclasses set ``name`` and implement the hooks below."""
+    """Base: subclasses set ``name`` and the corpus size, and implement
+    :meth:`set_up`, :meth:`op` and :meth:`traced_op`."""
 
     name = ""
-    #: operations per run at the least, whatever the window
-    MIN_OPS = 1
+    N_PAGES = 0
+    N_ENTITIES = 0
+    _oracle = None
 
     def __init__(self, spark, work: str, seed: int, procs: int) -> None:
         self.spark, self.work, self.seed, self.procs = spark, work, seed, procs
@@ -55,11 +78,19 @@ class Workload:
     def make_inputs(self) -> None:
         """Generate the seeded corpus and dictionary (pure Python; timed
         several times for ``setup_s``)."""
-        raise NotImplementedError
+        from char_ner_spark.fixtures import make_alias_table, make_pages
+
+        self.alias = make_alias_table(self.N_ENTITIES, seed=self.seed)
+        self.pages = make_pages(self.N_PAGES, seed=self.seed,
+                                alias_df=self.alias)
 
     def start_gold(self) -> None:
-        """Start reference computations that need no Spark (runs while
-        the JVM starts)."""
+        """Start ``oracle.run_oracle`` over the corpus in child
+        interpreters, while the JVM starts. They get half the cores, so
+        they do not slow down the JVM's start and warm-up beside them."""
+        self._oracle = gold.OraclePool(
+            [(c, self.alias) for c in gold.chunks(self.pages, self.procs)],
+            max(1, self.procs // 2), os.path.join(self.work, "tmp"))
 
     def set_up(self) -> None:
         """Everything before the first measured operation, warm-up
@@ -67,8 +98,8 @@ class Workload:
         raise NotImplementedError
 
     def op(self, i: int) -> dict[str, float]:
-        """Operation ``i`` of the closed loop; returns its timings with
-        ``op_s`` the wall time the client waited."""
+        """Operation ``i`` of the closed loop; returns its
+        :meth:`Stopwatch.result`."""
         raise NotImplementedError
 
     def traced_op(self, i: int, tr: Tracer) -> dict[str, float]:
@@ -77,8 +108,15 @@ class Workload:
 
     def close(self) -> None:
         """Release anything set-up left running."""
+        if self._oracle is not None:
+            self._oracle.close()
 
     # --- helpers shared by the workloads ---------------------------------
+
+    def _gold_triples(self) -> pd.DataFrame:
+        """The oracle's triples of the whole corpus, once it has them."""
+        return pd.concat(self._oracle.result(), ignore_index=True) \
+            .drop_duplicates()
 
     def _write_pages(self, pages: pd.DataFrame, name: str) -> str:
         """The corpus as a parquet input table, written by pyarrow rather
@@ -162,8 +200,15 @@ def _traced_dict_state(tr: Tracer, spark, alias: pd.DataFrame) -> dict:
     return state
 
 
-def _traced_commit(tr: Tracer, spark, out_dir: str, table: str, pid: int,
-                   df, n_parts: int, rows_in: int) -> None:
+def _no_span(stem: str):
+    return contextlib.nullcontext()
+
+
+def _commit_part(spark, out_dir: str, table: str, pid: int, df, n_parts: int,
+                 rows_in: int, span=_no_span) -> str:
+    """Commit ``df`` as part ``pid`` of ``table`` the way
+    ``lineage.run_partitioned`` does: write the part, checksum it, append
+    the manifest row and the snapshot. Returns the part's directory."""
     import datetime as dt
 
     from pyspark.sql import functions as F
@@ -171,13 +216,13 @@ def _traced_commit(tr: Tracer, spark, out_dir: str, table: str, pid: int,
     from char_ner_spark import lineage
 
     part_path = os.path.join(out_dir, table, f"part_id={pid}")
-    with tr.span("lineage.commit_"):
+    with span("lineage.commit_"):
         df.withColumn("part_id", F.lit(pid)).write.mode(
             "overwrite").parquet(part_path)
-    with tr.span("lineage.checksum_"):
+    with span("lineage.checksum_"):
         back = spark.read.parquet(part_path)
         n, checksum = lineage.table_checksum(back)
-    with tr.span("lineage.snapshot_"):
+    with span("lineage.snapshot_"):
         lineage.append_manifest(spark, out_dir, {
             "stage": table, "part_id": pid, "rows_in": rows_in,
             "rows_out": n, "checksum": checksum,
@@ -187,6 +232,13 @@ def _traced_commit(tr: Tracer, spark, out_dir: str, table: str, pid: int,
                                schema_json=back.schema.json(),
                                add_part={"part_id": pid, "rows": n,
                                          "checksum": checksum})
+    return part_path
+
+
+def _traced_commit(tr: Tracer, spark, out_dir: str, table: str, pid: int,
+                   df, n_parts: int, rows_in: int) -> None:
+    part_path = _commit_part(spark, out_dir, table, pid, df, n_parts, rows_in,
+                             tr.span)
     tr.count("lineage.commits", 1)
     tr.count("lineage.written_mb", _dir_mb(part_path))
 
@@ -208,51 +260,29 @@ def _finish_traced_pass(tr, spark, out_dir, pid, outs, tables, n_parts,
 class KgBuild(Workload):
     """Closed loop of ``lineage.run_partitioned`` jobs over one corpus,
     every job into a fresh output directory; each job's triples must
-    equal the oracle's."""
+    equal the oracle's. The warm-up is the same job: a smaller one leaves
+    the JIT compiling the per-row paths during the first measured job."""
 
     name = "kg_build"
-    MIN_OPS = 2
-    N_PAGES = 1500
-    N_WARMUP_PAGES = 200
+    N_PAGES = 500
     N_ENTITIES = 500
     N_PARTS = 1
-    _oracle = None
-
-    def make_inputs(self) -> None:
-        from char_ner_spark.fixtures import make_alias_table, make_pages
-
-        self.alias = make_alias_table(self.N_ENTITIES, seed=self.seed)
-        self.pages = make_pages(self.N_PAGES, seed=self.seed,
-                                alias_df=self.alias)
-
-    def start_gold(self) -> None:
-        self._oracle = gold.OraclePool(
-            [(c, self.alias) for c in gold.chunks(self.pages, self.procs)],
-            self.procs, os.path.join(self.work, "tmp"))
 
     def set_up(self) -> None:
         from char_ner_spark import lineage
 
         ph = Phases(self.name)
         self.pages_path = self._write_pages(self.pages, "pages")
-        warm_path = self._write_pages(self.pages.iloc[:self.N_WARMUP_PAGES],
-                                      "warmup")
         out = self._job_dir("warmup")
-        lineage.run_partitioned(self.spark, self.spark.read.parquet(warm_path),
-                                self.alias, out, n_parts=self.N_PARTS,
-                                sinks=ALL_SINKS)
+        lineage.run_partitioned(self.spark, self._pages_df(), self.alias,
+                                out, n_parts=self.N_PARTS, sinks=ALL_SINKS)
         self.schema = self._stored_triples(out).schema
         shutil.rmtree(out)
-        ph.done(f"warm-up job on {self.N_WARMUP_PAGES} pages")
-        want = pd.concat(self._oracle.result(), ignore_index=True) \
-            .drop_duplicates()
+        ph.done("warm-up job")
+        want = self._gold_triples()
         self.gold_set = gold.triple_set(want)
         self.gold = self._gold_checksum(want, self.schema)
         ph.done("oracle wait and gold checksum")
-
-    def close(self) -> None:
-        if self._oracle is not None:
-            self._oracle.close()
 
     def _pages_df(self):
         return self.spark.read.parquet(self.pages_path)
@@ -282,19 +312,20 @@ class KgBuild(Workload):
         from char_ner_spark import lineage
 
         out = self._job_dir(i)
-        t0 = time.perf_counter()
-        lineage.run_partitioned(self.spark, self._pages_df(), self.alias,
-                                out, n_parts=self.N_PARTS, sinks=ALL_SINKS)
-        op_s = time.perf_counter() - t0
+        sw = Stopwatch()
+        with sw.step("job"):
+            lineage.run_partitioned(self.spark, self._pages_df(), self.alias,
+                                    out, n_parts=self.N_PARTS,
+                                    sinks=ALL_SINKS)
         n = self._check(out)
-        return {"op_s": op_s, "triples_per_s": n / op_s}
+        return sw.result(triples_per_s=n / sw.steps["job"])
 
     def traced_op(self, i: int, tr: Tracer) -> dict[str, float]:
         from char_ner_spark import pipeline
 
         out = self._job_dir(f"traced-{i}")
-        t0 = time.perf_counter()
-        with tr.span("trace.op_"):
+        sw = Stopwatch()
+        with sw.step("job"), tr.span("trace.op_"):
             state = _traced_dict_state(tr, self.spark, self.alias)
             # N_PARTS is 1: the single work unit 0 holds the whole corpus
             outs = _traced_pipeline(tr, self.spark, self._pages_df(),
@@ -306,94 +337,71 @@ class KgBuild(Workload):
                            pipeline.entities_table(self.spark, self.alias,
                                                    state["canon"]),
                            self.N_PARTS, len(self.alias))
-        op_s = time.perf_counter() - t0
         self._check(out)
-        return {"op_s": op_s}
+        return sw.result()
 
 
 # ---------------------------------------------------------------------------
-# kg_refresh: dictionary delta + new corpus slice + read-back of a stored KG
+# kg_refresh: dictionary delta on a stored KG + read-back
 # ---------------------------------------------------------------------------
 
 BGP_QUERY = ("SELECT ?p ?o ?c WHERE { ?p works_for ?o . "
              "?o located_in ?c . }")
 
+#: column types of the triples table as ``lineage.run_partitioned`` stores it
+TRIPLES_DDL = ("subj BIGINT, pred STRING, obj BIGINT, url STRING, "
+               "sent_idx INT, conf DOUBLE")
+
 
 class KgRefresh(Workload):
-    """Each round restores the base KG (untimed), then times three steps
-    a maintainer and a reader of the KG wait for:
+    """KG upkeep on a stored KG. Each round restores the base KG
+    (untimed), then times two steps a maintainer and a reader of the KG
+    wait for:
 
     1. a one-alias dictionary delta bridging two canonical components
        present in the stored triples (``update_dictionary_state`` +
        ``apply_dictionary_update``);
-    2. ingest of a fresh page slice with the updated dictionary
-       (``lineage.ingest_pages``);
-    3. read-back queries on the refreshed snapshot: a SPARQL 2-hop BGP and
+    2. read-back queries on the updated snapshot: a SPARQL 2-hop BGP and
        PageRank, each reading the tables afresh through ``lineage``.
 
-    Deltas and slices follow a seeded cycle of ``CYCLE`` rounds — longer
-    than the worker-side alias-index cache, so every round rebuilds it as
-    a real dictionary update would."""
+    The base KG holds the triples and edges tables: the oracle's triples
+    of the base corpus, committed in set-up through the lineage calls
+    ``run_partitioned`` makes (``kg_build`` checks that the pipeline
+    stores exactly the oracle's triples). No page is tagged, so a run does
+    not pay the tagger's start-up a second time. Deltas follow a seeded
+    cycle of ``CYCLE`` rounds; the set-up's warm-up round is the last."""
 
     name = "kg_refresh"
-    N_BASE_PAGES = 600
+    N_PAGES = 600
     N_ENTITIES = 3000
-    N_SLICE_PAGES = 100
     N_PARTS = 1
     CYCLE = 6
 
-    def make_inputs(self) -> None:
-        from char_ner_spark.fixtures import make_alias_table, make_pages
-
-        self.alias = make_alias_table(self.N_ENTITIES, seed=self.seed)
-        pages = make_pages(self.N_BASE_PAGES + self.CYCLE * self.N_SLICE_PAGES,
-                           seed=self.seed, alias_df=self.alias)
-        # slice -1 is the base corpus, 0..CYCLE-1 the rounds' new pages
-        pages["slice"] = np.maximum(
-            -1, (np.arange(len(pages)) - self.N_BASE_PAGES)
-            // self.N_SLICE_PAGES)
-        self.pages = pages
-
     def set_up(self) -> None:
-        from char_ner_spark import lineage
-        from char_ner_spark.pipeline import build_dictionary_state
-
-        ph = Phases(self.name)
-        self.pages_path = self._write_pages(self.pages, "pages")
-        ph.done("input table")
-        self.base_dir = os.path.join(self.work, "base")
-        lineage.run_partitioned(self.spark, self._slice(-1), self.alias,
-                                self.base_dir, n_parts=self.N_PARTS,
-                                sinks=ALL_SINKS)
-        ph.done("base KG")
-        before = self._stored_triples(self.base_dir)
-        self.schema = before.schema
-        self.deltas = self._bridging_deltas(before.toPandas())
-        self.unions = [pd.concat([self.alias, d], ignore_index=True)
-                       for d in self.deltas]
-        slices = [self.pages[self.pages.slice == k].drop(columns="slice")
-                  for k in range(self.CYCLE)]
-        oracle = gold.OraclePool(list(zip(slices, self.unions)), self.procs,
-                                 os.path.join(self.work, "tmp"))
-        try:
-            self.base_state = build_dictionary_state(self.spark, self.alias)
-            ph.done("deltas and dictionary state")
-            # warm-up: the update plans (the base KG build already ran
-            # every ingest plan)
-            self._update(self._restore(), self.CYCLE - 1)
-            ph.done("warm-up update")
-        except BaseException:
-            oracle.close()
-            raise
-        self.slice_gold = [self._gold_checksum(g, self.schema)
-                           for g in oracle.result()]
-        ph.done("oracle wait and gold checksums")
-
-    def _slice(self, k: int):
         from pyspark.sql import functions as F
 
-        return (self.spark.read.parquet(self.pages_path)
-                .filter(F.col("slice") == k).drop("slice"))
+        from char_ner_spark.pipeline import (build_dictionary_state,
+                                             edges_from_triples)
+
+        ph = Phases(self.name)
+        base = self._gold_triples()
+        ph.done("oracle wait")
+        self.base_dir = os.path.join(self.work, "base")
+        stored = [c.split() for c in TRIPLES_DDL.split(", ")]
+        triples = self.spark.createDataFrame(base[gold.TRIPLE_COLS]).select(
+            *[F.col(c).cast(t) for c, t in stored])
+        for table, df in (("triples", triples),
+                          ("edges", edges_from_triples(triples))):
+            _commit_part(self.spark, self.base_dir, table, 0, df,
+                         self.N_PARTS, len(self.pages))
+        ph.done(f"base KG commit ({len(base)} triples)")
+        self.deltas = self._bridging_deltas(base)
+        self.unions = [pd.concat([self.alias, d], ignore_index=True)
+                       for d in self.deltas]
+        self.base_state = build_dictionary_state(self.spark, self.alias)
+        ph.done("deltas and dictionary state")
+        self.op(self.CYCLE - 1)
+        ph.done("warm-up round")
 
     def _bridging_deltas(self, triples: pd.DataFrame) -> list[pd.DataFrame]:
         """Seeded one-alias deltas: entity ``b`` gains an alias of entity
@@ -418,7 +426,7 @@ class KgRefresh(Workload):
         shutil.copytree(self.base_dir, kg)
         return kg
 
-    # --- the three timed steps ---------------------------------------------
+    # --- the two timed steps -----------------------------------------------
 
     def _update(self, kg: str, k: int):
         from char_ner_spark.incremental import (apply_dictionary_update,
@@ -431,17 +439,10 @@ class KgRefresh(Workload):
                                         canon=state["canon"])
         return remap, stats
 
-    def _ingest(self, kg: str, k: int) -> None:
-        from char_ner_spark import lineage
-
-        lineage.ingest_pages(self.spark, self._slice(k), self.unions[k], kg,
-                             ingest_id=0)
-
-    def _read_back(self, kg: str, read=None, span=None) -> dict:
+    def _read_back(self, kg: str, read=None, span=_no_span) -> dict:
         """The read-back queries' answers, collected to the client."""
         from char_ner_spark import graph, lineage, sparql
 
-        span = span or (lambda stem: contextlib.nullcontext())
         read = read or {
             "triples": lambda: self._stored_triples(kg),
             "edges": lambda: lineage.read_edges(self.spark, kg)}
@@ -458,7 +459,7 @@ class KgRefresh(Workload):
 
     # --- checks (untimed) --------------------------------------------------
 
-    def _check_update(self, kg: str, remap) -> tuple[int, str]:
+    def _check_update(self, kg: str, remap) -> None:
         from char_ner_spark.incremental import recanonicalize_triples
         from char_ner_spark.lineage import table_checksum
 
@@ -466,16 +467,6 @@ class KgRefresh(Workload):
         want = table_checksum(recanonicalize_triples(
             self._stored_triples(self.base_dir), remap))
         _expect(got == want, f"updated triples {got} != remapped {want}")
-        return got
-
-    def _check_ingest(self, kg: str, k: int, updated: tuple[int, str]) -> int:
-        from char_ner_spark.lineage import table_checksum
-
-        n_new, c_new = self.slice_gold[k]
-        want = (updated[0] + n_new, _xor_checksum(updated[1], c_new))
-        got = table_checksum(self._stored_triples(kg))
-        _expect(got == want, f"ingested triples {got} != {want}")
-        return n_new
 
     def _check_read_back(self, kg: str, answers: dict) -> None:
         """Query answers against pandas/NumPy over the stored snapshot."""
@@ -497,21 +488,14 @@ class KgRefresh(Workload):
     def op(self, i: int) -> dict[str, float]:
         k = i % self.CYCLE
         kg = self._restore()
-        t0 = time.perf_counter()
-        remap, _ = self._update(kg, k)
-        update_s = time.perf_counter() - t0
-        updated = self._check_update(kg, remap)
-        t1 = time.perf_counter()
-        self._ingest(kg, k)
-        ingest_s = time.perf_counter() - t1
-        n_new = self._check_ingest(kg, k, updated)
-        t2 = time.perf_counter()
-        answers = self._read_back(kg)
-        read_s = time.perf_counter() - t2
+        sw = Stopwatch()
+        with sw.step("dict_update"):
+            remap, _ = self._update(kg, k)
+        self._check_update(kg, remap)
+        with sw.step("read_back"):
+            answers = self._read_back(kg)
         self._check_read_back(kg, answers)
-        return {"op_s": update_s + ingest_s + read_s,
-                "dict_update_s": update_s, "ingest_s": ingest_s,
-                "read_back_s": read_s, "triples_per_s": n_new / ingest_s}
+        return sw.result()
 
     def traced_op(self, i: int, tr: Tracer) -> dict[str, float]:
         from pyspark import StorageLevel
@@ -522,8 +506,8 @@ class KgRefresh(Workload):
 
         k = i % self.CYCLE
         kg = self._restore()
-        t0 = time.perf_counter()
-        with tr.span("trace.op_"):
+        sw = Stopwatch()
+        with sw.step("dict_update"), tr.span("trace.op_"):
             with tr.span("incremental.canon_"):
                 state, remap = update_dictionary_state(
                     self.spark, self.base_state, self.alias, self.deltas[k])
@@ -532,25 +516,12 @@ class KgRefresh(Workload):
                 stats = apply_dictionary_update(
                     self.spark, kg, remap, alias_pdf=self.unions[k],
                     canon=state["canon"])
-        update_s = time.perf_counter() - t0
         tr.count("incremental.parts_rewritten",
                  sum(len(s["rewritten"]) for s in stats.values()))
         tr.count("incremental.triples_parts_rewritten",
                  len(stats.get("triples", {}).get("rewritten", [])))
         tr.count("incremental.triples_parts", self.N_PARTS)
-        updated = self._check_update(kg, remap)
-
-        t1 = time.perf_counter()
-        with tr.span("trace.op_"):
-            dict_state = _traced_dict_state(tr, self.spark, self.unions[k])
-            outs = _traced_pipeline(tr, self.spark, self._slice(k),
-                                    self.unions[k], dict_state)
-            # ingest_id 0, unit 0: the part id ingest_pages allocates
-            _finish_traced_pass(tr, self.spark, kg, lineage.INGEST_PID_BASE,
-                                outs, ("triples", "edges", "mentions"),
-                                self.N_PARTS, outs["n_pages"])
-        ingest_s = time.perf_counter() - t1
-        self._check_ingest(kg, k, updated)
+        self._check_update(kg, remap)
 
         cached = []
 
@@ -565,18 +536,16 @@ class KgRefresh(Workload):
                 return df
             return read
 
-        t2 = time.perf_counter()
-        with tr.span("trace.op_"):
+        with sw.step("read_back"), tr.span("trace.op_"):
             answers = self._read_back(
                 kg, read={t: reader(t) for t in ("triples", "edges")},
                 span=tr.span)
-        read_s = time.perf_counter() - t2
         for df in cached:
             df.unpersist()
         tr.count("graph.bgp.rows", len(answers["bgp"]))
         tr.count("graph.pagerank.rows", len(answers["pagerank"]))
         self._check_read_back(kg, answers)
-        return {"op_s": update_s + ingest_s + read_s}
+        return sw.result()
 
 
 WORKLOADS = {w.name: w for w in (KgBuild, KgRefresh)}
