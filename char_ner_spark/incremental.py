@@ -29,7 +29,6 @@ delta:
 
 from __future__ import annotations
 
-import datetime as dt
 import os
 
 import pandas as pd
@@ -407,31 +406,22 @@ def _prune_parts_by_stats(base: str, prefix: str, pids: list[int],
 
 
 def _cow_commit(spark: SparkSession, out_dir: str, table: str, new_pid: int,
-                df: DataFrame, superseded: list[int]) -> None:
-    """One copy-on-write part commit: write the new part directory, record
-    it in the lineage manifest, tombstone the superseded parts (the latest
-    manifest row per part wins in the heal path, and zero-row parts never
-    reach the reader)."""
-    base, prefix = lineage._table_base(out_dir, table)
-    part_path = f"{base}/{prefix}={new_pid}"
-    if prefix == "part_id":
-        # batch sinks embed part_id as a data column (commit_sink does);
-        # the streaming layout carries batch_id only in the dir name
-        df = df.withColumn("part_id", F.lit(new_pid))
-    df.write.mode("overwrite").parquet(part_path)
-    back = spark.read.parquet(part_path)
-    n, checksum = lineage.table_checksum(back)
-    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-    lineage.append_manifest(spark, out_dir, {
-        "stage": table, "part_id": new_pid, "rows_in": n, "rows_out": n,
-        "checksum": checksum, "completed_at": now,
-    })
-    for old_pid in superseded:
-        lineage.append_manifest(spark, out_dir, {
-            "stage": table, "part_id": old_pid, "rows_in": 0,
-            "rows_out": 0, "checksum": f"superseded-by:{new_pid}",
-            "completed_at": now + dt.timedelta(microseconds=1),
-        })
+                df: DataFrame, superseded: list[int]) -> list[dict]:
+    """One copy-on-write part commit (lineage.commit_part without its
+    snapshot): the new part plus a tombstone per superseded part. Returns
+    the snapshot entries the caller's one-per-table snapshot adds — the
+    same list the heal path rebuilds from these manifest rows."""
+    rows = lineage.commit_part(spark, out_dir, table, new_pid, df,
+                               supersedes=superseded, snapshot=False)
+    return [lineage._snapshot_entry(r) for r in rows]
+
+
+def _committed_triples(spark: SparkSession, out_dir: str,
+                       pid: int) -> DataFrame:
+    """A triples part as committed to disk — edges re-derive from these
+    bytes, so the rewrite is not computed a second time."""
+    base, prefix = lineage._table_base(out_dir, "triples")
+    return lineage.read_parts(spark, f"{base}/{prefix}={pid}").drop("part_id")
 
 
 def relink_parts(
@@ -486,8 +476,8 @@ def relink_parts(
                                        set(canon_ids))
     affected: list[int] = []
     if candidates:
-        live = spark.read.option("basePath", base).parquet(
-            *[f"{base}/{prefix}={p}" for p in candidates])
+        live = lineage.read_parts(
+            spark, *[f"{base}/{prefix}={p}" for p in candidates], base=base)
         ids_df = F.broadcast(spark.createDataFrame(
             pd.DataFrame({"cid": sorted(canon_ids)}), schema="cid long"))
         affected = sorted(
@@ -503,6 +493,7 @@ def relink_parts(
         middles = middles_table(spark)
         mbase, _ = lineage._table_base(out_dir, "mentions")
         written = {"triples": [], "edges": []}
+        entries = {"triples": [], "edges": []}
         for old_pid in affected:
             mdir = f"{mbase}/{prefix}={old_pid}"
             if not os.path.isdir(mdir):
@@ -510,24 +501,29 @@ def relink_parts(
                     f"mentions part {old_pid} missing at {mdir}; cannot "
                     "re-link its triples"
                 )
-            mentions = spark.read.parquet(mdir).drop("part_id")
+            mentions = lineage.read_parts(spark, mdir).drop("part_id")
             linked = link_pairs(mentions,
                                 {"bands": dict_state["bands"]},
                                 alias_pdf=alias_pdf)
-            new_triples = extract_triples(
-                linked, dict_state["canon"], middles).localCheckpoint()
-            _cow_commit(spark, out_dir, "triples", next_pid, new_triples,
-                        [old_pid])
+            new_triples = extract_triples(linked, dict_state["canon"],
+                                          middles)
+            entries["triples"] += _cow_commit(spark, out_dir, "triples",
+                                              next_pid, new_triples,
+                                              [old_pid])
             written["triples"].append((old_pid, next_pid))
             if "edges" in tables:
-                _cow_commit(spark, out_dir, "edges", next_pid,
-                            edges_from_triples(new_triples), [old_pid])
+                entries["edges"] += _cow_commit(
+                    spark, out_dir, "edges", next_pid,
+                    edges_from_triples(_committed_triples(spark, out_dir,
+                                                          next_pid)),
+                    [old_pid])
                 written["edges"].append((old_pid, next_pid))
             next_pid += 1
         for t, w in written.items():
             if w:
                 n = lineage.write_snapshot(spark, out_dir,
                                            snap.get("n_parts"), table=t,
+                                           add_parts=entries[t],
                                            retain=retain)
                 stats[t] = {"rewritten": w, "snapshot_id": n}
     if "entities" in tables:
@@ -537,11 +533,12 @@ def relink_parts(
         if old_pids:
             epid = max(max(p["part_id"] for p in esnap["manifest"]) + 1,
                        _BATCH_REWRITE_PID_BASE)
-            _cow_commit(spark, out_dir, "entities", epid,
-                        entities_table(spark, alias_pdf,
-                                       dict_state["canon"]), old_pids)
+            ents = _cow_commit(spark, out_dir, "entities", epid,
+                               entities_table(spark, alias_pdf,
+                                              dict_state["canon"]), old_pids)
             n = lineage.write_snapshot(spark, out_dir, esnap.get("n_parts"),
-                                       table="entities", retain=retain)
+                                       table="entities", add_parts=ents,
+                                       retain=retain)
             stats["entities"] = {"rewritten": [(p, epid) for p in old_pids],
                                  "snapshot_id": n}
     return stats
@@ -596,19 +593,19 @@ def apply_dictionary_update(
             "merged edge weights need per-triple dedup, which partial edge "
             "weights do not carry"
         )
-    remap = remap.localCheckpoint()  # consumed per part — compute CC once
-    if remap.limit(1).count() == 0 and alias_pdf is None:
+    # the remap to the driver in ONE action: bounded by touched components
+    # (the same broadcast-sized contract the per-part joins rely on). Its
+    # keys drive the footer-stats pruning below, and the per-part joins
+    # read it back as a local relation instead of recomputing the CC
+    remap_pdf = remap.toPandas()
+    if len(remap_pdf) == 0 and alias_pdf is None:
         return {}
-    # remapped ids to the driver once: bounded by touched components (the
-    # same broadcast-sized contract the per-part join relies on) — these
-    # drive the footer-stats pruning below
-    remap_keys = {int(r.old_canonical_id) for r in remap.collect()}
+    # from pandas, never a list of Rows: Row lists are pickled (+19% peak RSS)
+    remap = spark.createDataFrame(
+        remap_pdf, schema="old_canonical_id long, new_canonical_id long")
+    remap_keys = {int(k) for k in remap_pdf["old_canonical_id"]}
     stats: dict[str, dict] = {}
-    rewritten_triples: dict[int, DataFrame] = {}
-
-    def commit_part(table: str, new_pid: int, df: DataFrame,
-                    superseded: list[int]) -> None:
-        _cow_commit(spark, out_dir, table, new_pid, df, superseded)
+    rewritten_triples: dict[int, int] = {}  # old part → its rewrite
 
     for table in tables:
         if table not in ("triples", "stream_triples", "edges", "entities"):
@@ -630,13 +627,15 @@ def apply_dictionary_update(
             next_pid = max(next_pid, _BATCH_REWRITE_PID_BASE)
         base, prefix = lineage._table_base(out_dir, table)
         written: list[tuple[int, int]] = []
+        entries: list[dict] = []
         if table == "entities" and alias_pdf is not None and canon is not None:
             # full dimension refresh (new entities entered the dictionary):
             # ONE new part supersedes every old one — the dimension is
             # unit-invariant, run_partitioned writes it as a single part
             old_pids = sorted(p["part_id"] for p in manifest)
-            commit_part("entities", next_pid,
-                        entities_table(spark, alias_pdf, canon), old_pids)
+            entries = _cow_commit(spark, out_dir, "entities", next_pid,
+                                  entities_table(spark, alias_pdf, canon),
+                                  old_pids)
             written = [(p, next_pid) for p in old_pids]
         else:
             key_cols = {"triples": ("subj", "obj"),
@@ -653,8 +652,9 @@ def apply_dictionary_update(
                                                remap_keys)
             if not candidates:
                 continue
-            live = spark.read.option("basePath", base).parquet(
-                *[f"{base}/{prefix}={p}" for p in candidates])
+            live = lineage.read_parts(
+                spark, *[f"{base}/{prefix}={p}" for p in candidates],
+                base=base)
             if table == "edges":
                 cond = ((live.src == remap.old_canonical_id)
                         | (live.dst == remap.old_canonical_id))
@@ -669,17 +669,16 @@ def apply_dictionary_update(
                 .select(prefix).distinct().collect()
             )
             for old_pid in affected:
-                part_df = spark.read.parquet(
-                    f"{base}/{prefix}={old_pid}").drop("part_id")
+                part_df = lineage.read_parts(
+                    spark, f"{base}/{prefix}={old_pid}").drop("part_id")
                 if table == "stream_triples":
                     # per-part distinct is globally safe for the stream too:
                     # the file source delivers each pages file to exactly one
                     # micro-batch, so a url never spans batch partitions
                     new_df = recanonicalize_triples(part_df, remap)
                 elif table == "triples":
-                    rewritten_triples[old_pid] = recanonicalize_triples(
-                        part_df, remap).localCheckpoint()
-                    new_df = rewritten_triples[old_pid]
+                    new_df = recanonicalize_triples(part_df, remap)
+                    rewritten_triples[old_pid] = next_pid
                 elif table == "edges":
                     if old_pid not in rewritten_triples:
                         # edges derive from triples, so a remap that hits an
@@ -689,7 +688,8 @@ def apply_dictionary_update(
                             f"edges part {old_pid} affected but the triples "
                             "part was not rewritten; sinks are out of sync"
                         )
-                    new_df = edges_from_triples(rewritten_triples[old_pid])
+                    new_df = edges_from_triples(_committed_triples(
+                        spark, out_dir, rewritten_triples[old_pid]))
                 else:
                     new_df = (
                         part_df.join(
@@ -701,11 +701,13 @@ def apply_dictionary_update(
                                                "canonical_id"))
                         .select(*part_df.columns)
                     )
-                commit_part(table, next_pid, new_df, [old_pid])
+                entries += _cow_commit(spark, out_dir, table, next_pid,
+                                       new_df, [old_pid])
                 written.append((old_pid, next_pid))
                 next_pid += 1
         if written:
             n = lineage.write_snapshot(spark, out_dir, snap.get("n_parts"),
-                                       table=table, retain=retain)
+                                       table=table, add_parts=entries,
+                                       retain=retain)
             stats[table] = {"rewritten": written, "snapshot_id": n}
     return stats

@@ -11,22 +11,47 @@ where it stopped, and re-running a completed unit rewrites identical bytes.
 At 100 TB scale K is sized so one unit ≈ a few hundred GB (K ~ 10k); units
 are embarrassingly parallel across job submissions too.
 
-The counters use ``df.observe`` (SURVEY §2.1 S4) so they ride the action
-instead of re-scanning.
+Every writer commits a part through :func:`commit_part`. Only two of its
+steps are Spark jobs: the data write, and the checksum of the part as read
+back from disk (the read takes its schema from the parquet footer, so it
+launches no schema-inference job). The rest is driver-only file IO: the
+``_lineage`` manifest rows (pyarrow), the ``snapshot-N.json`` list and the
+``current`` pointer flip. Work-unit input counters use ``df.observe`` (SURVEY
+§2.1 S4) so they ride the pipeline's own action instead of re-scanning.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import json
 import os
+import shutil
+import threading
+import uuid
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 LINEAGE_COLS = ["stage", "part_id", "rows_in", "rows_out", "checksum", "completed_at"]
+
+#: manifest column types — the ones Spark's writer used (long counters, a
+#: UTC timestamp), so rows from either writer read back as one table
+_MANIFEST_SCHEMA = pa.schema([
+    ("stage", pa.string()), ("part_id", pa.int64()), ("rows_in", pa.int64()),
+    ("rows_out", pa.int64()), ("checksum", pa.string()),
+    ("completed_at", pa.timestamp("us", tz="UTC")),
+])
+_MANIFEST_DDL = ("stage string, part_id long, rows_in long, rows_out long, "
+                 "checksum string, completed_at timestamp")
+
+#: footer key under which Spark's parquet writer records the row schema
+_SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 
 #: current table_checksum recipe epoch (see write_snapshot); bump whenever
 #: the checksum recipe changes incompatibly
@@ -37,28 +62,107 @@ def _manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_lineage")
 
 
+def _data_files(path: str) -> list[str]:
+    """Parquet data files directly under ``path`` — Spark's reader skips
+    ``_``/``.``-prefixed names (markers, checksums, in-flight temp files),
+    and so does every driver-side reader here."""
+    if not os.path.isdir(path):
+        return []
+    return sorted(
+        os.path.join(path, f) for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = _manifest_path(out_dir)
-    if not os.path.exists(path) or not any(
-        f.endswith(".parquet") for f in os.listdir(path)
-    ):
+    if not _data_files(_manifest_path(out_dir)):
         return None
-    return spark.read.parquet(path)
+    # explicit schema: no inference job, and rows written by the old Spark
+    # writer (INT96 timestamps) and by append_manifest (UTC micros) read as
+    # one timestamp column
+    return spark.read.schema(_MANIFEST_DDL).parquet(_manifest_path(out_dir))
+
+
+def _manifest_rows(out_dir: str, stage: str) -> pd.DataFrame:
+    """Every manifest row of ``stage``, read on the driver with pyarrow.
+    ``completed_at`` comes back as a UTC timestamp whichever writer stored
+    it (Spark's INT96 holds naive UTC instants)."""
+    frames = []
+    for f in _data_files(_manifest_path(out_dir)):
+        pdf = pq.read_table(f, columns=LINEAGE_COLS).to_pandas()
+        pdf = pdf[pdf["stage"] == stage]
+        if len(pdf):
+            pdf["completed_at"] = pd.to_datetime(pdf["completed_at"], utc=True)
+            frames.append(pdf)
+    if not frames:
+        return pd.DataFrame(columns=LINEAGE_COLS)
+    return pd.concat(frames, ignore_index=True)
+
+
+def _snapshot_entry(row) -> dict:
+    """Manifest row → snapshot manifest entry."""
+    return {"part_id": int(row["part_id"]), "rows": int(row["rows_out"]),
+            "checksum": row["checksum"]}
+
+
+def _latest_entries(out_dir: str, stage: str) -> list[dict]:
+    """The latest manifest row per part of ``stage`` as snapshot entries,
+    sorted by part_id: the heal path's source of truth. Ties on
+    ``completed_at`` break by (rows_out, checksum), like Spark's
+    ``max(struct(completed_at, rows_out, checksum))`` did."""
+    m = _manifest_rows(out_dir, stage)
+    if not len(m):
+        return []
+    last = m.sort_values(["completed_at", "rows_out", "checksum"]) \
+        .groupby("part_id").tail(1).sort_values("part_id")
+    return [_snapshot_entry(r) for _, r in last.iterrows()]
 
 
 def completed_parts(spark: SparkSession, out_dir: str, stage: str) -> set[int]:
-    m = read_manifest(spark, out_dir)
-    if m is None:
-        return set()
-    return {
-        r.part_id
-        for r in m.filter(F.col("stage") == stage).select("part_id").distinct().collect()
-    }
+    return {int(p) for p in _manifest_rows(out_dir, stage)["part_id"]}
 
 
 def append_manifest(spark: SparkSession, out_dir: str, row: dict) -> None:
-    pdf = pd.DataFrame([row], columns=LINEAGE_COLS)
-    spark.createDataFrame(pdf).write.mode("append").parquet(_manifest_path(out_dir))
+    _append_manifest_rows(out_dir, [row])
+
+
+def _append_manifest_rows(out_dir: str, rows: list[dict]) -> None:
+    """Append manifest rows as one parquet file, written on the driver: a
+    dot-prefixed temp file (invisible to every reader) renamed into place,
+    so a crash never leaves a torn file and the rows land together. A
+    naive ``completed_at`` is taken as UTC."""
+    path = _manifest_path(out_dir)
+    os.makedirs(path, exist_ok=True)
+
+    def utc(t) -> pd.Timestamp:
+        t = pd.Timestamp(t)
+        return t.tz_localize("UTC") if t.tzinfo is None else t.tz_convert("UTC")
+
+    table = pa.table({c: [utc(r[c]) if c == "completed_at" else r[c]
+                          for r in rows] for c in LINEAGE_COLS},
+                     schema=_MANIFEST_SCHEMA)
+    name = f"part-{uuid.uuid4()}.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, name))
+
+
+def read_parts(spark: SparkSession, *paths: str,
+               base: str | None = None) -> DataFrame:
+    """Read part directories with the schema Spark recorded in the first
+    one's parquet footer, so the read launches no schema-inference job
+    (the partition column of a ``base``-relative read is still discovered
+    from the paths). Without such a footer the read falls back to
+    inference."""
+    reader = spark.read
+    files = _data_files(paths[0])
+    js = (pq.read_schema(files[0]).metadata or {}).get(_SPARK_ROW_SCHEMA) \
+        if files else None
+    if js:
+        reader = reader.schema(StructType.fromJson(json.loads(js)))
+    if base is not None:
+        reader = reader.option("basePath", base)
+    return reader.parquet(*paths)
 
 
 def table_checksum(df: DataFrame) -> tuple[int, str]:
@@ -68,7 +172,7 @@ def table_checksum(df: DataFrame) -> tuple[int, str]:
     units cannot silently drift in confidence/weight/score (ADVICE r1).
     Same recipe as the historical triples checksum (schema column order,
     e6 conf stabilization) — but note it hashes EVERY column of the frame
-    it is given: commit_sink feeds it the written part read back, which
+    it is given: commit_part feeds it the written part read back, which
     carries the part_id column, so checksums recorded by round-3 code are
     not comparable to manifests written before the multi-sink change."""
     from pyspark.sql.types import DoubleType, FloatType
@@ -88,6 +192,78 @@ def table_checksum(df: DataFrame) -> tuple[int, str]:
 
 # historical name (round-1/2 surface); triples was the only sink then
 triples_checksum = table_checksum
+
+#: parts up to this size are checksummed in one task: the aggregate then
+#: needs no shuffle, so the checksum is one Spark job instead of a map
+#: stage plus a result stage. Spark's default per-file open cost — below
+#: it, splitting a part's scan across cores saves nothing
+ONE_TASK_CHECKSUM_BYTES = 4 << 20
+
+
+def commit_part(spark: SparkSession, out_dir: str, table: str, pid: int,
+                df: DataFrame, rows_in: int | None = None,
+                n_parts: int | None = None, schema_json: str | None = None,
+                supersedes: tuple[int, ...] | list[int] = (),
+                snapshot: bool = True, retain: int | None = None,
+                lock: threading.Lock | None = None) -> list[dict]:
+    """Commit ``df`` as part ``pid`` of ``table`` — the one commit sequence
+    behind work units, ingests, copy-on-write rewrites and the streaming
+    sink:
+
+    1. write the part directory (overwrite, so a retry is idempotent) —
+       a Spark job;
+    2. read the part back from disk and checksum it — a Spark job;
+    3. append its manifest row, plus a ``rows_out=0``,
+       ``checksum="superseded-by:<pid>"`` tombstone 1 µs later for each
+       part in ``supersedes`` (the latest row per part wins in the heal
+       path) — driver only;
+    4. with ``snapshot``, write the next snapshot (previous list + these
+       entries) and flip the ``current`` pointer — driver only.
+       Copy-on-write callers pass ``snapshot=False`` and commit one
+       snapshot per table for all their parts (``write_snapshot``'s
+       ``add_parts``), so no reader sees a half-applied rewrite.
+
+    Steps 3–4 run under ``lock`` when given (overlapped work units keep one
+    linear commit history). ``rows_in`` defaults to the rows written and
+    ``schema_json`` (recorded in the snapshot) to the read-back schema.
+    Returns the manifest rows appended, the part's own row first."""
+    base, prefix = _table_base(out_dir, table)
+    part_path = os.path.join(base, f"{prefix}={pid}")
+    keyed = df.withColumn(prefix, F.lit(pid))
+    if _TABLE_LAYOUT.get(table, (table,))[0] == "":
+        # root layout (the streaming sink): the part key lives only in the
+        # directory name. Dynamic overwrite replaces a partition only if it
+        # RECEIVES rows, so drop this one first: a replay that now yields
+        # nothing must converge to no directory, not to the stale one
+        shutil.rmtree(part_path, ignore_errors=True)
+        keyed.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic").partitionBy(prefix).parquet(base)
+    else:
+        keyed.write.mode("overwrite").parquet(part_path)
+    if os.path.isdir(part_path):
+        back = read_parts(spark, part_path)
+        size = sum(os.path.getsize(f) for f in _data_files(part_path))
+        n, checksum = table_checksum(
+            back.coalesce(1) if size <= ONE_TASK_CHECKSUM_BYTES else back)
+        schema_json = schema_json or back.schema.json()
+    else:
+        n, checksum = 0, "0" * 16  # a root-layout part that received no rows
+    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    rows = [{"stage": table, "part_id": pid,
+             "rows_in": n if rows_in is None else rows_in, "rows_out": n,
+             "checksum": checksum, "completed_at": now}]
+    rows += [{"stage": table, "part_id": old, "rows_in": 0, "rows_out": 0,
+              "checksum": f"superseded-by:{pid}",
+              "completed_at": now + dt.timedelta(microseconds=1)}
+             for old in supersedes]
+    with lock or contextlib.nullcontext():
+        _append_manifest_rows(out_dir, rows)
+        if snapshot:
+            write_snapshot(spark, out_dir, n_parts, table=table,
+                           schema_json=schema_json,
+                           add_parts=[_snapshot_entry(r) for r in rows],
+                           retain=retain)
+    return rows
 
 
 def run_partitioned(
@@ -125,7 +301,6 @@ def run_partitioned(
     "entities" sink (dictionary ⋈ canonical map — identical whatever unit
     computes it) writes once as part_id=0 after the units. ``retain``
     bounds snapshot history per table (see expire_snapshots)."""
-    import threading
     from concurrent.futures import ThreadPoolExecutor
 
     from .pipeline import build_dictionary_state, run_pipeline
@@ -172,28 +347,10 @@ def run_partitioned(
     commit_lock = threading.Lock()
     written: list[dict] = []
 
-    def commit_sink(table: str, pid: int, df: DataFrame, rows_in: int) -> dict:
-        part_path = os.path.join(out_dir, table, f"part_id={pid}")
-        df.withColumn("part_id", F.lit(pid)).write.mode("overwrite").parquet(part_path)
-        written_df = spark.read.parquet(part_path)
-        n, checksum = table_checksum(written_df)
-        row = {
-            "stage": table,
-            "part_id": pid,
-            "rows_in": rows_in,
-            "rows_out": n,
-            "checksum": checksum,
-            "completed_at": dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
-        }
-        with commit_lock:
-            append_manifest(spark, out_dir, row)
-            write_snapshot(spark, out_dir, n_parts, table=table,
-                           schema_json=written_df.schema.json(),
-                           add_part={"part_id": pid, "rows": n,
-                                     "checksum": checksum},
-                           retain=retain)
-            written.append(row)
-        return row
+    def commit_sink(table: str, pid: int, df: DataFrame, rows_in: int) -> None:
+        written.extend(commit_part(spark, out_dir, table, pid, df, rows_in,
+                                   n_parts=n_parts, retain=retain,
+                                   lock=commit_lock))
 
     def run_unit(pid: int) -> None:
         slice_df = staged.filter(F.col("part_id") == pid).drop("part_id")
@@ -316,14 +473,17 @@ def write_snapshot(spark: SparkSession, out_dir: str, n_parts: int | None,
                    schema_json: str | None = None,
                    add_part: dict | None = None,
                    table: str = "triples",
-                   retain: int | None = None) -> int:
+                   retain: int | None = None,
+                   add_parts: list[dict] | None = None) -> int:
     """Append snapshot-N.json + point `current` at it; returns N.
 
-    With ``add_part`` the new snapshot is the previous manifest list plus
-    that one entry — O(1) per commit, no Spark job under the commit lock
-    (at K ~ 10k units, re-aggregating the whole manifest per commit is
-    O(K²) total and serializes the overlapped units). Without it, the list
-    is rebuilt from the ``_lineage`` manifest — the heal/bootstrap path.
+    With ``add_part`` (or several, ``add_parts``) the new snapshot is the
+    previous manifest list with those entries added or replaced by
+    part_id — O(1) per commit, no manifest read under the commit lock (at
+    K ~ 10k units, re-aggregating the whole manifest per commit is O(K²)
+    total and serializes the overlapped units). Without them, the list is
+    rebuilt from the latest ``_lineage`` row per part — the heal/bootstrap
+    path. Both are driver-only: no Spark job.
 
     ``retain``: after committing, expire all but the newest ``retain``
     snapshot files (the new current is always kept) — without expiry, K
@@ -345,27 +505,13 @@ def write_snapshot(spark: SparkSession, out_dir: str, n_parts: int | None,
     ]
     n = (max(existing) + 1) if existing else 0
     if add_part is not None:
-        base = prev["manifest"] if prev else []
-        parts = sorted(
-            [p for p in base if p["part_id"] != add_part["part_id"]] + [add_part],
-            key=lambda p: p["part_id"],
-        )
+        add_parts = [add_part, *(add_parts or [])]
+    if add_parts is not None:
+        parts = {p["part_id"]: p for p in (prev["manifest"] if prev else [])}
+        parts.update((p["part_id"], p) for p in add_parts)
+        parts = [parts[k] for k in sorted(parts)]
     else:
-        m = read_manifest(spark, out_dir)
-        parts = []
-        if m is not None:
-            rows = (
-                m.filter(F.col("stage") == table)
-                .groupBy("part_id")
-                .agg(F.max(F.struct("completed_at", "rows_out", "checksum")).alias("last"))
-                .select("part_id", "last.rows_out", "last.checksum")
-                .collect()
-            )
-            parts = sorted(
-                ({"part_id": int(r.part_id), "rows": int(r.rows_out), "checksum": r.checksum}
-                 for r in rows),
-                key=lambda p: p["part_id"],
-            )
+        parts = _latest_entries(out_dir, table)
     if schema_json is None and prev is not None:
         schema_json = prev.get("schema_json")
     snap = {
@@ -451,8 +597,6 @@ def compact_table(spark: SparkSession, out_dir: str, table: str = "triples",
     rewritten. A part the snapshot records as NON-empty but whose
     directory is missing raises — silently skipping it would report a
     healthy compaction over lost data."""
-    import shutil
-
     snap = current_snapshot(out_dir, table=table)
     parts = snap["completed"] if snap else []
     rows_by_part = {
@@ -603,8 +747,6 @@ def gc_orphan_parts(spark: SparkSession, out_dir: str,
     it has rows_out > 0 — the manifest is the heal-path source of truth,
     so a part whose snapshot commit crashed mid-window must survive GC for
     the heal to resurrect it. Returns the part ids removed."""
-    import shutil
-
     meta = _snapshot_dir(out_dir, table)
     if not os.path.isdir(meta):
         return []
@@ -619,16 +761,8 @@ def gc_orphan_parts(spark: SparkSession, out_dir: str,
                      if p.get("rows", 1) > 0}
         else:
             live |= set(snap.get("completed", []))
-    m = read_manifest(spark, out_dir)
-    if m is not None:
-        rows = (
-            m.filter(F.col("stage") == table)
-            .groupBy("part_id")
-            .agg(F.max(F.struct("completed_at", "rows_out")).alias("last"))
-            .select("part_id", "last.rows_out")
-            .collect()
-        )
-        live |= {int(r.part_id) for r in rows if int(r.rows_out) > 0}
+    live |= {p["part_id"] for p in _latest_entries(out_dir, table)
+             if p["rows"] > 0}
     base, prefix = _table_base(out_dir, table)
     if not os.path.isdir(base):
         return []
@@ -693,8 +827,6 @@ def ingest_pages(
     present, edges/mentions); the unit-invariant entities dimension is
     dictionary-side and unchanged by a corpus delta. Returns the manifest
     rows written."""
-    import threading
-
     from .pipeline import build_dictionary_state, run_pipeline
 
     if not (0 <= ingest_id <= INGEST_MAX_ID) or not (
@@ -722,30 +854,7 @@ def ingest_pages(
     staged = pages.withColumn(
         "unit", F.pmod(F.xxhash64("url"), F.lit(n_units)).cast("int"))
     dict_state = build_dictionary_state(spark, alias_pdf)
-    lock = threading.Lock()
     written: list[dict] = []
-
-    def commit(table: str, pid: int, df: DataFrame, rows_in: int) -> None:
-        part_path = os.path.join(out_dir, table, f"part_id={pid}")
-        df.withColumn("part_id", F.lit(pid)).write.mode(
-            "overwrite").parquet(part_path)
-        back = spark.read.parquet(part_path)
-        n, checksum = table_checksum(back)
-        row = {
-            "stage": table, "part_id": pid, "rows_in": rows_in,
-            "rows_out": n, "checksum": checksum,
-            "completed_at": dt.datetime.now(dt.timezone.utc).replace(
-                tzinfo=None),
-        }
-        with lock:
-            append_manifest(spark, out_dir, row)
-            write_snapshot(spark, out_dir, n_parts_orig, table=table,
-                           schema_json=back.schema.json(),
-                           add_part={"part_id": pid, "rows": n,
-                                     "checksum": checksum},
-                           retain=retain)
-            written.append(row)
-
     pending = [
         u for u in range(n_units)
         if any(base_pid + u not in done[t] for t in present)
@@ -761,6 +870,9 @@ def ingest_pages(
         for t in present:
             if base_pid + u in done[t]:
                 continue
-            commit(t, base_pid + u, out[t], int(obs.get["rows_in"]))
+            written.extend(commit_part(
+                spark, out_dir, t, base_pid + u, out[t],
+                int(obs.get["rows_in"]), n_parts=n_parts_orig,
+                retain=retain))
         out["mentions"].unpersist()
     return sorted(written, key=lambda r: (r["stage"], r["part_id"]))

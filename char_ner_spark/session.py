@@ -29,6 +29,19 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = 2048
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half the host's RAM, capped at 16g: the local-mode JVM holds the
+    whole engine in the driver heap, and the Python driver and workers
+    need the other half. Hosts without ``/proc/meminfo`` get 16g."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "16g"
+    return f"{min(kb // 2048, 16 * 1024)}m"
+
+
 def build_session(
     app_name: str = "char_ner_spark",
     master: str | None = None,
@@ -62,7 +75,8 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
     )

@@ -199,7 +199,7 @@ def stream_triples(
     Returns the drained-stream StreamingQuery's final triples DataFrame
     (read back from out_dir).
     """
-    from .lineage import append_manifest, table_checksum, write_snapshot
+    from .lineage import commit_part
     from .pipeline import build_dictionary_state, extract_triples, link_pairs, middles_table, tag_pages
 
     dict_state = build_dictionary_state(spark, alias_pdf)
@@ -207,43 +207,14 @@ def stream_triples(
     middles = middles_table(spark)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        import datetime as _dt
-
         mentions = tag_pages(batch_df, salt=salt)
         linked = link_pairs(mentions, alias_tables, alias_pdf=alias_pdf)
         triples = extract_triples(linked, dict_state["canon"], middles)
-        # dynamic partition overwrite only replaces partitions that RECEIVE
-        # rows — a replayed micro-batch that now yields zero triples would
-        # otherwise leave the stale batch_id partition from the earlier
-        # delivery in place. Drop this batch's partition explicitly first so
-        # the output converges to the replay's content even when empty.
-        import shutil as _shutil
-
-        part_dir = os.path.join(out_dir, f"batch_id={int(batch_id)}")
-        _shutil.rmtree(part_dir, ignore_errors=True)
-        (
-            triples.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-        if os.path.isdir(part_dir):
-            n_out, checksum = table_checksum(spark.read.parquet(part_dir))
-        else:
-            n_out, checksum = 0, "0" * 16  # batch yielded no triples
-        append_manifest(spark, out_dir, {
-            "stage": "stream_triples",
-            "part_id": int(batch_id),
-            "rows_in": batch_df.count(),
-            "rows_out": n_out,
-            "checksum": checksum,
-            "completed_at": _dt.datetime.now(_dt.timezone.utc).replace(
-                tzinfo=None
-            ),
-        })
-        write_snapshot(
-            spark, out_dir, n_parts=None, table="stream_triples",
+        # commit_part replaces this batch's batch_id=N partition (a replay
+        # that now yields no triples removes the stale one) and commits it
+        commit_part(
+            spark, out_dir, "stream_triples", int(batch_id), triples,
+            rows_in=batch_df.count(),
             # schema as READ: data cols + the batch_id partition column as
             # INT — Spark's partition-value inference types batch_id=N dirs
             # as int, so recording long here would make an all-empty
@@ -251,8 +222,6 @@ def stream_triples(
             schema_json=triples.withColumn(
                 "batch_id", F.lit(int(batch_id)).cast("int")
             ).schema.json(),
-            add_part={"part_id": int(batch_id), "rows": n_out,
-                      "checksum": checksum},
             retain=retain,
         )
 
