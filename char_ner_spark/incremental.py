@@ -600,7 +600,7 @@ def apply_dictionary_update(
     remap_pdf = remap.toPandas()
     if len(remap_pdf) == 0 and alias_pdf is None:
         return {}
-    # from pandas, never a list of Rows: Row lists are pickled (+19% peak RSS)
+    # from pandas, not a list of Rows: pickling Rows one by one costs memory
     remap = spark.createDataFrame(
         remap_pdf, schema="old_canonical_id long, new_canonical_id long")
     remap_keys = {int(k) for k in remap_pdf["old_canonical_id"]}
