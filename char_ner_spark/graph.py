@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 
 def _graph_npart(df: DataFrame) -> int:
     # graph working sets are orders of magnitude smaller than the page
@@ -151,7 +153,7 @@ def pagerank(edges: DataFrame, alpha: float = 0.85, tol: float = 1e-9,
             F.sum(F.col("dang").cast("long")).alias("nd")).collect()[0]
         n, n_dang = int(counts["n"]), int(counts["nd"] or 0)
         if n == 0:
-            return spark.createDataFrame([], "entity long, rank double")
+            return local_frame(spark, [], "entity long, rank double")
         if seeds is None:
             verts = verts.withColumn("reset", F.lit(1.0 / n))
             d_mass = n_dang / n
@@ -254,7 +256,7 @@ def _pagerank_driver(spark, g: DataFrame, alpha: float, tol: float,
                                       pdf["dst"].to_numpy()]))
     n = len(nodes)
     if n == 0:
-        return spark.createDataFrame([], "entity long, rank double")
+        return local_frame(spark, [], "entity long, rank double")
     idx = {v: i for i, v in enumerate(nodes.tolist())}
     si = pdf["src"].map(idx).to_numpy()
     di = pdf["dst"].map(idx).to_numpy()

@@ -37,6 +37,10 @@ from pyspark.sql import functions as F
 
 from . import lineage
 from .linking import normalize_surface
+from .session import local_frame
+
+#: the canonical-id delta every remap frame carries
+REMAP_DDL = "old_canonical_id long, new_canonical_id long"
 
 #: copy-on-write rewrites of the streaming sink take part ids from here up
 #: — disjoint from any id the streaming checkpoint will ever assign, so a
@@ -101,10 +105,7 @@ def incremental_canon(
     that is what keeps the update O(delta).
     """
     if len(new_alias_pdf) == 0:
-        remap = spark.createDataFrame(
-            [], schema="old_canonical_id long, new_canonical_id long"
-        )
-        return old_canon, remap
+        return old_canon, local_frame(spark, [], REMAP_DDL)
     if len(new_alias_pdf) <= cc_distributed_threshold:
         return _incremental_canon_driver(spark, old_canon, old_alias_pdf,
                                          new_alias_pdf)
@@ -190,14 +191,7 @@ def _incremental_canon_driver(
     )
     new_map, remap_rows = _incremental_canon_pure(old_map, old_alias_pdf,
                                                   new_alias_pdf)
-    remap = spark.createDataFrame(
-        pd.DataFrame(remap_rows, columns=["old_canonical_id",
-                                          "new_canonical_id"])
-        if remap_rows
-        else pd.DataFrame({"old_canonical_id": pd.Series(dtype="int64"),
-                           "new_canonical_id": pd.Series(dtype="int64")}),
-        schema="old_canonical_id long, new_canonical_id long",
-    )
+    remap = local_frame(spark, remap_rows, REMAP_DDL)
     items = sorted(new_map.items())
     new_canon = spark.createDataFrame(
         pd.DataFrame({"entity_id": [k for k, _ in items],
@@ -416,14 +410,6 @@ def _cow_commit(spark: SparkSession, out_dir: str, table: str, new_pid: int,
     return [lineage._snapshot_entry(r) for r in rows]
 
 
-def _committed_triples(spark: SparkSession, out_dir: str,
-                       pid: int) -> DataFrame:
-    """A triples part as committed to disk — edges re-derive from these
-    bytes, so the rewrite is not computed a second time."""
-    base, prefix = lineage._table_base(out_dir, "triples")
-    return lineage.read_parts(spark, f"{base}/{prefix}={pid}").drop("part_id")
-
-
 def relink_parts(
     spark: SparkSession,
     out_dir: str,
@@ -514,8 +500,8 @@ def relink_parts(
             if "edges" in tables:
                 entries["edges"] += _cow_commit(
                     spark, out_dir, "edges", next_pid,
-                    edges_from_triples(_committed_triples(spark, out_dir,
-                                                          next_pid)),
+                    edges_from_triples(lineage.committed_triples(
+                        spark, out_dir, next_pid)),
                     [old_pid])
                 written["edges"].append((old_pid, next_pid))
             next_pid += 1
@@ -600,9 +586,7 @@ def apply_dictionary_update(
     remap_pdf = remap.toPandas()
     if len(remap_pdf) == 0 and alias_pdf is None:
         return {}
-    # from pandas, not a list of Rows: pickling Rows one by one costs memory
-    remap = spark.createDataFrame(
-        remap_pdf, schema="old_canonical_id long, new_canonical_id long")
+    remap = local_frame(spark, remap_pdf, REMAP_DDL)
     remap_keys = {int(k) for k in remap_pdf["old_canonical_id"]}
     stats: dict[str, dict] = {}
     rewritten_triples: dict[int, int] = {}  # old part → its rewrite
@@ -688,7 +672,7 @@ def apply_dictionary_update(
                             f"edges part {old_pid} affected but the triples "
                             "part was not rewritten; sinks are out of sync"
                         )
-                    new_df = edges_from_triples(_committed_triples(
+                    new_df = edges_from_triples(lineage.committed_triples(
                         spark, out_dir, rewritten_triples[old_pid]))
                 else:
                     new_df = (

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .session import local_frame
+
 LINEAGE_COLS = ["stage", "part_id", "rows_in", "rows_out", "checksum", "completed_at"]
 
 #: manifest column types — the ones Spark's writer used (long counters, a
@@ -105,17 +107,29 @@ def _snapshot_entry(row) -> dict:
             "checksum": row["checksum"]}
 
 
-def _latest_entries(out_dir: str, stage: str) -> list[dict]:
-    """The latest manifest row per part of ``stage`` as snapshot entries,
-    sorted by part_id: the heal path's source of truth. Ties on
-    ``completed_at`` break by (rows_out, checksum), like Spark's
+def _latest_rows(out_dir: str, stage: str) -> pd.DataFrame:
+    """The latest manifest row per part of ``stage``, sorted by part_id.
+    Ties on ``completed_at`` break by (rows_out, checksum), like Spark's
     ``max(struct(completed_at, rows_out, checksum))`` did."""
     m = _manifest_rows(out_dir, stage)
-    if not len(m):
-        return []
-    last = m.sort_values(["completed_at", "rows_out", "checksum"]) \
+    return m.sort_values(["completed_at", "rows_out", "checksum"]) \
         .groupby("part_id").tail(1).sort_values("part_id")
-    return [_snapshot_entry(r) for _, r in last.iterrows()]
+
+
+def _latest_entries(out_dir: str, stage: str) -> list[dict]:
+    """The latest manifest row per part of ``stage`` as snapshot entries,
+    sorted by part_id: the heal path's source of truth."""
+    return [_snapshot_entry(r)
+            for _, r in _latest_rows(out_dir, stage).iterrows()]
+
+
+def _live_rows_in(out_dir: str, stage: str) -> dict[int, int]:
+    """``rows_in`` of each committed part of ``stage`` that no copy-on-write
+    rewrite has superseded since (its latest manifest row is a commit,
+    not a tombstone)."""
+    last = _latest_rows(out_dir, stage)
+    return {int(r.part_id): int(r.rows_in) for r in last.itertuples()
+            if not str(r.checksum).startswith("superseded-by:")}
 
 
 def completed_parts(spark: SparkSession, out_dir: str, stage: str) -> set[int]:
@@ -266,6 +280,58 @@ def commit_part(spark: SparkSession, out_dir: str, table: str, pid: int,
     return rows
 
 
+def committed_triples(spark: SparkSession, out_dir: str,
+                      pid: int) -> DataFrame:
+    """Triples part ``pid`` as committed to disk, read with its footer
+    schema. Edges derive from these bytes, so the relation stage that
+    produced them is not run a second time."""
+    base, prefix = _table_base(out_dir, "triples")
+    return read_parts(spark, f"{base}/{prefix}={pid}").drop(prefix)
+
+
+def _commit_unit(spark: SparkSession, out_dir: str, pid: int,
+                 slice_df: DataFrame, tables: list[str],
+                 done: dict[str, set[int]], live_triples: dict[int, int],
+                 pipeline_kw: dict, commit_kw: dict) -> list[dict]:
+    """Commit the per-unit sinks in ``tables`` that part ``pid`` still
+    lacks — the work-unit loop behind run_partitioned and ingest_pages.
+    Returns the manifest rows written.
+
+    Triples commit first, whatever order ``tables`` gives; edges then
+    derive from the triples part as committed to disk (when ``tables``
+    holds triples), so a unit runs its relation stage once. The unit's
+    pipeline over ``slice_df`` runs only if a missing sink needs it: a
+    unit missing only edges, whose triples part is committed and live
+    (``live_triples`` maps such parts to their ``rows_in``), skips it."""
+    from .pipeline import edges_from_triples, run_pipeline
+
+    missing = sorted((t for t in tables if pid not in done[t]),
+                     key=lambda t: t != "triples")
+    from_triples = "triples" in tables and (
+        "triples" in missing or pid in live_triples)
+    out, rows_in, written = None, live_triples.get(pid), []
+    for table in missing:
+        if table == "edges" and from_triples:
+            df = edges_from_triples(committed_triples(spark, out_dir, pid))
+        else:
+            if out is None:
+                obs = Observation(f"pages_in_{pid}")
+                out = run_pipeline(
+                    spark, slice_df.observe(
+                        obs, F.count(F.lit(1)).alias("rows_in")),
+                    **pipeline_kw)
+                rows_in = int(obs.get["rows_in"])
+            df = out[table]
+        written += commit_part(spark, out_dir, table, pid, df, rows_in,
+                               **commit_kw)
+    if out is not None:
+        # done with this unit — release the cached tagger output before the
+        # next unit persists its own (K~10k units would otherwise pile up
+        # cached blocks for the whole session; ADVICE r1)
+        out["mentions"].unpersist()
+    return written
+
+
 def run_partitioned(
     spark: SparkSession,
     pages: DataFrame,
@@ -299,11 +365,16 @@ def run_partitioned(
     ("triples", "edges", "mentions") write part_id=<pid>/ each unit and
     commit their own snapshot line (metadata/<table>/); the unit-invariant
     "entities" sink (dictionary ⋈ canonical map — identical whatever unit
-    computes it) writes once as part_id=0 after the units. ``retain``
+    computes it) writes once as part_id=0 after the units. With "triples"
+    among the sinks, each unit commits its triples part first and derives
+    its edges part from that part as committed to disk, so the relation
+    stage runs once per unit; a unit that lacks only its edges part (a
+    crash between the two commits, or "edges" added to a triples-only
+    output) reads its triples back and runs no pipeline. ``retain``
     bounds snapshot history per table (see expire_snapshots)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from .pipeline import build_dictionary_state, run_pipeline
+    from .pipeline import build_dictionary_state
 
     per_unit = [s for s in sinks if s != "entities"]
     unknown = set(sinks) - {"triples", "edges", "mentions", "entities"}
@@ -340,37 +411,22 @@ def run_partitioned(
                 "whole job into it)."
             )
     done = {s: completed_parts(spark, out_dir, s) for s in sinks}
+    live_triples = _live_rows_in(out_dir, "triples")
     staged = pages.withColumn(
         "part_id", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int")
     )
     dict_state = build_dictionary_state(spark, alias_pdf)  # unit-invariant
-    commit_lock = threading.Lock()
+    pipeline_kw = {"alias_pdf": alias_pdf, "dict_state": dict_state,
+                   "weights_map": weights_map}
+    commit_kw = {"n_parts": n_parts, "retain": retain,
+                 "lock": threading.Lock()}
     written: list[dict] = []
 
-    def commit_sink(table: str, pid: int, df: DataFrame, rows_in: int) -> None:
-        written.extend(commit_part(spark, out_dir, table, pid, df, rows_in,
-                                   n_parts=n_parts, retain=retain,
-                                   lock=commit_lock))
-
     def run_unit(pid: int) -> None:
-        slice_df = staged.filter(F.col("part_id") == pid).drop("part_id")
-        obs = Observation(f"pages_in_{pid}")
-        slice_df = slice_df.observe(obs, F.count(F.lit(1)).alias("rows_in"))
-        out = run_pipeline(spark, slice_df, alias_pdf, dict_state=dict_state,
-                           weights_map=weights_map)
-        for table in per_unit:
-            if pid in done[table]:
-                # a crash between a unit's sink commits leaves siblings
-                # behind: the pipeline recompute is unavoidable (the missing
-                # sink derives from it), but re-committing an already-
-                # manifested sink would just rewrite identical bytes and
-                # append duplicate manifest/snapshot rows
-                continue
-            commit_sink(table, pid, out[table], int(obs.get["rows_in"]))
-        # done with this unit — release the cached tagger output before the
-        # next unit persists its own (K~10k units would otherwise pile up
-        # cached blocks for the whole session; ADVICE r1)
-        out["mentions"].unpersist()
+        written.extend(_commit_unit(
+            spark, out_dir, pid,
+            staged.filter(F.col("part_id") == pid).drop("part_id"),
+            per_unit, done, live_triples, pipeline_kw, commit_kw))
 
     pending = [
         pid for pid in range(n_parts)
@@ -391,9 +447,10 @@ def run_partitioned(
         # unit-invariant dimension: dict_state's canonical map ⋈ alias names
         from .pipeline import entities_table
 
-        commit_sink("entities", 0,
-                    entities_table(spark, alias_pdf, dict_state["canon"]),
-                    rows_in=len(alias_pdf))
+        written.extend(commit_part(
+            spark, out_dir, "entities", 0,
+            entities_table(spark, alias_pdf, dict_state["canon"]),
+            rows_in=len(alias_pdf), **commit_kw))
     # heal a stale/missing snapshot pointer: a crash in the window between
     # append_manifest and write_snapshot leaves the manifest ahead of the
     # snapshot — readers resolving the pointer would silently drop the
@@ -701,11 +758,8 @@ def read_table(spark: SparkSession, out_dir: str, table: str,
             # empty frame; a parquet read of the bare base dir would fail
             # schema inference for root-layout tables
             if snap.get("schema_json"):
-                from pyspark.sql.types import StructType
-
-                return spark.createDataFrame(
-                    [], StructType.fromJson(json.loads(snap["schema_json"]))
-                )
+                return local_frame(spark, [], StructType.fromJson(
+                    json.loads(snap["schema_json"])))
             return spark.read.option("basePath", base).parquet(base).limit(0)
         return spark.read.option("basePath", base).parquet(*paths)
     return spark.read.option("basePath", base).parquet(
@@ -827,7 +881,7 @@ def ingest_pages(
     present, edges/mentions); the unit-invariant entities dimension is
     dictionary-side and unchanged by a corpus delta. Returns the manifest
     rows written."""
-    from .pipeline import build_dictionary_state, run_pipeline
+    from .pipeline import build_dictionary_state
 
     if not (0 <= ingest_id <= INGEST_MAX_ID) or not (
             1 <= n_units <= INGEST_PID_STRIDE):
@@ -850,10 +904,14 @@ def ingest_pages(
                 f"{out_dir} ({t}) carries checksum recipe "
                 f"v{s.get('checksum_ver')}; cannot append comparable parts")
     done = {t: completed_parts(spark, out_dir, t) for t in present}
+    live_triples = _live_rows_in(out_dir, "triples")
     base_pid = INGEST_PID_BASE + ingest_id * INGEST_PID_STRIDE
     staged = pages.withColumn(
         "unit", F.pmod(F.xxhash64("url"), F.lit(n_units)).cast("int"))
-    dict_state = build_dictionary_state(spark, alias_pdf)
+    pipeline_kw = {"alias_pdf": alias_pdf,
+                   "dict_state": build_dictionary_state(spark, alias_pdf),
+                   "weights_map": weights_map}
+    commit_kw = {"n_parts": n_parts_orig, "retain": retain}
     written: list[dict] = []
     pending = [
         u for u in range(n_units)
@@ -862,17 +920,8 @@ def ingest_pages(
     for i, u in enumerate(pending):
         if fail_after is not None and i >= fail_after:
             raise RuntimeError(f"injected failure before ingest unit {u}")
-        slice_df = staged.filter(F.col("unit") == u).drop("unit")
-        obs = Observation(f"ingest_{ingest_id}_{u}")
-        slice_df = slice_df.observe(obs, F.count(F.lit(1)).alias("rows_in"))
-        out = run_pipeline(spark, slice_df, alias_pdf,
-                           dict_state=dict_state, weights_map=weights_map)
-        for t in present:
-            if base_pid + u in done[t]:
-                continue
-            written.extend(commit_part(
-                spark, out_dir, t, base_pid + u, out[t],
-                int(obs.get["rows_in"]), n_parts=n_parts_orig,
-                retain=retain))
-        out["mentions"].unpersist()
+        written += _commit_unit(
+            spark, out_dir, base_pid + u,
+            staged.filter(F.col("unit") == u).drop("unit"),
+            present, done, live_triples, pipeline_kw, commit_kw)
     return sorted(written, key=lambda r: (r["stage"], r["part_id"]))

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import linking, relations, textops
+from .session import local_frame
 from .tagger import tag_sentences
 
 # ---------------------------------------------------------------------------
@@ -801,8 +802,10 @@ def middles_table(spark: SparkSession) -> DataFrame:
         for pre, gmax, post, pred, subj_left in specs
         for f in range(gmax + 1)
     ]
-    return spark.createDataFrame(
-        sorted(set(rows)),
+    # a local frame, not createDataFrame(list): a list makes a pickled
+    # Python RDD, and every broadcast of it starts a second worker pool
+    return local_frame(
+        spark, sorted(set(rows)),
         "lang string, pre string, post string, f int, pred string, "
         "subj_left boolean",
     )

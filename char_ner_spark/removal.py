@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .linking import normalize_surface
+from .session import local_frame
 
 
 def remove_aliases(
@@ -50,6 +51,7 @@ def remove_aliases(
     with the same union-find/min-id rule, so the result is EXACTLY
     ``union_find_canonical(old minus removed)`` (test-enforced).
     """
+    from .incremental import REMAP_DDL
     from .pipeline import alias_spark_tables
 
     canon_pdf = dict_state["canon"].toPandas()
@@ -57,12 +59,7 @@ def remove_aliases(
                        canon_pdf["canonical_id"].astype("int64")))
     new_map, remap_rows, splits = _remove_pure(old_map, old_alias_pdf,
                                                removed_pdf)
-    remap = spark.createDataFrame(
-        sorted(set(remap_rows)) or
-        pd.DataFrame({"old_canonical_id": pd.Series(dtype="int64"),
-                      "new_canonical_id": pd.Series(dtype="int64")}),
-        schema="old_canonical_id long, new_canonical_id long",
-    )
+    remap = local_frame(spark, sorted(set(remap_rows)), REMAP_DDL)
     items = sorted(new_map.items())
     new_canon = spark.createDataFrame(
         pd.DataFrame({"entity_id": [k for k, _ in items],

@@ -8,13 +8,20 @@ Centralizes the configs SURVEY.md §4.2 pins down:
   - shuffle partitions sized for the local core count (multi-executor
     clusters override via spark-submit --conf)
   - python worker reuse so broadcast model weights load once per worker
+
+``local_frame`` builds the driver-side frames (template table, remaps,
+typed empty frames) so they plan as a JVM ``LocalTableScan``.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 #: rows per Arrow batch handed to the tagger UDF. Since round 5 the NN
 #: batch size is decoupled from the Arrow batch (tagger.BATCH_ROWS chunks
@@ -85,3 +92,23 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """Driver-side ``rows`` (tuples, or a pandas frame with the schema's
+    columns) as a DataFrame typed by ``schema`` (DDL or StructType).
+
+    The rows go to the JVM as Arrow, so the frame plans as a
+    ``LocalTableScan``, empty or not. ``createDataFrame`` over a list (or
+    an empty pandas frame) makes a pickled Python RDD instead, and every
+    scan of it starts a second pool of Python workers."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    if isinstance(rows, pd.DataFrame):
+        table = pa.Table.from_pandas(rows[schema.names], schema=arrow,
+                                     preserve_index=False)
+    else:
+        table = pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=arrow)
+    return spark.createDataFrame(table, schema)

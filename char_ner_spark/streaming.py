@@ -24,6 +24,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 
 def stream_pages(spark: SparkSession, pages_dir: str) -> DataFrame:
     """readStream over the pages table (schema inferred from the batch
@@ -245,8 +247,8 @@ def stream_triples(
 
     if not _glob.glob(_os.path.join(out_dir, "batch_id=*", "**", "*.parquet"),
                       recursive=True):
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark, [],
             # batch_id int: matches Spark's partition-value inference over
             # batch_id=N dirs (and the snapshot schema_json), so the empty
             # and non-empty shapes agree

@@ -24,6 +24,11 @@ from char_ner_spark.linking import union_find_canonical
 #: (1–2) and the commit (write + read-back checksum)
 APPLY_JOB_BUDGET = 14
 
+#: jobs one work unit's edges commit issues, measured: the edges part is
+#: an aggregate over the unit's committed triples part, so its write is a
+#: shuffle map stage plus the write stage, then the read-back checksum
+EDGES_COMMIT_JOBS = 3
+
 _groups = itertools.count()
 
 
@@ -108,6 +113,28 @@ def test_part_commit_is_two_jobs(spark, tmp_path):
                                  "checksum": rows[0]["checksum"]}]
     assert snap["schema_json"] == back.schema.json()
     assert snap["checksum_ver"] == lineage.CHECKSUM_VER == 2
+
+
+def test_edges_commit_job_count(spark, tmp_path, monkeypatch):
+    """An edges commit reads the committed triples part instead of
+    re-running the relation stage of the unit's pipeline."""
+    alias = make_alias_table(60, seed=7)
+    pages = make_pages(30, seed=7, alias_df=alias)
+    real = lineage.commit_part
+    counts = []
+
+    def counted(spark_, out_dir, table, *a, **kw):
+        if table != "edges":
+            return real(spark_, out_dir, table, *a, **kw)
+        rows, n = _jobs(spark, lambda: real(spark_, out_dir, table, *a, **kw))
+        counts.append(n)
+        return rows
+
+    monkeypatch.setattr(lineage, "commit_part", counted)
+    lineage.run_partitioned(spark, spark.createDataFrame(pages), alias,
+                            str(tmp_path), n_parts=1,
+                            sinks=("triples", "edges"))
+    assert counts == [EDGES_COMMIT_JOBS]
 
 
 def _bridge_delta(alias, triples_pdf):

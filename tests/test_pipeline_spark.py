@@ -569,10 +569,11 @@ def test_compact_table_preserves_content_and_heals(spark, corpus):
 
 
 def test_resume_added_sink_skips_committed_siblings(spark, corpus):
-    """Adding a sink to an existing output re-runs each unit's pipeline
-    (the new sink derives from it) but must NOT re-commit the sibling
-    sinks that are already manifested — no duplicate manifest rows, no
-    extra snapshots for the completed table."""
+    """Adding a sink to an existing output commits only the new sink
+    (edges derive from each unit's committed triples part) and must NOT
+    re-commit the sibling sinks that are already manifested — no
+    duplicate manifest rows, no extra snapshots for the completed
+    table."""
     from char_ner_spark import lineage
 
     alias, pages_pdf = corpus
