@@ -399,17 +399,6 @@ def _prune_parts_by_stats(base: str, prefix: str, pids: list[int],
     return keep
 
 
-def _cow_commit(spark: SparkSession, out_dir: str, table: str, new_pid: int,
-                df: DataFrame, superseded: list[int]) -> list[dict]:
-    """One copy-on-write part commit (lineage.commit_part without its
-    snapshot): the new part plus a tombstone per superseded part. Returns
-    the snapshot entries the caller's one-per-table snapshot adds — the
-    same list the heal path rebuilds from these manifest rows."""
-    rows = lineage.commit_part(spark, out_dir, table, new_pid, df,
-                               supersedes=superseded, snapshot=False)
-    return [lineage._snapshot_entry(r) for r in rows]
-
-
 def relink_parts(
     spark: SparkSession,
     out_dir: str,
@@ -431,8 +420,8 @@ def relink_parts(
     from-scratch run would produce (test-enforced), while untouched parts
     are never read (footer-stats pruning + semi-join, same as
     :func:`apply_dictionary_update`). Commits are copy-on-write with the
-    same tombstone protocol, so time travel and crash-heal behave
-    identically. Pass ``canon_ids`` from
+    same tombstone protocol and one snapshot per table, so time travel and
+    crashes behave identically. Pass ``canon_ids`` from
     :func:`~char_ner_spark.removal.stale_canonical_ids` (∪ the split
     piece ids, conservatively).
 
@@ -493,16 +482,18 @@ def relink_parts(
                                 alias_pdf=alias_pdf)
             new_triples = extract_triples(linked, dict_state["canon"],
                                           middles)
-            entries["triples"] += _cow_commit(spark, out_dir, "triples",
-                                              next_pid, new_triples,
-                                              [old_pid])
+            entries["triples"] += map(
+                lineage._snapshot_entry, lineage.commit_part(
+                    spark, out_dir, "triples", next_pid, new_triples,
+                    supersedes=[old_pid], snapshot=False))
             written["triples"].append((old_pid, next_pid))
             if "edges" in tables:
-                entries["edges"] += _cow_commit(
-                    spark, out_dir, "edges", next_pid,
-                    edges_from_triples(lineage.committed_triples(
-                        spark, out_dir, next_pid)),
-                    [old_pid])
+                entries["edges"] += map(
+                    lineage._snapshot_entry, lineage.commit_part(
+                        spark, out_dir, "edges", next_pid,
+                        edges_from_triples(lineage.committed_triples(
+                            spark, out_dir, next_pid)),
+                        supersedes=[old_pid], snapshot=False))
                 written["edges"].append((old_pid, next_pid))
             next_pid += 1
         for t, w in written.items():
@@ -519,12 +510,14 @@ def relink_parts(
         if old_pids:
             epid = max(max(p["part_id"] for p in esnap["manifest"]) + 1,
                        _BATCH_REWRITE_PID_BASE)
-            ents = _cow_commit(spark, out_dir, "entities", epid,
-                               entities_table(spark, alias_pdf,
-                                              dict_state["canon"]), old_pids)
-            n = lineage.write_snapshot(spark, out_dir, esnap.get("n_parts"),
-                                       table="entities", add_parts=ents,
-                                       retain=retain)
+            ents = lineage.commit_part(
+                spark, out_dir, "entities", epid,
+                entities_table(spark, alias_pdf, dict_state["canon"]),
+                supersedes=old_pids, snapshot=False)
+            n = lineage.write_snapshot(
+                spark, out_dir, esnap.get("n_parts"), table="entities",
+                add_parts=[*map(lineage._snapshot_entry, ents)],
+                retain=retain)
             stats["entities"] = {"rewritten": [(p, epid) for p in old_pids],
                                  "snapshot_id": n}
     return stats
@@ -547,10 +540,11 @@ def apply_dictionary_update(
     every untouched old one; previously committed snapshots keep
     referencing the old directories, so pinned time-travel reads see
     exactly the pre-update table. Superseded parts are tombstoned in the
-    lineage manifest (rows_out=0 — readers already skip zero-row parts),
-    which keeps the crash-heal path (rebuild snapshot from manifest)
-    convergent with this commit. Old directories become orphans once the
-    snapshots referencing them expire; reclaim with
+    new snapshot (rows=0 — readers already skip zero-row parts). Each
+    table's rewrite commits as one snapshot, so a crash mid-table publishes
+    nothing for that table, and a re-run redoes it from the unchanged
+    snapshot. Old directories become orphans once the snapshots
+    referencing them expire; reclaim with
     :func:`~char_ner_spark.lineage.gc_orphan_parts`.
 
     * ``triples`` / ``stream_triples`` — :func:`recanonicalize_triples`
@@ -617,9 +611,10 @@ def apply_dictionary_update(
             # ONE new part supersedes every old one — the dimension is
             # unit-invariant, run_partitioned writes it as a single part
             old_pids = sorted(p["part_id"] for p in manifest)
-            entries = _cow_commit(spark, out_dir, "entities", next_pid,
-                                  entities_table(spark, alias_pdf, canon),
-                                  old_pids)
+            entries += map(lineage._snapshot_entry, lineage.commit_part(
+                spark, out_dir, "entities", next_pid,
+                entities_table(spark, alias_pdf, canon),
+                supersedes=old_pids, snapshot=False))
             written = [(p, next_pid) for p in old_pids]
         else:
             key_cols = {"triples": ("subj", "obj"),
@@ -685,8 +680,9 @@ def apply_dictionary_update(
                                                "canonical_id"))
                         .select(*part_df.columns)
                     )
-                entries += _cow_commit(spark, out_dir, table, next_pid,
-                                       new_df, [old_pid])
+                entries += map(lineage._snapshot_entry, lineage.commit_part(
+                    spark, out_dir, table, next_pid, new_df,
+                    supersedes=[old_pid], snapshot=False))
                 written.append((old_pid, next_pid))
                 next_pid += 1
         if written:

@@ -3,10 +3,10 @@ checkpoints per-partition lineage and counters so the job resumes mid-run").
 
 Design (SURVEY.md §4.2 Resume): the url space is split into K work units
 (``part_id = pmod(xxhash64(url), K)``). Each unit runs the full pipeline on
-its slice and writes ``triples/part_id=<k>/`` idempotently (overwrite), then
-appends a manifest row (rows in/out, checksum, timestamp) to ``_lineage``.
-On restart, completed part_ids are skipped — a crashed run resumes exactly
-where it stopped, and re-running a completed unit rewrites identical bytes.
+its slice, writes ``triples/part_id=<k>/`` idempotently (overwrite), then
+commits a snapshot entry (rows in/out, checksum). On restart, parts the
+current snapshot lists are skipped — a crashed run resumes exactly where
+it stopped, and re-running a completed unit rewrites identical bytes.
 
 At 100 TB scale K is sized so one unit ≈ a few hundred GB (K ~ 10k); units
 are embarrassingly parallel across job submissions too.
@@ -15,25 +15,26 @@ Every writer commits a part through :func:`commit_part`. Only two of its
 steps are Spark jobs: the data write, and the checksum of the part as read
 back from disk (the read takes its schema from the parquet footer, so it
 launches no schema-inference job). The rest is driver-only file IO: the
-``_lineage`` manifest rows (pyarrow), the ``snapshot-N.json`` list and the
-``current`` pointer flip. Work-unit input counters use ``df.observe`` (SURVEY
-§2.1 S4) so they ride the pipeline's own action instead of re-scanning.
+table's ``snapshot-N.json`` and its ``current`` pointer flip, the only
+commit record — every read of commit state comes from them. Work-unit
+input counters use ``df.observe`` (SURVEY §2.1 S4) so they ride the
+pipeline's own action instead of re-scanning.
 """
 
 from __future__ import annotations
 
-import contextlib
 import datetime as dt
+import fcntl
 import json
 import os
 import shutil
-import threading
 import uuid
 
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -42,8 +43,8 @@ from .session import local_frame
 
 LINEAGE_COLS = ["stage", "part_id", "rows_in", "rows_out", "checksum", "completed_at"]
 
-#: manifest column types — the ones Spark's writer used (long counters, a
-#: UTC timestamp), so rows from either writer read back as one table
+#: column types of the manifest rows read_manifest serves and
+#: append_manifest writes (long counters, a UTC timestamp)
 _MANIFEST_SCHEMA = pa.schema([
     ("stage", pa.string()), ("part_id", pa.int64()), ("rows_in", pa.int64()),
     ("rows_out", pa.int64()), ("checksum", pa.string()),
@@ -76,85 +77,68 @@ def _data_files(path: str) -> list[str]:
     )
 
 
-def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    if not _data_files(_manifest_path(out_dir)):
-        return None
-    # explicit schema: no inference job, and rows written by the old Spark
-    # writer (INT96 timestamps) and by append_manifest (UTC micros) read as
-    # one timestamp column
-    return spark.read.schema(_MANIFEST_DDL).parquet(_manifest_path(out_dir))
-
-
-def _manifest_rows(out_dir: str, stage: str) -> pd.DataFrame:
-    """Every manifest row of ``stage``, read on the driver with pyarrow.
-    ``completed_at`` comes back as a UTC timestamp whichever writer stored
-    it (Spark's INT96 holds naive UTC instants)."""
-    frames = []
-    for f in _data_files(_manifest_path(out_dir)):
-        pdf = pq.read_table(f, columns=LINEAGE_COLS).to_pandas()
-        pdf = pdf[pdf["stage"] == stage]
-        if len(pdf):
-            pdf["completed_at"] = pd.to_datetime(pdf["completed_at"], utc=True)
-            frames.append(pdf)
-    if not frames:
-        return pd.DataFrame(columns=LINEAGE_COLS)
-    return pd.concat(frames, ignore_index=True)
-
-
 def _snapshot_entry(row) -> dict:
-    """Manifest row → snapshot manifest entry."""
+    """Commit row (as commit_part returns it) → snapshot entry."""
     return {"part_id": int(row["part_id"]), "rows": int(row["rows_out"]),
-            "checksum": row["checksum"]}
+            "rows_in": int(row["rows_in"]), "checksum": row["checksum"]}
 
 
-def _latest_rows(out_dir: str, stage: str) -> pd.DataFrame:
-    """The latest manifest row per part of ``stage``, sorted by part_id.
-    Ties on ``completed_at`` break by (rows_out, checksum), like Spark's
-    ``max(struct(completed_at, rows_out, checksum))`` did."""
-    m = _manifest_rows(out_dir, stage)
-    return m.sort_values(["completed_at", "rows_out", "checksum"]) \
-        .groupby("part_id").tail(1).sort_values("part_id")
+def _entries(out_dir: str, table: str) -> list[dict]:
+    """The entries of ``table``'s current snapshot."""
+    snap = current_snapshot(out_dir, table=table)
+    return snap.get("manifest", []) if snap else []
 
 
-def _latest_entries(out_dir: str, stage: str) -> list[dict]:
-    """The latest manifest row per part of ``stage`` as snapshot entries,
-    sorted by part_id: the heal path's source of truth."""
-    return [_snapshot_entry(r)
-            for _, r in _latest_rows(out_dir, stage).iterrows()]
+def _rows_in(entry: dict) -> int:
+    """Entries written without ``rows_in`` count their rows."""
+    return entry.get("rows_in", entry["rows"])
+
+
+def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """One ``LINEAGE_COLS`` row per entry of each table's current snapshot
+    (``stage`` = table, ``rows_out`` = rows; a superseded part shows its
+    tombstone). ``completed_at`` is null: snapshots record no per-part
+    commit time. None before any commit. Built on the driver: no Spark
+    job."""
+    tables = snapshot_tables(out_dir)
+    if not tables:
+        return None
+    rows = [(t, p["part_id"], _rows_in(p), p["rows"], p["checksum"], None)
+            for t in tables for p in _entries(out_dir, t)]
+    return local_frame(spark, rows, _MANIFEST_DDL)
 
 
 def _live_rows_in(out_dir: str, stage: str) -> dict[int, int]:
-    """``rows_in`` of each committed part of ``stage`` that no copy-on-write
-    rewrite has superseded since (its latest manifest row is a commit,
-    not a tombstone)."""
-    last = _latest_rows(out_dir, stage)
-    return {int(r.part_id): int(r.rows_in) for r in last.itertuples()
-            if not str(r.checksum).startswith("superseded-by:")}
+    """``rows_in`` of each part of ``stage``'s current snapshot that no
+    copy-on-write rewrite has superseded (its entry is not a tombstone)."""
+    return {p["part_id"]: _rows_in(p) for p in _entries(out_dir, stage)
+            if not str(p["checksum"]).startswith("superseded-by:")}
 
 
 def completed_parts(spark: SparkSession, out_dir: str, stage: str) -> set[int]:
-    return {int(p) for p in _manifest_rows(out_dir, stage)["part_id"]}
+    """Parts ``stage``'s current snapshot lists, superseded ones included
+    (their units ran)."""
+    snap = current_snapshot(out_dir, table=stage)
+    return set(snap["completed"]) if snap else set()
 
 
 def append_manifest(spark: SparkSession, out_dir: str, row: dict) -> None:
-    _append_manifest_rows(out_dir, [row])
+    """Append ``row`` (``LINEAGE_COLS``) to the ``_lineage`` manifest as one
+    parquet file written on the driver: a dot-prefixed temp file renamed
+    into place, so a crash never leaves a torn file. A naive
+    ``completed_at`` is taken as UTC.
 
-
-def _append_manifest_rows(out_dir: str, rows: list[dict]) -> None:
-    """Append manifest rows as one parquet file, written on the driver: a
-    dot-prefixed temp file (invisible to every reader) renamed into place,
-    so a crash never leaves a torn file and the rows land together. A
-    naive ``completed_at`` is taken as UTC."""
+    Nothing in the library writes or reads ``_lineage`` any more: the table
+    snapshots are the only commit record, and a leftover manifest is
+    ignored. The last caller is perfbench's traced commit copy
+    (``perfbench/workloads.py:_commit_part``), which ROADMAP item 4
+    removes."""
     path = _manifest_path(out_dir)
     os.makedirs(path, exist_ok=True)
-
-    def utc(t) -> pd.Timestamp:
-        t = pd.Timestamp(t)
-        return t.tz_localize("UTC") if t.tzinfo is None else t.tz_convert("UTC")
-
-    table = pa.table({c: [utc(r[c]) if c == "completed_at" else r[c]
-                          for r in rows] for c in LINEAGE_COLS},
-                     schema=_MANIFEST_SCHEMA)
+    at = pd.Timestamp(row["completed_at"])
+    at = at.tz_localize("UTC") if at.tzinfo is None else at.tz_convert("UTC")
+    table = pa.table({c: [at if c == "completed_at" else row[c]]
+                      for c in LINEAGE_COLS}, schema=_MANIFEST_SCHEMA)
     name = f"part-{uuid.uuid4()}.parquet"
     tmp = os.path.join(path, f".{name}.tmp")
     pq.write_table(table, tmp)
@@ -218,8 +202,8 @@ def commit_part(spark: SparkSession, out_dir: str, table: str, pid: int,
                 df: DataFrame, rows_in: int | None = None,
                 n_parts: int | None = None, schema_json: str | None = None,
                 supersedes: tuple[int, ...] | list[int] = (),
-                snapshot: bool = True, retain: int | None = None,
-                lock: threading.Lock | None = None) -> list[dict]:
+                snapshot: bool = True,
+                retain: int | None = None) -> list[dict]:
     """Commit ``df`` as part ``pid`` of ``table`` — the one commit sequence
     behind work units, ingests, copy-on-write rewrites and the streaming
     sink:
@@ -227,20 +211,21 @@ def commit_part(spark: SparkSession, out_dir: str, table: str, pid: int,
     1. write the part directory (overwrite, so a retry is idempotent) —
        a Spark job;
     2. read the part back from disk and checksum it — a Spark job;
-    3. append its manifest row, plus a ``rows_out=0``,
-       ``checksum="superseded-by:<pid>"`` tombstone 1 µs later for each
-       part in ``supersedes`` (the latest row per part wins in the heal
-       path) — driver only;
-    4. with ``snapshot``, write the next snapshot (previous list + these
-       entries) and flip the ``current`` pointer — driver only.
-       Copy-on-write callers pass ``snapshot=False`` and commit one
-       snapshot per table for all their parts (``write_snapshot``'s
-       ``add_parts``), so no reader sees a half-applied rewrite.
+    3. with ``snapshot``, commit the next snapshot of ``table`` (previous
+       entries + this part's) and flip its ``current`` pointer — driver
+       only (:func:`write_snapshot`, which serializes concurrent commits).
+       Until that pointer flips the part is not committed: a crash before
+       it leaves an orphan directory that a resume rewrites and
+       :func:`gc_orphan_parts` reclaims.
 
-    Steps 3–4 run under ``lock`` when given (overlapped work units keep one
-    linear commit history). ``rows_in`` defaults to the rows written and
+    Each part in ``supersedes`` gets a tombstone row (``rows_out=0``,
+    ``checksum="superseded-by:<pid>"``; readers skip zero-row entries).
+    Copy-on-write callers pass ``snapshot=False`` and commit one snapshot
+    per table for all their parts (``write_snapshot``'s ``add_parts``, one
+    :func:`_snapshot_entry` per returned row), so no reader sees a
+    half-applied rewrite. ``rows_in`` defaults to the rows written and
     ``schema_json`` (recorded in the snapshot) to the read-back schema.
-    Returns the manifest rows appended, the part's own row first."""
+    Returns the commit rows (``LINEAGE_COLS``), the part's own row first."""
     base, prefix = _table_base(out_dir, table)
     part_path = os.path.join(base, f"{prefix}={pid}")
     keyed = df.withColumn(prefix, F.lit(pid))
@@ -267,16 +252,13 @@ def commit_part(spark: SparkSession, out_dir: str, table: str, pid: int,
              "rows_in": n if rows_in is None else rows_in, "rows_out": n,
              "checksum": checksum, "completed_at": now}]
     rows += [{"stage": table, "part_id": old, "rows_in": 0, "rows_out": 0,
-              "checksum": f"superseded-by:{pid}",
-              "completed_at": now + dt.timedelta(microseconds=1)}
+              "checksum": f"superseded-by:{pid}", "completed_at": now}
              for old in supersedes]
-    with lock or contextlib.nullcontext():
-        _append_manifest_rows(out_dir, rows)
-        if snapshot:
-            write_snapshot(spark, out_dir, n_parts, table=table,
-                           schema_json=schema_json,
-                           add_parts=[_snapshot_entry(r) for r in rows],
-                           retain=retain)
+    if snapshot:
+        write_snapshot(spark, out_dir, n_parts, table=table,
+                       schema_json=schema_json,
+                       add_parts=[_snapshot_entry(r) for r in rows],
+                       retain=retain)
     return rows
 
 
@@ -295,7 +277,7 @@ def _commit_unit(spark: SparkSession, out_dir: str, pid: int,
                  pipeline_kw: dict, commit_kw: dict) -> list[dict]:
     """Commit the per-unit sinks in ``tables`` that part ``pid`` still
     lacks — the work-unit loop behind run_partitioned and ingest_pages.
-    Returns the manifest rows written.
+    Returns the commit rows written.
 
     Triples commit first, whatever order ``tables`` gives; edges then
     derive from the triples part as committed to disk (when ``tables``
@@ -320,7 +302,13 @@ def _commit_unit(spark: SparkSession, out_dir: str, pid: int,
                     spark, slice_df.observe(
                         obs, F.count(F.lit(1)).alias("rows_in")),
                     **pipeline_kw)
-                rows_in = int(obs.get["rows_in"])
+                try:
+                    rows_in = int(obs.get["rows_in"])
+                except Py4JJavaError:
+                    # a unit whose pages yield no mentions: AQE drops the
+                    # empty cached scan, and the observed count with it,
+                    # from the pipeline's first action — count the slice
+                    rows_in = slice_df.count()
             df = out[table]
         written += commit_part(spark, out_dir, table, pid, df, rows_in,
                                **commit_kw)
@@ -344,9 +332,10 @@ def run_partitioned(
     sinks: tuple[str, ...] = ("triples",),
     retain: int | None = None,
 ) -> list[dict]:
-    """Run the pipeline per work unit with resume. ``fail_after`` injects a
+    """Run the pipeline per work unit with resume: units whose parts every
+    sink's current snapshot lists are skipped. ``fail_after`` injects a
     crash after that many units (tests); ``weights_map`` (lang → params)
-    runs inference from stored weights. Returns manifest rows written
+    runs inference from stored weights. Returns the commit rows written
     (sorted by (stage, part_id) — overlapped completion order is not
     semantic).
 
@@ -356,10 +345,10 @@ def run_partitioned(
     and the next unit's first scan — at K ~ 10k units the serial loop's
     per-unit ramp-down/ramp-up gap is the dominant waste. The default
     (None) overlaps automatically — min(4, n_parts) once there are ≥3
-    units; pass 1 to force the serial loop. Manifest append and snapshot
-    commit stay serialized under a lock (commit protocol is still linear
-    history); unit payloads are disjoint by construction
-    (pmod(xxhash64(url))), so data writes never race.
+    units; pass 1 to force the serial loop. Snapshot commits stay linear
+    history (write_snapshot serializes them per table); unit payloads are
+    disjoint by construction (pmod(xxhash64(url))), so data writes never
+    race.
 
     ``sinks`` selects the materialized tables: per-unit sinks
     ("triples", "edges", "mentions") write part_id=<pid>/ each unit and
@@ -418,8 +407,7 @@ def run_partitioned(
     dict_state = build_dictionary_state(spark, alias_pdf)  # unit-invariant
     pipeline_kw = {"alias_pdf": alias_pdf, "dict_state": dict_state,
                    "weights_map": weights_map}
-    commit_kw = {"n_parts": n_parts, "retain": retain,
-                 "lock": threading.Lock()}
+    commit_kw = {"n_parts": n_parts, "retain": retain}
     written: list[dict] = []
 
     def run_unit(pid: int) -> None:
@@ -451,25 +439,16 @@ def run_partitioned(
             spark, out_dir, "entities", 0,
             entities_table(spark, alias_pdf, dict_state["canon"]),
             rows_in=len(alias_pdf), **commit_kw))
-    # heal a stale/missing snapshot pointer: a crash in the window between
-    # append_manifest and write_snapshot leaves the manifest ahead of the
-    # snapshot — readers resolving the pointer would silently drop the
-    # committed part. The manifest is the source of truth; converge to it.
-    for table in sinks:
-        snap = current_snapshot(out_dir, table=table)
-        manifest_done = completed_parts(spark, out_dir, table)
-        if snap is None or set(snap["completed"]) != manifest_done:
-            write_snapshot(spark, out_dir, n_parts, table=table, retain=retain)
     return sorted(written, key=lambda r: (r["stage"], r["part_id"]))
 
 
 # ---------------------------------------------------------------------------
-# Iceberg-style snapshot metadata: every commit appends snapshot-N.json (the
-# manifest list at that point: completed parts + checksums + schema
-# fingerprint) and flips the `current` pointer atomically (rename). Readers
-# resolve the pointer and read exactly the files a committed snapshot covers
-# — the shape a real catalog (Iceberg/Delta) would slot into behind the same
-# module boundary.
+# Iceberg-style snapshot metadata, the one commit log per table: every
+# commit appends snapshot-N.json (the manifest list at that point: completed
+# parts + rows + checksums + schema fingerprint) and flips the `current`
+# pointer atomically (rename). Readers resolve the pointer and read exactly
+# the files a committed snapshot covers — the shape a real catalog
+# (Iceberg/Delta) would slot into behind the same module boundary.
 # ---------------------------------------------------------------------------
 
 
@@ -534,13 +513,18 @@ def write_snapshot(spark: SparkSession, out_dir: str, n_parts: int | None,
                    add_parts: list[dict] | None = None) -> int:
     """Append snapshot-N.json + point `current` at it; returns N.
 
-    With ``add_part`` (or several, ``add_parts``) the new snapshot is the
-    previous manifest list with those entries added or replaced by
-    part_id — O(1) per commit, no manifest read under the commit lock (at
-    K ~ 10k units, re-aggregating the whole manifest per commit is O(K²)
-    total and serializes the overlapped units). Without them, the list is
-    rebuilt from the latest ``_lineage`` row per part — the heal/bootstrap
-    path. Both are driver-only: no Spark job.
+    The new snapshot is the previous one's entry list with ``add_part``
+    (or several, ``add_parts``) added or replaced by part_id — O(1) per
+    commit, whatever the number of parts already committed. Without them
+    it re-commits the previous list unchanged (a new ``schema_json`` or
+    ``n_parts`` still lands). Driver-only: no Spark job.
+
+    Reading the previous snapshot, choosing N, writing the file and
+    flipping the pointer run under an exclusive ``flock`` on a dot-file in
+    the table's snapshot directory, so overlapped work units, concurrent
+    updates and separate processes all append to one linear history, each
+    snapshot's ``parent_id`` the one before it. A crash before the flip
+    commits nothing: the pointer still names the previous snapshot.
 
     ``retain``: after committing, expire all but the newest ``retain``
     snapshot files (the new current is always kept) — without expiry, K
@@ -550,58 +534,58 @@ def write_snapshot(spark: SparkSession, out_dir: str, n_parts: int | None,
 
     meta = _snapshot_dir(out_dir, table)
     os.makedirs(meta, exist_ok=True)
-    prev = current_snapshot(out_dir, table=table)
-    # next id = max EXISTING file + 1, not pointer + 1: after a crash between
-    # writing snapshot-N.json and flipping `current` (pointer still N-1),
-    # pointer+1 would silently REWRITE snapshot-N.json — snapshots are
-    # immutable history (time-travel readers may pin N)
-    existing = [
-        int(f[len("snapshot-"):-len(".json")])
-        for f in os.listdir(meta)
-        if f.startswith("snapshot-") and f.endswith(".json")
-    ]
-    n = (max(existing) + 1) if existing else 0
-    if add_part is not None:
-        add_parts = [add_part, *(add_parts or [])]
-    if add_parts is not None:
+    with open(os.path.join(meta, ".commit.lock"), "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)  # released when the file closes
+        prev = current_snapshot(out_dir, table=table)
+        # next id = max EXISTING file + 1, not pointer + 1: after a crash
+        # between writing snapshot-N.json and flipping `current` (pointer
+        # still N-1), pointer+1 would REWRITE snapshot-N.json — snapshots are
+        # immutable history (time-travel readers may pin N), so the file is
+        # created exclusively
+        existing = [
+            int(f[len("snapshot-"):-len(".json")])
+            for f in os.listdir(meta)
+            if f.startswith("snapshot-") and f.endswith(".json")
+        ]
+        n = (max(existing) + 1) if existing else 0
         parts = {p["part_id"]: p for p in (prev["manifest"] if prev else [])}
-        parts.update((p["part_id"], p) for p in add_parts)
+        adds = [add_part] if add_part is not None else []
+        parts.update((p["part_id"], p) for p in adds + (add_parts or []))
         parts = [parts[k] for k in sorted(parts)]
-    else:
-        parts = _latest_entries(out_dir, table)
-    if schema_json is None and prev is not None:
-        schema_json = prev.get("schema_json")
-    snap = {
-        "snapshot_id": n,
-        "table": table,
-        # checksum recipe epoch: 2 = table_checksum hashes EVERY column of
-        # the written part including part_id (the round-3 multi-sink
-        # change). Snapshots written before the tag (or by pre-round-3
-        # code) are not checksum-comparable; resume fails loud on them
-        # instead of silently trusting incomparable digests.
-        "checksum_ver": CHECKSUM_VER,
-        "n_parts": n_parts,
-        "parent_id": prev["snapshot_id"] if prev else None,
-        "completed": [p["part_id"] for p in parts],
-        "manifest": parts,
-        "schema_json": schema_json,
-        "schema_fingerprint": hashlib.sha256(
-            (schema_json or "").encode()
-        ).hexdigest()[:16],
-    }
-    with open(os.path.join(meta, f"snapshot-{n}.json"), "w") as f:
-        json.dump(snap, f, indent=1, sort_keys=True)
-    tmp = os.path.join(meta, "current.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(n))
-    os.replace(tmp, os.path.join(meta, "current"))
-    if table == "triples":
-        # keep the legacy flat summary too (round-1 surface)
-        with open(os.path.join(out_dir, "snapshot.json"), "w") as f:
-            json.dump({"table": "triples", "n_parts": n_parts,
-                       "completed": snap["completed"]}, f, indent=1, sort_keys=True)
-    if retain is not None:
-        expire_snapshots(out_dir, table=table, keep_last=retain)
+        if schema_json is None and prev is not None:
+            schema_json = prev.get("schema_json")
+        snap = {
+            "snapshot_id": n,
+            "table": table,
+            # checksum recipe epoch: 2 = table_checksum hashes EVERY column
+            # of the written part including part_id (the round-3 multi-sink
+            # change). Snapshots written before the tag (or by pre-round-3
+            # code) are not checksum-comparable; resume fails loud on them
+            # instead of silently trusting incomparable digests.
+            "checksum_ver": CHECKSUM_VER,
+            "n_parts": n_parts,
+            "parent_id": prev["snapshot_id"] if prev else None,
+            "completed": [p["part_id"] for p in parts],
+            "manifest": parts,
+            "schema_json": schema_json,
+            "schema_fingerprint": hashlib.sha256(
+                (schema_json or "").encode()
+            ).hexdigest()[:16],
+        }
+        with open(os.path.join(meta, f"snapshot-{n}.json"), "x") as f:
+            json.dump(snap, f, indent=1, sort_keys=True)
+        tmp = os.path.join(meta, "current.tmp")
+        with open(tmp, "w") as f:
+            f.write(str(n))
+        os.replace(tmp, os.path.join(meta, "current"))
+        if table == "triples":
+            # keep the legacy flat summary too (round-1 surface)
+            with open(os.path.join(out_dir, "snapshot.json"), "w") as f:
+                json.dump({"table": "triples", "n_parts": n_parts,
+                           "completed": snap["completed"]}, f, indent=1,
+                          sort_keys=True)
+        if retain is not None:
+            expire_snapshots(out_dir, table=table, keep_last=retain)
     return n
 
 
@@ -647,13 +631,13 @@ def compact_table(spark: SparkSession, out_dir: str, table: str = "triples",
     tmp`` at a root-layout table's data root would match the partition
     glob and double-read), verify its checksum equals the live part's,
     then swap. A crash between the swap's remove and rename leaves the
-    tmp dir with the verified content; the next call heals it before
+    tmp dir with the verified content; the next call restores it before
     compacting further. Checksums (and therefore the manifest and every
     snapshot) are invariant — compaction changes file layout, never
     content. Returns {part_id: (files_before, files_after)} for the parts
     rewritten. A part the snapshot records as NON-empty but whose
     directory is missing raises — silently skipping it would report a
-    healthy compaction over lost data."""
+    clean compaction over lost data."""
     snap = current_snapshot(out_dir, table=table)
     parts = snap["completed"] if snap else []
     rows_by_part = {
@@ -665,7 +649,7 @@ def compact_table(spark: SparkSession, out_dir: str, table: str = "triples",
         part = os.path.join(base, f"{prefix}={pid}")
         tmp = os.path.join(base, "_compact_tmp", f"{prefix}={pid}")
         # migrate pre-round-4 crash orphans at the legacy sibling location
-        # ('<part>.compact.tmp'): heal a missing part from a verified copy,
+        # ('<part>.compact.tmp'): restore a missing part from a verified copy,
         # remove a stale pre-verify orphan (it matches '<prefix>=*' globs)
         legacy = part + ".compact.tmp"
         if os.path.isdir(legacy):
@@ -682,7 +666,7 @@ def compact_table(spark: SparkSession, out_dir: str, table: str = "triples",
                 )
             continue  # zero-row part (e.g. an empty replayed micro-batch)
         if not os.path.isdir(part) and os.path.isdir(tmp):
-            os.rename(tmp, part)  # heal the crash window (content verified
+            os.rename(tmp, part)  # finish the interrupted swap (content verified
             # before the interrupted swap began)
         elif os.path.isdir(tmp):
             shutil.rmtree(tmp)  # stale tmp from a pre-verify crash
@@ -797,10 +781,11 @@ def gc_orphan_parts(spark: SparkSession, out_dir: str,
     snapshots expire (:func:`expire_snapshots`), the directory is
     unreachable through any pointer and only wastes scan-planning time and
     storage. A part is LIVE (never collected) if any retained snapshot
-    file lists it with rows > 0, or the lineage manifest's LATEST row for
-    it has rows_out > 0 — the manifest is the heal-path source of truth,
-    so a part whose snapshot commit crashed mid-window must survive GC for
-    the heal to resurrect it. Returns the part ids removed."""
+    file lists it with rows > 0. The snapshots are the only commit record,
+    so a part whose commit crashed before its snapshot landed is an orphan
+    too (its unit re-runs on resume) — and so is a part a concurrent writer
+    has written but not yet committed: do not collect a table while it is
+    being written. Returns the part ids removed."""
     meta = _snapshot_dir(out_dir, table)
     if not os.path.isdir(meta):
         return []
@@ -815,8 +800,6 @@ def gc_orphan_parts(spark: SparkSession, out_dir: str,
                      if p.get("rows", 1) > 0}
         else:
             live |= set(snap.get("completed", []))
-    live |= {p["part_id"] for p in _latest_entries(out_dir, table)
-             if p["rows"] > 0}
     base, prefix = _table_base(out_dir, table)
     if not os.path.isdir(base):
         return []
@@ -871,7 +854,7 @@ def ingest_pages(
     * they never collide with the original units, another ingest_id, or
       the COW-rewrite ranges;
     * re-running the same (ingest_id, pages) after a crash resumes —
-      committed units are found in the manifest and skipped, exactly like
+      committed units are found in the current snapshots and skipped, as in
       run_partitioned (``fail_after`` injects a crash for tests);
     * the resume guard is untouched: snapshots keep the ORIGINAL n_parts,
       and a later run_partitioned over the original pages is still a
@@ -879,7 +862,7 @@ def ingest_pages(
 
     Sinks follow what the out_dir already materializes (triples and, when
     present, edges/mentions); the unit-invariant entities dimension is
-    dictionary-side and unchanged by a corpus delta. Returns the manifest
+    dictionary-side and unchanged by a corpus delta. Returns the commit
     rows written."""
     from .pipeline import build_dictionary_state
 

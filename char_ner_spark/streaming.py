@@ -174,29 +174,21 @@ def stream_triples(
     canonical map) is built once and shared across all micro-batches, the
     streaming analog of run_partitioned's unit-invariant dict state.
 
-    Per-batch lineage (north_rule: every stage checkpoints counters): each
-    committed micro-batch appends a manifest row (stage="stream_triples",
-    part_id=batch_id, pages in, triples out, order-insensitive checksum)
-    to ``out_dir/_lineage`` — the streaming twin of run_partitioned's
-    per-unit rows. A replayed batch appends a fresh row with the same
-    batch_id; readers take the LAST row per part_id (completed_parts /
-    write_snapshot already resolve by recency), so the manifest history
-    shows the retry while the resolved state converges with the data.
-
-    Snapshots (round-4): every committed micro-batch also commits a
-    ``stream_triples`` snapshot line (``_snapshots/stream_triples/`` —
-    underscore-prefixed because the data lives at the out_dir root and a
-    bare ``metadata/`` sibling would break Spark's partition discovery
-    over ``batch_id=*``), the same
-    machinery the batch sinks use — so a streamed output is readable via
-    ``lineage.read_table(out_dir, "stream_triples")`` with time-travel,
-    ``compact_table`` can rewrite its small files checksum-verified, and
-    ``retain`` bounds snapshot history. A replayed batch REPLACES its own
-    manifest entry (add_part keys by part_id), converging metadata with
-    the data; an empty replay commits rows=0 and readers skip the part.
-    ``n_parts`` is recorded as None — micro-batch ids are an open-ended
-    sequence, not a fixed unit count, so the batch-side resume guard
-    treats the table as wildcard.
+    Per-batch lineage (north_rule: every stage checkpoints counters): every
+    committed micro-batch commits a ``stream_triples`` snapshot line
+    (``_snapshots/stream_triples/`` — underscore-prefixed because the data
+    lives at the out_dir root and a bare ``metadata/`` sibling would break
+    Spark's partition discovery over ``batch_id=*``) whose entry for
+    part_id=batch_id records pages in, triples out and the order-insensitive
+    checksum — the same commit log the batch sinks use. So a streamed output
+    is readable via ``lineage.read_table(out_dir, "stream_triples")`` with
+    time-travel, ``compact_table`` can rewrite its small files
+    checksum-verified, and ``retain`` bounds snapshot history. A replayed
+    batch REPLACES its own entry (add_part keys by part_id), converging
+    metadata with the data; an empty replay commits rows=0 and readers skip
+    the part. ``n_parts`` is recorded as None — micro-batch ids are an
+    open-ended sequence, not a fixed unit count, so the batch-side resume
+    guard treats the table as wildcard.
 
     Returns the drained-stream StreamingQuery's final triples DataFrame
     (read back from out_dir).
@@ -239,9 +231,9 @@ def stream_triples(
     # parquet DATA files; read.parquet would then fail schema inference even
     # though the stream itself succeeded — return a typed empty frame.
     # Only batch_id=*/ partitions count: Spark's reader skips underscore
-    # dirs (so _lineage never pollutes the data read), and the existence
+    # dirs (so _snapshots never pollutes the data read), and the existence
     # probe must skip them too or an all-empty stream would try to infer a
-    # schema from a directory holding only manifest rows.
+    # schema from a directory holding only snapshot metadata.
     import glob as _glob
     import os as _os
 

@@ -1,7 +1,7 @@
 """Spark-job budget of the commit protocol, agreement of the O(1)
-copy-on-write snapshots with the manifest heal path, and manifests that mix
-rows from the Spark writer (older outputs) with rows from the driver-side
-pyarrow writer.
+copy-on-write snapshots with the parts on disk, and outputs holding a
+leftover ``_lineage`` manifest, whose rows (from the Spark writer of older
+outputs or the driver-side pyarrow writer) commit state no longer reads.
 
 Jobs are counted per call through a job group: once the listener bus has
 drained, the status tracker lists every job the group issued."""
@@ -9,7 +9,6 @@ drained, the status tracker lists every job the group issued."""
 import datetime as dt
 import itertools
 import os
-import shutil
 
 import pandas as pd
 import pytest
@@ -57,40 +56,36 @@ def _triples_df(spark, n=3):
                     "sent_idx int, conf double")
 
 
-def _assert_fast_equals_heal(spark, out_dir, tables):
-    """The current snapshot of each table lists exactly what the heal path
-    rebuilds from the latest manifest row per part."""
-    for table in tables:
-        fast = lineage.current_snapshot(out_dir, table=table)
-        lineage.write_snapshot(spark, out_dir, fast["n_parts"], table=table)
-        healed = lineage.current_snapshot(out_dir, table=table)
-        assert healed["snapshot_id"] == fast["snapshot_id"] + 1
-        assert healed["completed"] == fast["completed"], table
-        assert healed["manifest"] == fast["manifest"], table
+def _assert_snapshot_matches_disk(spark, out_dir, stats):
+    """In the current snapshot of each table a copy-on-write call rewrote,
+    every live entry records the (rows, checksum) of its part on disk, and
+    the tombstones are exactly the superseded parts."""
+    for table, st in stats.items():
+        snap = lineage.current_snapshot(out_dir, table=table)
+        tombs = {p["part_id"]: p["checksum"] for p in snap["manifest"]
+                 if p["checksum"].startswith("superseded-by:")}
+        assert tombs == {old: f"superseded-by:{new}"
+                         for old, new in st["rewritten"]}, table
+        base, prefix = lineage._table_base(out_dir, table)
+        for p in snap["manifest"]:
+            if p["part_id"] not in tombs:
+                back = lineage.read_parts(
+                    spark, f"{base}/{prefix}={p['part_id']}")
+                assert (p["rows"], p["checksum"]) == \
+                    lineage.table_checksum(back), (table, p)
 
 
 def test_bookkeeping_issues_no_jobs(spark, tmp_path):
     d = str(tmp_path)
     lineage.commit_part(spark, d, "triples", 0, _triples_df(spark),
                         rows_in=3, n_parts=2)
-    row = {"stage": "triples", "part_id": 1, "rows_in": 2, "rows_out": 2,
-           "checksum": "00000000000000ab",
-           "completed_at": dt.datetime.now(dt.timezone.utc)
-           .replace(tzinfo=None)}
-    assert _jobs(spark, lambda: lineage.append_manifest(spark, d, row))[1] == 0
-    done, n = _jobs(spark,
-                    lambda: lineage.completed_parts(spark, d, "triples"))
-    assert (done, n) == ({0, 1}, 0)
     _, n = _jobs(spark, lambda: lineage.write_snapshot(
         spark, d, 2, add_part={"part_id": 1, "rows": 2,
                                "checksum": "00000000000000ab"}))
     assert n == 0
-    fast = lineage.current_snapshot(d)
-    _, n = _jobs(spark, lambda: lineage.write_snapshot(spark, d, 2))  # heal
-    assert n == 0
-    healed = lineage.current_snapshot(d)
-    assert healed["manifest"] == fast["manifest"]
-    assert healed["completed"] == [0, 1]
+    done, n = _jobs(spark,
+                    lambda: lineage.completed_parts(spark, d, "triples"))
+    assert (done, n) == ({0, 1}, 0)
     _, n = _jobs(spark, lambda: lineage.read_manifest(spark, d))
     assert n == 0
 
@@ -109,7 +104,7 @@ def test_part_commit_is_two_jobs(spark, tmp_path):
     assert lineage.table_checksum(back.coalesce(1)) == \
         lineage.table_checksum(back.repartition(3))
     snap = lineage.current_snapshot(d)
-    assert snap["manifest"] == [{"part_id": 0, "rows": 3,
+    assert snap["manifest"] == [{"part_id": 0, "rows": 3, "rows_in": 3,
                                  "checksum": rows[0]["checksum"]}]
     assert snap["schema_json"] == back.schema.json()
     assert snap["checksum_ver"] == lineage.CHECKSUM_VER == 2
@@ -167,7 +162,7 @@ def test_apply_dictionary_update_job_budget(spark, tmp_path):
     stats, n = _jobs(spark, lambda: apply_dictionary_update(spark, d, remap))
     assert stats["triples"]["rewritten"] and stats["edges"]["rewritten"]
     assert n <= APPLY_JOB_BUDGET, n
-    _assert_fast_equals_heal(spark, d, ("triples", "edges"))
+    _assert_snapshot_matches_disk(spark, d, stats)
 
 
 def test_relink_snapshot_equals_heal(spark, tmp_path):
@@ -193,7 +188,7 @@ def test_relink_snapshot_equals_heal(spark, tmp_path):
     stats = relink_parts(spark, d, new_state, reduced,
                          canon_ids=stale_canonical_ids(state, removed))
     assert stats.get("triples", {}).get("rewritten")
-    _assert_fast_equals_heal(spark, d, sorted(stats))
+    _assert_snapshot_matches_disk(spark, d, stats)
 
 
 def _spark_manifest_append(spark, out_dir, rows):
@@ -205,6 +200,9 @@ def _spark_manifest_append(spark, out_dir, rows):
 
 
 def test_mixed_manifest_rows(spark, tmp_path):
+    """A leftover ``_lineage`` manifest from either writer is ignored:
+    completed_parts, read_manifest and gc_orphan_parts follow the snapshots
+    alone."""
     d = str(tmp_path)
     t0 = dt.datetime(2026, 1, 2, 3, 4, 5, 123456)
     t1 = t0 + dt.timedelta(microseconds=1)
@@ -222,31 +220,24 @@ def test_mixed_manifest_rows(spark, tmp_path):
     lineage.append_manifest(spark, d, row(2, 9, "00000000000000cc", t0))
     lineage.append_manifest(spark, d, row(3, 4, "00000000000000dd", t0))
     _spark_manifest_append(spark, d, [row(2, 0, "superseded-by:4", t1)])
+    assert lineage.completed_parts(spark, d, "triples") == set()
+    assert lineage.read_manifest(spark, d) is None
 
-    m = lineage.read_manifest(spark, d).toPandas()
-    assert len(m) == 6
-    got = {(r.part_id, r.checksum, pd.Timestamp(r.completed_at))
-           for r in m.itertuples()}
-    assert (0, "superseded-by:3", pd.Timestamp(t1)) in got
-    assert (2, "superseded-by:4", pd.Timestamp(t1)) in got
-    assert (1, "00000000000000bb", pd.Timestamp(t0)) in got
-    assert lineage.completed_parts(spark, d, "triples") == {0, 1, 2, 3}
-
-    # GC: the snapshot lists part 3 only, so part 1 survives through its
-    # Spark-written manifest row; parts 0 and 2 end in tombstones
-    lineage.write_snapshot(spark, d, 1, add_part={
-        "part_id": 3, "rows": 4, "checksum": "00000000000000dd"})
+    # the snapshot lists part 3 only, so GC takes every other part —
+    # part 1's manifest row included
+    entry = {"part_id": 3, "rows": 4, "checksum": "00000000000000dd"}
+    lineage.write_snapshot(spark, d, 1, add_part=entry)
     for pid in range(4):
         os.makedirs(os.path.join(d, "triples", f"part_id={pid}"))
-    assert lineage.gc_orphan_parts(spark, d, "triples") == [0, 2]
+    assert lineage.completed_parts(spark, d, "triples") == {3}
+    assert lineage.gc_orphan_parts(spark, d, "triples") == [0, 1, 2]
+    m = lineage.read_manifest(spark, d).toPandas()
+    assert list(zip(m.stage, m.part_id, m.rows_in, m.rows_out, m.checksum)) \
+        == [("triples", 3, 4, 4, "00000000000000dd")]
 
-    lineage.write_snapshot(spark, d, 1)  # heal: latest row per part
-    assert lineage.current_snapshot(d)["manifest"] == [
-        {"part_id": 0, "rows": 0, "checksum": "superseded-by:3"},
-        {"part_id": 1, "rows": 7, "checksum": "00000000000000bb"},
-        {"part_id": 2, "rows": 0, "checksum": "superseded-by:4"},
-        {"part_id": 3, "rows": 4, "checksum": "00000000000000dd"},
-    ]
+    # without entries, write_snapshot re-commits the previous list
+    lineage.write_snapshot(spark, d, 1)
+    assert lineage.current_snapshot(d)["manifest"] == [entry]
 
 
 def test_resume_over_spark_written_manifest(spark, tmp_path):
@@ -256,10 +247,9 @@ def test_resume_over_spark_written_manifest(spark, tmp_path):
     pages = spark.createDataFrame(make_pages(12, seed=3, alias_df=alias))
     d = str(tmp_path)
     lineage.run_partitioned(spark, pages, alias, d, n_parts=2)
-    path = os.path.join(d, "_lineage")
-    rows = pd.concat([pd.read_parquet(f) for f in lineage._data_files(path)])
-    shutil.rmtree(path)
-    rows["completed_at"] = rows["completed_at"].dt.tz_convert(None)
+    # the manifest an older writer kept beside the snapshots
+    rows = lineage.read_manifest(spark, d).toPandas()
+    rows["completed_at"] = dt.datetime(2026, 1, 2, 3, 4, 5)
     _spark_manifest_append(spark, d, rows.to_dict("records"))
     snap = lineage.current_snapshot(d)["snapshot_id"]
     assert lineage.run_partitioned(spark, pages, alias, d, n_parts=2) == []

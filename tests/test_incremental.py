@@ -480,7 +480,8 @@ def test_sequential_deltas_compose(spark, base_alias, tmp_path_factory):
     """Two dictionary deltas applied one after another — both to the canon
     state and via COW to the stored triples — must equal the one-shot
     recompute over the full union. Exercises repeated COW on the same
-    out_dir (part-id continuation, manifest/heal convergence)."""
+    out_dir (part-id continuation, each pass committed from the last
+    snapshot)."""
     from char_ner_spark import lineage
     from char_ner_spark.incremental import (apply_dictionary_update,
                                             update_dictionary_state)

@@ -342,9 +342,10 @@ def test_weights_map_missing_lang_raises(spark, corpus):
 
 
 def test_snapshot_pointer_healed_on_resume(spark, corpus):
-    """A crash between manifest append and snapshot write leaves the pointer
-    behind the manifest; the next run_partitioned must converge the snapshot
-    to the manifest so read_triples sees every committed part."""
+    """The current snapshot is the commit record: a pointer left behind
+    (a crash before later units' snapshots landed) means those units are
+    not committed, so the next run_partitioned re-commits them and
+    read_triples converges to the full table, part for part."""
     from char_ner_spark import lineage
 
     alias, pages_pdf = corpus
@@ -355,18 +356,22 @@ def test_snapshot_pointer_healed_on_resume(spark, corpus):
         full = lineage.read_triples(spark, d).count()
         snap = lineage.current_snapshot(d)
         assert sorted(snap["completed"]) == [0, 1, 2]
+        sums = {p["part_id"]: p["checksum"] for p in snap["manifest"]}
         # simulate the stale-pointer crash window: rewind to snapshot 0
         with open(os.path.join(d, "metadata", "current"), "w") as f:
             f.write("0")
         stale = lineage.current_snapshot(d)
-        assert len(stale["completed"]) < 3  # pointer now behind the manifest
+        assert len(stale["completed"]) < 3  # pointer now behind the units
         assert lineage.read_triples(spark, d).count() < full
-        # all units already committed -> run is a no-op except the heal
+        # the units the rewound snapshot lacks run again
         rows = lineage.run_partitioned(spark, pages, alias, d, n_parts=3)
-        assert rows == []
+        assert sorted(r["part_id"] for r in rows) == sorted(
+            set(range(3)) - set(stale["completed"]))
         healed = lineage.current_snapshot(d)
         assert sorted(healed["completed"]) == [0, 1, 2]
         assert lineage.read_triples(spark, d).count() == full
+        assert {p["part_id"]: p["checksum"]
+                for p in healed["manifest"]} == sums
     finally:
         shutil.rmtree(d, ignore_errors=True)
 

@@ -9,7 +9,8 @@ entities, and edges Iceberg-style.
         tools/run_kg_job.py --pages <dir> --out <dir> \\
         [--alias-parquet <file>] [--n-parts 64] [--salt 16]
 
-Re-running after a crash skips completed units (see _lineage manifest).
+Re-running after a crash skips the units each table's current snapshot
+(metadata/) lists.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", required=True, help="pages parquet dir (url, warc_ts, html, text, lang)")
-    ap.add_argument("--out", required=True, help="output dir (triples/, _lineage/, snapshot.json)")
+    ap.add_argument("--out", required=True, help="output dir (triples/ and the other sinks, metadata/ snapshot log, snapshot.json)")
     ap.add_argument("--alias-parquet", default=None,
                     help="alias dictionary parquet; default: seeded fixture dictionary")
     ap.add_argument("--n-parts", type=int, default=16, help="resumable work units")
