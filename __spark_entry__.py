@@ -1,8 +1,9 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry(spark)      — flagship KG pipeline smoke on sf0.001-scaled fixtures.
-queries()         — operator registry (char_ner_spark/driver_queries.py).
-oracle_sql()      — DuckDB-equivalent SQL for every SQL-expressible entry.
+queries()         — KG registry (char_ner_spark/driver_queries.py): the KG
+                    pipeline, the tagger and the CoNLL reader on fixtures.
+oracle_sql()      — DuckDB oracle SQL for every registry entry.
 """
 
 from __future__ import annotations
@@ -30,20 +31,18 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """KG-engine entries, each checked against an independent engine:
+    kg_triples_fixture, kg_mentions_fixture, conll_reader_fixture."""
     from char_ner_spark.driver_queries import build_queries
 
     return build_queries()
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL for each SQL-expressible query. The KG
-    pipeline/tagger queries are hash-checked against a staged parquet of the
-    single-process golden run; MinHash/SimHash run the same SQL template on
-    both engines. Every registry entry has an oracle: the ANN scale path
-    (ann_ivf_topk) runs IVF at full probe, provably ≡ brute force, so it
-    hash-checks against plain quantized-cosine SQL; the approximate
-    (pruned/LSH) behavior is pinned in tests/test_similarity.py."""
+    """DuckDB SQL for every registry entry (same keys as queries()). The KG
+    pipeline and tagger entries are hash-checked against a staged parquet
+    of the single-process golden run; the CoNLL reader against a DuckDB
+    re-parse of the same fixture file."""
     from char_ner_spark.driver_queries import build_oracle_sql
 
     return build_oracle_sql()

@@ -28,7 +28,6 @@ _EXPORTS = {
     "run_pipeline": "pipeline",
     "extract_text_df": "pipeline",
     "tag_pages": "pipeline",
-    "link_mentions": "pipeline",
     "link_pairs": "pipeline",
     "extract_triples": "pipeline",
     "connected_components": "pipeline",
@@ -57,21 +56,6 @@ _EXPORTS = {
     "read_conll": "sources",
     # evaluation
     "span_f1": "evaluation",
-    # similarity / ANN
-    "cosine_topk": "similarity",
-    "lsh_topk": "similarity",
-    "ivf_topk": "similarity",
-    "ivf_topk_e6": "similarity",
-    "write_ivf_index": "similarity",
-    "ivf_topk_from_index": "similarity",
-    "cosine_near_dups": "similarity",
-    "embedding_near_dup_groups": "similarity",
-    # corpus dedup (cross-engine SQL)
-    "simhash_sql": "dedup",
-    "minhash_bands_sql": "dedup",
-    "simhash_near_dup_sql": "dedup",
-    "near_dup_groups": "dedup",
-    "write_shingle_index": "dedup",
     # text ops / linking primitives
     "extract_text": "textops",
     "normalize_surface": "textops",
@@ -80,10 +64,6 @@ _EXPORTS = {
     "AliasIndex": "linking",
     "normalize_gap": "relations",
     "match_middles": "relations",
-    "auto_lsh_params": "similarity",
-    # multimodal plumbing
-    "extract_media_features": "multimodal",
-    "sample_video_frames": "multimodal",
 }
 
 __all__ = sorted(_EXPORTS) + ["__version__"]

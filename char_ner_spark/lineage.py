@@ -188,9 +188,6 @@ def table_checksum(df: DataFrame) -> tuple[int, str]:
     return int(h["n"]), format((int(h["s"] or 0)) & 0xFFFFFFFFFFFFFFFF, "016x")
 
 
-# historical name (round-1/2 surface); triples was the only sink then
-triples_checksum = table_checksum
-
 #: parts up to this size are checksummed in one task: the aggregate then
 #: needs no shuffle, so the checksum is one Spark job instead of a map
 #: stage plus a result stage. Spark's default per-file open cost — below

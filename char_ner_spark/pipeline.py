@@ -414,36 +414,6 @@ def alias_spark_tables(spark: SparkSession, alias_pdf: pd.DataFrame) -> dict[str
     return {"bands": spark.createDataFrame(bands_pdf)}
 
 
-def link_mentions(mentions: DataFrame, alias_tables: dict[str, DataFrame]) -> DataFrame:
-    """mentions → + (entity_id, link_score), nulls for unlinkable.
-
-    Scale design: candidates depend only on the normalized surface (the
-    contextual signal enters through the alias prior), and distinct surfaces
-    follow a Zipf law — orders of magnitude fewer than mentions at
-    Common-Crawl scale. So candidate generation + top-1 selection run on
-    ``DISTINCT surface_norm`` (tiny), then a single equi-join (AQE-tuned,
-    skew-salted by construction since hot surfaces are one row here) maps
-    the result back onto the mention stream. Exact matches use a broadcast
-    hash join; the rest go through the banded MinHash-LSH join."""
-    surfaces = mentions.select("surface").distinct().localCheckpoint()
-    best = best_links(surfaces, alias_tables)
-    return mentions.join(
-        F.broadcast(_raw_winner_map(surfaces, best)), "surface", "left"
-    )
-
-
-def _raw_winner_map(surfaces: DataFrame, best: DataFrame) -> DataFrame:
-    """per-NORM winners → per-RAW-surface winners, all on the tiny distinct
-    surface set; two raw surfaces sharing a normal form both pick up its
-    winner. The single definition of the linking projection (link_mentions
-    and link_pairs must not drift)."""
-    return (
-        surfaces.withColumn("surface_norm", _norm_col(F.col("surface")))
-        .join(best, "surface_norm", "inner")
-        .select("surface", "entity_id", "link_score")
-    )
-
-
 def best_links(surfaces: DataFrame, alias_tables: dict[str, DataFrame]) -> DataFrame:
     """DISTINCT surfaces → (surface_norm, entity_id, link_score) winners.
 
@@ -531,47 +501,6 @@ def _worker_alias_index(bc, fp):
     return idx
 
 
-def best_links_broadcast(spark: SparkSession, surfaces: DataFrame,
-                         alias_pdf: pd.DataFrame) -> DataFrame:
-    """Per-surface winners via a broadcast AliasIndex probe — ONE stage.
-
-    north_rule fixes the alias dictionary as broadcastable, so candidate
-    generation + scoring + top-1 collapse into a single mapInPandas over
-    the (tiny, Zipf-deduped) distinct-surface set, probing the exact same
-    AliasIndex the oracle uses. :func:`best_links` remains the distributed
-    LSH-join path for dictionaries beyond broadcast size (tested equal)."""
-    bc, fp = _alias_broadcast(spark, alias_pdf)  # fp ships in the closure
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = _worker_alias_index(bc, fp)
-        for pdf in batches:
-            # vectorized probe: exact winners are precomputed dict lookups,
-            # MinHash banding for the non-exact remainder is one batched
-            # ndarray pass (linking.AliasIndex.link_batch)
-            sns = pdf["surface_norm"].tolist()
-            hits = idx.link_batch(sns, already_norm=True)
-            rows = {"surface_norm": [], "entity_id": [], "link_score": []}
-            for sn, hit in zip(sns, hits):
-                if hit is not None:
-                    rows["surface_norm"].append(sn)
-                    rows["entity_id"].append(hit[0])
-                    rows["link_score"].append(hit[1])
-            out = pd.DataFrame(rows)
-            out["entity_id"] = out["entity_id"].astype("int64")
-            out["link_score"] = out["link_score"].astype("float64")
-            yield out
-
-    schema = T.StructType(
-        [
-            T.StructField("surface_norm", T.StringType()),
-            T.StructField("entity_id", T.LongType()),
-            T.StructField("link_score", T.DoubleType()),
-        ]
-    )
-    norm = surfaces.select(_norm_col(F.col("surface")).alias("surface_norm")).distinct()
-    return norm.mapInPandas(gen, schema=schema)
-
-
 def link_pairs(mentions: DataFrame, alias_tables: dict[str, DataFrame],
                alias_pdf: pd.DataFrame | None = None,
                broadcast_max_rows: int = 5_000_000) -> DataFrame:
@@ -638,11 +567,18 @@ def link_pairs(mentions: DataFrame, alias_tables: dict[str, DataFrame],
         )
     else:
         # dictionary beyond broadcast budget (or none supplied): the
-        # distributed banded-LSH join path — identical winners by the
-        # best_links ≡ best_links_broadcast path-equality contract
+        # distributed banded-LSH join path — identical winners to the
+        # broadcast probe (test_link_pairs_broadcast_budget_fallback_identical)
         surfaces = surfaces.localCheckpoint()  # feeds the LSH join AND the raw map
         best = best_links(surfaces, alias_tables)
-        raw_map = _raw_winner_map(surfaces, best).localCheckpoint()
+        # per-NORM winners → per-RAW-surface winners: two raw surfaces
+        # sharing a normal form both pick up its winner
+        raw_map = (
+            surfaces.withColumn("surface_norm", _norm_col(F.col("surface")))
+            .join(best, "surface_norm", "inner")
+            .select("surface", "entity_id", "link_score")
+            .localCheckpoint()
+        )
     # materialized ONCE — it feeds two broadcast joins, and broadcasting a
     # plan re-executes it per join otherwise. Lifetime: these per-call
     # localCheckpoint caches (surfaces + raw_map, both tiny distinct-surface

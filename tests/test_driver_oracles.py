@@ -1,11 +1,13 @@
-"""Parity tests for the lazy (fixture-staging) DuckDB oracles added to the
-driver contract: the CoNLL reader re-parse and the media byte-stat verifier.
-These mirror the driver's compare (sorted columns, order-insensitive rows)
-so a change to either side fails here before it fails the round gate."""
+"""Parity tests for the driver contract: every ``queries()`` entry run on
+Spark equals its ``oracle_sql()`` run on DuckDB. These mirror the driver's
+compare (sorted columns, order-insensitive rows) so a change to either side
+fails here before it fails the round gate."""
 
 import duckdb
 import pandas as pd
 import pytest
+
+from __spark_entry__ import oracle_sql, queries
 
 
 def _canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -22,55 +24,16 @@ def duck():
     con.close()
 
 
-def test_conll_oracle_reparses_identically(spark, sf_dir, duck):
-    from char_ner_spark.driver_queries import _conll_duck_sql, _fn_conll_reader
-
-    sdf = _fn_conll_reader(spark, sf_dir).toPandas()
-    odf = duck.sql(_conll_duck_sql()).df()
-    a, b = _canon(sdf), _canon(odf)
-    assert len(a) == len(b) > 0
-    pd.testing.assert_frame_equal(a, b)
+@pytest.fixture(scope="module")
+def oracles():
+    return oracle_sql()
 
 
-def test_media_oracle_matches_byte_stats(spark, sf_dir, duck):
-    from char_ner_spark.driver_queries import _fn_media_features, _media_duck_sql
-
-    sdf = _fn_media_features(spark, sf_dir).toPandas()
-    odf = duck.sql(_media_duck_sql()).df()
-    a, b = _canon(sdf), _canon(odf)
-    assert len(a) == len(b) == 96
-    pd.testing.assert_frame_equal(a, b)
-    # payload_hex equality proves binary columns cross Arrow byte-identically
-    assert sdf.payload_hex.str.len().ge(128).all()
-
-
-def test_media_fixture_parquet_is_stable(tmp_path):
-    """Re-generating the staged fixture yields byte-identical content (the
-    oracle depends on the staged file being deterministic)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from char_ner_spark.multimodal import make_media_fixture
-
-    a = make_media_fixture(96, seed=42)
-    b = make_media_fixture(96, seed=42)
-    ta = pa.Table.from_pandas(a, preserve_index=False)
-    tb = pa.Table.from_pandas(b, preserve_index=False)
-    assert ta.equals(tb)
-    p = tmp_path / "media.parquet"
-    pq.write_table(ta, p)
-    assert pq.read_table(p).equals(ta)
-
-
-def test_kg_gold_staged_oracle_matches_spark(spark, sf_dir, duck):
-    """The staged single-process golden run (kg gold parquet) must equal the
-    distributed tagger query bit-for-bit — the driver-side evidence for the
-    flagship KG path (triples share the same staging + projection and are
-    covered by tools/check_contract.py)."""
-    from char_ner_spark.driver_queries import _fn_kg_mentions, _kg_mentions_duck_sql
-
-    sdf = _fn_kg_mentions(spark, sf_dir).toPandas()
-    odf = duck.sql(_kg_mentions_duck_sql()).df()
+@pytest.mark.parametrize("name", sorted(queries()))
+def test_entry_matches_oracle(name, spark, sf_dir, duck, oracles):
+    assert set(queries()) == set(oracles)
+    sdf = queries()[name](spark, sf_dir).toPandas()
+    odf = duck.sql(oracles[name]).df()
     a, b = _canon(sdf), _canon(odf)
     assert len(a) == len(b) > 0
     pd.testing.assert_frame_equal(a, b)

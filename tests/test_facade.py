@@ -25,4 +25,4 @@ def test_dir_lists_facade():
     import char_ner_spark as C
 
     d = dir(C)
-    assert "run_pipeline" in d and "read_table" in d and "ivf_topk" in d
+    assert "run_pipeline" in d and "read_table" in d and "link_pairs" in d

@@ -92,26 +92,6 @@ def test_edges_graph_shape(spark_out):
     assert (e.weight > 0).all()
 
 
-def test_link_paths_equivalent(spark, corpus):
-    """Broadcast AliasIndex probe == distributed LSH join, surface for surface."""
-    from pyspark.sql import functions as F
-
-    from char_ner_spark.pipeline import (
-        alias_spark_tables, best_links, best_links_broadcast, tag_pages,
-    )
-
-    alias, pages_pdf = corpus
-    pages = spark.createDataFrame(pages_pdf)
-    surfaces = tag_pages(pages).select("surface").distinct()
-    at = alias_spark_tables(spark, alias)
-    lsh = best_links(surfaces, at).toPandas()
-    bcast = best_links_broadcast(spark, surfaces, alias).toPandas()
-    key = lambda df: {
-        r.surface_norm: (r.entity_id, round(r.link_score, 9)) for r in df.itertuples()
-    }
-    assert key(lsh) == key(bcast)
-
-
 def test_link_pairs_broadcast_budget_fallback_identical(spark, corpus):
     """A dictionary past broadcast_max_rows must fall back to the
     distributed LSH path with IDENTICAL links (the path-equality contract,
