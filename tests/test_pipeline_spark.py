@@ -92,6 +92,35 @@ def test_edges_graph_shape(spark_out):
     assert (e.weight > 0).all()
 
 
+def test_link_paths_equivalent(spark, corpus):
+    """Broadcast AliasIndex probe == distributed LSH join, surface for
+    surface: the index link_pairs ships to its workers, probed with the
+    JVM-normalized surfaces, picks best_links' winner for every surface."""
+    from pyspark.sql import functions as F
+
+    from char_ner_spark.linking import AliasIndex
+    from char_ner_spark.pipeline import (
+        _norm_col, alias_spark_tables, best_links, tag_pages,
+    )
+
+    alias, pages_pdf = corpus
+    pages = spark.createDataFrame(pages_pdf)
+    surfaces = tag_pages(pages).select("surface").distinct()
+    at = alias_spark_tables(spark, alias)
+    lsh = best_links(surfaces, at).toPandas()
+    norms = [
+        r.surface_norm
+        for r in surfaces.select(_norm_col(F.col("surface")).alias("surface_norm"))
+        .distinct()
+        .collect()
+    ]
+    hits = AliasIndex(alias).link_batch(norms, already_norm=True)
+    bcast = {sn: (h[0], round(h[1], 9)) for sn, h in zip(norms, hits) if h is not None}
+    assert {
+        r.surface_norm: (r.entity_id, round(r.link_score, 9)) for r in lsh.itertuples()
+    } == bcast
+
+
 def test_link_pairs_broadcast_budget_fallback_identical(spark, corpus):
     """A dictionary past broadcast_max_rows must fall back to the
     distributed LSH path with IDENTICAL links (the path-equality contract,

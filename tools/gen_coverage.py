@@ -36,8 +36,8 @@ def generated_block() -> str:
         "## Registry (auto-generated — do not edit by hand)",
         "",
         f"All {len(names)} `queries()` entries; *oracle* = has a DuckDB",
-        "`oracle_sql()` twin (rows + schema + value-hash checked by the",
-        "driver at sf0.01 and by `tools/check_contract.py`).",
+        "`oracle_sql()` twin (rows + schema + values checked by the",
+        "driver and by tests/test_driver_oracles.py).",
         "",
         "| # | query | oracle |",
         "|---|---|---|",
