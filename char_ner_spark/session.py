@@ -8,6 +8,17 @@ Centralizes the configs SURVEY.md §4.2 pins down:
   - shuffle partitions sized for the local core count (multi-executor
     clusters override via spark-submit --conf)
   - python worker reuse so broadcast model weights load once per worker
+  - the driver JVM compiles with C1 only (``DRIVER_JIT_OPTIONS``). A
+    local session's driver JVM runs the whole engine and lives for a few
+    operations; with the JVM default, C2 compiling Spark's own planner
+    and executor code took about half of an operation's CPU. The trade:
+    once C2 has compiled the hot code (about eight builds into a
+    session), an operation runs faster under the JVM default. The flags
+    are a ``defaultJavaOptions`` entry, so a caller's ``extraJavaOptions``
+    still apply, and ``extra_conf={"spark.driver.defaultJavaOptions": ""}``
+    restores the JVM default. Executors keep the default: on a cluster
+    they are long-lived, which is where C2 pays off. Under spark-submit
+    the driver JVM starts before this code runs, so it keeps the default.
 
 ``local_frame`` builds the driver-side frames (template table, remaps,
 typed empty frames) so they plan as a JVM ``LocalTableScan``.
@@ -34,6 +45,12 @@ from pyspark.sql.types import DataType, StructType
 #: Memory stays bounded: 2048 pages ≈ 2 MB of html in, ~13k mention rows
 #: out per batch.
 ARROW_BATCH_ROWS = 2048
+
+#: the driver JVM's JIT profile (see the module docstring). C1 only makes
+#: the JVM shrink its code cache from 240 MB to 48 MB, which Spark's code
+#: fills after about eight builds in one session; the JVM then flushes
+#: and recompiles methods every build, so the size is set back.
+DRIVER_JIT_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
 
 
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
@@ -82,6 +99,7 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

@@ -98,10 +98,6 @@ def flatten_grads(g: dict[str, np.ndarray]) -> np.ndarray:
     return np.concatenate([g[k].ravel() for k in PARAM_KEYS])
 
 
-def param_sizes(w: dict[str, np.ndarray]) -> list[tuple[str, tuple[int, ...]]]:
-    return [(k, w[k].shape) for k in PARAM_KEYS]
-
-
 def unflatten(vec: np.ndarray, w: dict[str, np.ndarray]) -> dict[str, np.ndarray]:
     out: dict[str, np.ndarray] = {}
     pos = 0

@@ -1,14 +1,18 @@
 """Spark-job budget of the commit protocol, agreement of the O(1)
 copy-on-write snapshots with the parts on disk, and outputs holding a
 leftover ``_lineage`` manifest, whose rows (from the Spark writer of older
-outputs or the driver-side pyarrow writer) commit state no longer reads.
+outputs or the driver-side pyarrow writer) commit state no longer reads;
+also the driver JVM options ``session.build_session`` starts with.
 
 Jobs are counted per call through a job group: once the listener bus has
 drained, the status tracker lists every job the group issued."""
 
 import datetime as dt
 import itertools
+import json
 import os
+import subprocess
+import sys
 
 import pandas as pd
 import pytest
@@ -269,3 +273,53 @@ def test_default_driver_memory(tmp_path, meminfo, want):
     f.write_text("MemFree: 1 kB\n" + meminfo)
     assert default_driver_memory(str(f)) == want
     assert default_driver_memory(str(tmp_path / "missing")) == "16g"
+
+
+def _jvm_args(spark) -> list[str]:
+    mx = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    return list(mx.getInputArguments())
+
+
+#: prints the driver JVM's input arguments of a fresh build_session
+_FRESH_JVM_ARGS = """
+import json, sys
+from char_ner_spark.session import build_session
+spark = build_session("jvm_args", master="local[1]",
+                      extra_conf=json.loads(sys.argv[1]))
+mx = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+print(json.dumps(list(mx.getInputArguments())))
+spark.stop()
+"""
+
+
+def _fresh_jvm_args(tmp_path, extra_conf: dict[str, str]) -> list[str]:
+    """Input arguments of the driver JVM a new process builds: the shared
+    test session's JVM already runs, so its options cannot change."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (repo, os.environ.get("PYTHONPATH")) if p))
+    res = subprocess.run(
+        [sys.executable, "-c", _FRESH_JVM_ARGS, json.dumps(extra_conf)],
+        capture_output=True, text=True, env=env, cwd=tmp_path, timeout=300)
+    assert res.returncode == 0, res.stderr[-3000:]
+    return json.loads(res.stdout.strip().splitlines()[-1])
+
+
+#: the driver JIT profile build_session sets: C1 only, full code cache
+JIT_PROFILE = {"-XX:TieredStopAtLevel=1", "-XX:ReservedCodeCacheSize=240m"}
+
+
+def test_driver_jit_profile(spark):
+    assert JIT_PROFILE <= set(_jvm_args(spark))
+
+
+def test_driver_jit_profile_keeps_extra_options(tmp_path):
+    args = _fresh_jvm_args(
+        tmp_path, {"spark.driver.extraJavaOptions": "-Xms256m"})
+    assert JIT_PROFILE | {"-Xms256m"} <= set(args)
+
+
+def test_driver_jit_profile_override(tmp_path):
+    args = _fresh_jvm_args(tmp_path, {"spark.driver.defaultJavaOptions": ""})
+    assert not any("TieredStopAtLevel" in a or "ReservedCodeCacheSize" in a
+                   for a in args)
