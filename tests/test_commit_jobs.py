@@ -305,8 +305,11 @@ def _fresh_jvm_args(tmp_path, extra_conf: dict[str, str]) -> list[str]:
     return json.loads(res.stdout.strip().splitlines()[-1])
 
 
-#: the driver JIT profile build_session sets: C1 only, full code cache
-JIT_PROFILE = {"-XX:TieredStopAtLevel=1", "-XX:ReservedCodeCacheSize=240m"}
+#: the driver JIT profile build_session sets: C1 only, the tiered code
+#: cache size, deeper C1 inlining
+JIT_PROFILE = {"-XX:TieredStopAtLevel=1", "-XX:ReservedCodeCacheSize=240m",
+               "-XX:C1MaxInlineSize=70", "-XX:C1InlineStackLimit=10",
+               "-XX:C1MaxInlineLevel=15"}
 
 
 def test_driver_jit_profile(spark):
@@ -321,5 +324,5 @@ def test_driver_jit_profile_keeps_extra_options(tmp_path):
 
 def test_driver_jit_profile_override(tmp_path):
     args = _fresh_jvm_args(tmp_path, {"spark.driver.defaultJavaOptions": ""})
-    assert not any("TieredStopAtLevel" in a or "ReservedCodeCacheSize" in a
-                   for a in args)
+    flags = {f.split("=")[0] for f in JIT_PROFILE}
+    assert not any(a.split("=")[0] in flags for a in args)
