@@ -64,9 +64,6 @@ _EXPORTS = {
     "AliasIndex": "linking",
     "normalize_gap": "relations",
     "match_middles": "relations",
-    # multimodal plumbing
-    "extract_media_features": "multimodal",
-    "sample_video_frames": "multimodal",
 }
 
 __all__ = sorted(_EXPORTS) + ["__version__"]

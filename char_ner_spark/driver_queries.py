@@ -19,10 +19,6 @@ Contract invariants (learned in round 1):
   - no array-typed output columns — the driver's canonicalizer sorts
     column values in pandas and lists are unhashable; arrays are projected
     to space-joined strings.
-
-The media byte-stat pair (``_fn_media_features`` / ``_media_duck_sql``)
-follows the same contract but stays out of the registry: it checks
-``multimodal``'s decoders, not KG code.
 """
 
 from __future__ import annotations
@@ -221,224 +217,6 @@ def _conll_duck_sql() -> str:
            string_agg(cols[1], ' ' ORDER BY line_id) AS tokens_str,
            string_agg(cols[-1], ' ' ORDER BY line_id) AS tags_str
     FROM toks GROUP BY sent_id
-    """
-
-
-# Media byte-stat check. Not a registry entry (the registry holds KG checks
-# only); tests/test_driver_oracles.py still holds the Spark side of
-# multimodal's decoders equal to this DuckDB recomputation.
-
-def _fn_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal binary-column pipeline (SURVEY §2.11; REAL pure-NumPy
-    BMP/WAV/AVI decode as of round 5 — every fixture format except the
-    deliberately-opaque compressed-container rows decodes for real). The
-    fixture is staged as parquet so DuckDB can read the same bytes; the
-    Spark side runs the production decoders inside mapInPandas and emits
-    integer-exact columns the oracle recomputes from the raw payload plus
-    the fixture's format contract:
-
-    - ``payload_hex`` proves the binary column crossed Arrow byte-identically;
-    - ``img_w``/``img_h``/``n_samples``/``sample_rate``/``n_frames``/
-      ``frame_ms`` come from the REAL header parse (BMP DIB / WAV fmt
-      chunk / AVI avih + chunk walk) — the oracle derives them from the
-      fixture's metadata columns and the canonical 54/44/232-byte header
-      layouts, so a wrong parse hash-mismatches;
-    - ``hist16`` is the high-nibble histogram of the DECODED content
-      (pixel array for images, int16 samples for audio, stacked RGB frame
-      array for uncompressed-AVI video, raw payload for the opaque
-      compressed-container rows) — the oracle recomputes it from the
-      payload's content byte range(s) (nibble histograms are
-      permutation-invariant, so BGR-bottom-up file order vs RGB-top-down
-      array order agree exactly; for AVI the ranges are the per-frame
-      '00db' pixel regions at the canonical encoder layout);
-    - thumb dims come from the actually-resized decoded pixels.
-
-    The float32 feature + sha256 surface is covered in
-    tests/test_multimodal.py (float normalization isn't reproducible
-    bit-exactly in double-precision SQL, so it stays out of the hash)."""
-    import binascii
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    from .multimodal import decode_audio, decode_image, decode_video, is_avi, resize_image
-
-    media = spark.read.parquet(_media_fixture_path())
-
-    verify_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("n_bytes", T.LongType()),
-            T.StructField("hist16", T.StringType()),
-            T.StructField("payload_hex", T.StringType()),
-            T.StructField("img_w", T.IntegerType()),
-            T.StructField("img_h", T.IntegerType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("frame_ms", T.IntegerType()),
-            T.StructField("thumb_w", T.IntegerType()),
-            T.StructField("thumb_h", T.IntegerType()),
-        ]
-    )
-
-    def verify_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in verify_schema.fields}
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                img_w = img_h = n_samp = rate = thumb_w = thumb_h = None
-                n_frames = frame_ms = None
-                if kind == "image":
-                    img = decode_image(b)  # REAL BMP decode, no fake fallback
-                    content = img.tobytes()
-                    img_h, img_w = int(img.shape[0]), int(img.shape[1])
-                    thumb = resize_image(img, 8, 8)
-                    thumb_w, thumb_h = int(thumb.shape[1]), int(thumb.shape[0])
-                elif kind == "audio":
-                    samples, rate, _ch = decode_audio(b)  # REAL PCM decode
-                    content = samples.tobytes()
-                    n_samp, rate = int(samples.size), int(rate)
-                elif kind == "video" and is_avi(b):
-                    frames, fms = decode_video(b)  # REAL AVI decode
-                    content = frames.tobytes()
-                    n_frames, frame_ms = int(frames.shape[0]), int(fms)
-                    img_h, img_w = int(frames.shape[1]), int(frames.shape[2])
-                else:  # compressed-container video: content = raw payload
-                    content = b
-                arr = np.frombuffer(content, dtype=np.uint8)
-                hist = np.bincount(arr >> 4, minlength=16)
-                rows["media_id"].append(int(mid))
-                rows["kind"].append(kind)
-                rows["n_bytes"].append(len(b))
-                rows["hist16"].append(",".join(str(int(x)) for x in hist))
-                rows["payload_hex"].append(binascii.hexlify(b).decode())
-                rows["img_w"].append(img_w)
-                rows["img_h"].append(img_h)
-                rows["n_samples"].append(n_samp)
-                rows["sample_rate"].append(rate)
-                rows["n_frames"].append(n_frames)
-                rows["frame_ms"].append(frame_ms)
-                rows["thumb_w"].append(thumb_w)
-                rows["thumb_h"].append(thumb_h)
-            yield pd.DataFrame(rows)
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        verify_batches, schema=verify_schema
-    )
-
-
-def _media_fixture_path() -> str:
-    """Stage the deterministic media fixture as a parquet file both engines
-    read (Spark via spark.read.parquet, DuckDB via read_parquet)."""
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from . import multimodal
-    from .multimodal import make_media_fixture
-
-    path = os.path.join(
-        tempfile.gettempdir(),
-        # pinned round-6-start fingerprint of multimodal.py (oracle SQL text
-        # embeds this path and is frozen for the optimization round; bump
-        # the literal to _code_fp(multimodal) on an intentional semantic
-        # change — see _kg_gold_paths)
-        "char_ner_spark_media_fixture_abe82a621bb4.parquet",
-    )
-    if not os.path.exists(path):
-        # atomic stage: a killed/concurrent first writer must never leave a
-        # half-written parquet at the final path (exists() would then skip
-        # regeneration forever)
-        pdf = make_media_fixture(96, seed=42)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), tmp)
-        os.replace(tmp, path)
-    return path
-
-
-def _media_duck_sql() -> str:
-    """Lazy oracle for the REAL-decode media query: recompute every column
-    from the staged parquet bytes plus the fixture's format contract —
-    images are canonical 54-byte-header pad-free 24-bit BMPs (pixel region
-    = bytes 55..54+3wh, dims = the fixture's metadata columns, which the
-    Spark side must REDISCOVER by parsing the actual DIB header), audio is
-    canonical 44-byte-header PCM16 mono WAV at 8 kHz (sample region =
-    bytes 45.., n_samples = (len-44)/2, rate = 8000 — Spark must parse the
-    fmt chunk to match), video with metadata dims is a canonical-layout
-    uncompressed AVI (n_frames = duration_ms/1000 pad-free 24-bit DIB
-    frames of 3wh bytes each, frame k's pixel region starting at byte
-    offset 232 + k*(3wh+8) per multimodal.AVI_FRAME0_OFFSET — Spark must
-    walk the real chunk tree to match), and dim-less video rows are
-    opaque compressed containers (content = whole payload). hist16 is the
-    high-nibble histogram of the content range(s) (hex-digit trick: the
-    high nibble of 0-based byte j is hex char 2j+1, 1-based); nibble
-    histograms are permutation-invariant, so the oracle's file-order bytes
-    equal Spark's decoded-array-order bytes exactly."""
-    path = _media_fixture_path()
-    return f"""
-    WITH m AS (
-        SELECT media_id, kind, payload, lower(hex(payload)) AS h,
-               CAST(octet_length(payload) AS BIGINT) AS len,
-               CASE WHEN kind = 'image' THEN 54
-                    WHEN kind = 'audio' THEN 44
-                    WHEN kind = 'video' AND width IS NOT NULL THEN 232
-                    ELSE 0 END AS off,
-               CASE WHEN kind = 'image' OR (kind = 'video' AND width IS NOT NULL)
-                         THEN 3 * CAST(width AS BIGINT) * CAST(height AS BIGINT)
-                    WHEN kind = 'audio'
-                         THEN CAST(octet_length(payload) AS BIGINT) - 44
-                    ELSE CAST(octet_length(payload) AS BIGINT) END AS clen,
-               CASE WHEN kind = 'video' AND width IS NOT NULL
-                    THEN CAST(duration_ms AS BIGINT) // 1000
-                    ELSE 1 END AS nf,
-               CASE WHEN kind = 'video' AND width IS NOT NULL
-                    THEN 3 * CAST(width AS BIGINT) * CAST(height AS BIGINT) + 8
-                    ELSE 0 END AS stride,
-               CAST(width AS INTEGER) AS meta_w, CAST(height AS INTEGER) AS meta_h,
-               CAST(duration_ms AS BIGINT) AS duration_ms
-        FROM read_parquet('{path}')),
-    regions AS (
-        SELECT media_id, h, off + unnest(range(0, nf)) * stride AS roff, clen
-        FROM m),
-    idx AS (
-        SELECT media_id, h, unnest(range(roff + 1, roff + clen + 1)) AS i
-        FROM regions),
-    digits AS (
-        SELECT media_id,
-               strpos('0123456789abcdef', substring(h, CAST(2*i - 1 AS INTEGER), 1)) - 1 AS v
-        FROM idx),
-    counts AS (SELECT media_id, v, COUNT(*) AS n FROM digits GROUP BY media_id, v),
-    bins AS (
-        SELECT m.media_id, b.v AS v, COALESCE(c.n, 0) AS n
-        FROM m CROSS JOIN (SELECT unnest(range(0, 16)) AS v) b
-        LEFT JOIN counts c ON c.media_id = m.media_id AND c.v = b.v),
-    hists AS (
-        SELECT media_id, string_agg(CAST(n AS VARCHAR), ',' ORDER BY v) AS hist16
-        FROM bins GROUP BY media_id)
-    SELECT m.media_id, m.kind, m.len AS n_bytes,
-           hists.hist16, m.h AS payload_hex,
-           CASE WHEN m.kind = 'image'
-                     OR (m.kind = 'video' AND m.meta_w IS NOT NULL)
-                THEN m.meta_w END AS img_w,
-           CASE WHEN m.kind = 'image'
-                     OR (m.kind = 'video' AND m.meta_w IS NOT NULL)
-                THEN m.meta_h END AS img_h,
-           CASE WHEN m.kind = 'audio'
-                THEN CAST((m.len - 44) // 2 AS INTEGER) END AS n_samples,
-           CASE WHEN m.kind = 'audio' THEN 8000 END AS sample_rate,
-           CASE WHEN m.kind = 'video' AND m.meta_w IS NOT NULL
-                THEN CAST(m.duration_ms // 1000 AS INTEGER) END AS n_frames,
-           CASE WHEN m.kind = 'video' AND m.meta_w IS NOT NULL
-                THEN 1000 END AS frame_ms,
-           CASE WHEN m.kind = 'image' THEN 8 END AS thumb_w,
-           CASE WHEN m.kind = 'image' THEN 8 END AS thumb_h
-    FROM m JOIN hists ON m.media_id = hists.media_id
     """
 
 

@@ -575,12 +575,6 @@ def write_snapshot(spark: SparkSession, out_dir: str, n_parts: int | None,
         with open(tmp, "w") as f:
             f.write(str(n))
         os.replace(tmp, os.path.join(meta, "current"))
-        if table == "triples":
-            # keep the legacy flat summary too (round-1 surface)
-            with open(os.path.join(out_dir, "snapshot.json"), "w") as f:
-                json.dump({"table": "triples", "n_parts": n_parts,
-                           "completed": snap["completed"]}, f, indent=1,
-                          sort_keys=True)
         if retain is not None:
             expire_snapshots(out_dir, table=table, keep_last=retain)
     return n

@@ -22,6 +22,7 @@ import multiprocessing
 import os
 import shutil
 import sys
+import threading
 from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
@@ -104,6 +105,26 @@ def _copy(src, dst):
     return str(dst)
 
 
+def _parts_of(old, triples_pdf):
+    """{canonical id: the triples parts it occurs in}."""
+    parts_of: dict[int, set] = {}
+    for r in triples_pdf.itertuples():
+        for c in (r.subj, r.obj):
+            if c in old.values():
+                parts_of.setdefault(int(c), set()).add(int(r.part_id))
+    return parts_of
+
+
+def _bridge_delta(alias, old, merged, keep):
+    """A one-alias delta giving canonical id ``merged``'s entity an alias
+    of ``keep``'s, so a dictionary update merges ``merged`` into ``keep``."""
+    member = {c: eid for eid, c in sorted(old.items(), reverse=True)}
+    alias_of = dict(zip(alias["entity_id"], alias["alias"]))
+    return pd.DataFrame(
+        [(member[merged], "Bridge Corp", alias_of[member[keep]], "en", 0.5,
+          "ORG")], columns=list(alias.columns))
+
+
 def _remap_touching_parts(spark, alias, triples_pdf):
     """The remap of a one-alias delta merging the canonical id found in
     the most triples parts into a smaller id, so the update rewrites
@@ -112,21 +133,13 @@ def _remap_touching_parts(spark, alias, triples_pdf):
     from char_ner_spark.pipeline import build_dictionary_state
 
     old = union_find_canonical(alias)
-    parts_of: dict[int, set] = {}
-    for r in triples_pdf.itertuples():
-        for c in (r.subj, r.obj):
-            if c in old.values():
-                parts_of.setdefault(int(c), set()).add(int(r.part_id))
+    parts_of = _parts_of(old, triples_pdf)
     merged = max(sorted(parts_of), key=lambda c: len(parts_of[c]))
     keep = min(parts_of)
     assert keep < merged and len(parts_of[merged]) >= 2
-    member = {c: eid for eid, c in sorted(old.items(), reverse=True)}
-    alias_of = dict(zip(alias["entity_id"], alias["alias"]))
-    delta = pd.DataFrame(
-        [(member[merged], "Bridge Corp", alias_of[member[keep]], "en", 0.5,
-          "ORG")], columns=list(alias.columns))
     _, remap = update_dictionary_state(
-        spark, build_dictionary_state(spark, alias), alias, delta)
+        spark, build_dictionary_state(spark, alias), alias,
+        _bridge_delta(alias, old, merged, keep))
     return remap
 
 
@@ -242,6 +255,90 @@ def test_update_crash_between_tables(spark, kg, tmp_path, monkeypatch):
     monkeypatch.undo()
     apply_dictionary_update(spark, d, kg["remap"])
     assert _tables(spark, d) == kg["clean"]["update"]
+
+
+@pytest.mark.xfail(strict=True, raises=AssertionError,
+                   reason="two concurrent updates both take part id "
+                          "max + 1 from the snapshot they read and "
+                          "overwrite one part directory (ROADMAP item 10: "
+                          "claim part ids under one KG commit)")
+def test_concurrent_updates_keep_both_deltas(spark, kg, tmp_path,
+                                             monkeypatch):
+    """Two updates with different one-alias deltas read the same base
+    snapshot, then write one after the other. Every retained triples
+    snapshot must still read the bytes it recorded, and the final KG must
+    carry both remaps."""
+    from char_ner_spark import incremental
+    from char_ner_spark.pipeline import build_dictionary_state
+
+    alias = kg["alias"]
+    old = union_find_canonical(alias)
+    parts_of = _parts_of(old, lineage.read_triples(spark, kg["build"])
+                         .toPandas())
+    # merged ids whose triples lie in disjoint parts, so neither update's
+    # edges rewrite reads a triples part the other one rewrote
+    ma, mb = next((a, b) for a in sorted(parts_of, reverse=True)
+                  for b in sorted(parts_of, reverse=True)
+                  if a > b and not parts_of[a] & parts_of[b])
+    ka, kb = sorted(set(old.values()) - {ma, mb})[:2]
+    assert ka < ma and kb < mb
+    state = build_dictionary_state(spark, alias)
+    remaps = [incremental.update_dictionary_state(
+        spark, state, alias, _bridge_delta(alias, old, m, k))[1]
+        for m, k in ((ma, ka), (mb, kb))]
+
+    # each writer's first part pruning comes right after it read the
+    # triples snapshot: hold both there, then let writer-0 finish first
+    barrier = threading.Barrier(2, timeout=120)
+    first_done = threading.Event()
+    prune = incremental._prune_parts_by_stats
+    held = set()
+
+    def held_after_snapshot_read(*a, **kw):
+        me = threading.current_thread().name
+        if me not in held:
+            held.add(me)
+            barrier.wait()
+            if me == "writer-1":
+                first_done.wait(120)
+        return prune(*a, **kw)
+
+    monkeypatch.setattr(incremental, "_prune_parts_by_stats",
+                        held_after_snapshot_read)
+    d = _copy(kg["build"], tmp_path / "kg")
+    errors = []
+
+    def update(i):
+        try:
+            incremental.apply_dictionary_update(spark, d, remaps[i])
+        except BaseException as e:  # re-raised on the test thread
+            errors.append(e)
+        finally:
+            if i == 0:
+                first_done.set()
+
+    writers = [threading.Thread(target=update, args=(i,), name=f"writer-{i}")
+               for i in (0, 1)]
+    for w in writers:
+        w.start()
+    for w in writers:
+        w.join()
+    if errors:
+        raise errors[0]
+
+    base, prefix = lineage._table_base(d, "triples")
+    for sid in range(lineage.current_snapshot(d)["snapshot_id"] + 1):
+        for p in lineage.current_snapshot(d, sid)["manifest"]:
+            if p["rows"] > 0:
+                assert lineage.table_checksum(lineage.read_parts(
+                    spark, f"{base}/{prefix}={p['part_id']}")) == (
+                    p["rows"], p["checksum"]), (sid, p["part_id"])
+    want = lineage.read_triples(spark, kg["build"]).drop("part_id")
+    for remap in remaps:
+        want = incremental.recanonicalize_triples(want, remap)
+    assert lineage.table_checksum(
+        lineage.read_triples(spark, d).drop("part_id")) == \
+        lineage.table_checksum(want)
 
 
 def test_units_without_mentions_commit(spark, tmp_path):

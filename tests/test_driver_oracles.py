@@ -1,6 +1,5 @@
 """Parity tests for the driver contract: every ``queries()`` entry run on
-Spark equals its ``oracle_sql()`` run on DuckDB, and so does the media
-byte-stat check that stays outside the registry. These mirror the driver's
+Spark equals its ``oracle_sql()`` run on DuckDB. These mirror the driver's
 compare (sorted columns, order-insensitive rows) so a change to either side
 fails here before it fails the round gate."""
 
@@ -61,33 +60,3 @@ def test_kg_gold_staged_oracle_matches_spark(spark, sf_dir, duck, oracles):
     distributed tagger query bit-for-bit — the driver-side evidence for the
     flagship KG path."""
     _assert_entry_matches_oracle("kg_mentions_fixture", spark, sf_dir, duck, oracles)
-
-
-def test_media_oracle_matches_byte_stats(spark, sf_dir, duck):
-    from char_ner_spark.driver_queries import _fn_media_features, _media_duck_sql
-
-    sdf = _fn_media_features(spark, sf_dir).toPandas()
-    odf = duck.sql(_media_duck_sql()).df()
-    a, b = _canon(sdf), _canon(odf)
-    assert len(a) == len(b) == 96
-    pd.testing.assert_frame_equal(a, b)
-    # payload_hex equality proves binary columns cross Arrow byte-identically
-    assert sdf.payload_hex.str.len().ge(128).all()
-
-
-def test_media_fixture_parquet_is_stable(tmp_path):
-    """Re-generating the staged fixture yields byte-identical content (the
-    oracle depends on the staged file being deterministic)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from char_ner_spark.multimodal import make_media_fixture
-
-    a = make_media_fixture(96, seed=42)
-    b = make_media_fixture(96, seed=42)
-    ta = pa.Table.from_pandas(a, preserve_index=False)
-    tb = pa.Table.from_pandas(b, preserve_index=False)
-    assert ta.equals(tb)
-    p = tmp_path / "media.parquet"
-    pq.write_table(ta, p)
-    assert pq.read_table(p).equals(ta)

@@ -58,6 +58,7 @@ def _run_job(zpath: str, pages_dir: str, out_dir: str, *extra: str) -> dict:
 
 
 def test_spark_submit_job_runs_and_resumes(spark, tmp_path):
+    from char_ner_spark import lineage
     from char_ner_spark.fixtures import make_alias_table, make_pages
 
     pages_dir = str(tmp_path / "pages")
@@ -71,7 +72,8 @@ def test_spark_submit_job_runs_and_resumes(spark, tmp_path):
     first = _run_job(zpath, pages_dir, out_dir)
     assert first["units_run"] == 3 and first["units_total"] == 3
     assert first["triples"] > 0
-    assert os.path.exists(os.path.join(out_dir, "snapshot.json"))
+    snap = lineage.current_snapshot(out_dir)
+    assert snap is not None and snap["completed"] == [0, 1, 2]
     assert os.path.exists(os.path.join(out_dir, "entities"))
     assert os.path.exists(os.path.join(out_dir, "edges"))
 

@@ -28,7 +28,7 @@ os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", required=True, help="pages parquet dir (url, warc_ts, html, text, lang)")
-    ap.add_argument("--out", required=True, help="output dir (triples/ and the other sinks, metadata/ snapshot log, snapshot.json)")
+    ap.add_argument("--out", required=True, help="output dir (triples/ and the other sinks, metadata/ snapshot log)")
     ap.add_argument("--alias-parquet", default=None,
                     help="alias dictionary parquet; default: seeded fixture dictionary")
     ap.add_argument("--n-parts", type=int, default=16, help="resumable work units")
