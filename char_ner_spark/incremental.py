@@ -25,10 +25,17 @@ delta:
   directories, so time-travel reads are unaffected and
   :func:`~char_ner_spark.lineage.gc_orphan_parts` reclaims the old copies
   only after every snapshot referencing them has expired.
+
+* :func:`relink_parts` — the removal side: re-derive the affected parts'
+  triples from the mentions sink, through the same copy-on-write loop
+  (each triples part followed by its edges part, then one snapshot
+  pointer flip per table, triples before edges).
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 
 import pandas as pd
@@ -184,21 +191,12 @@ def _incremental_canon_driver(
     sized by contract — the dictionary itself already is, north_rule).
     The old canonical map is collected once: dictionary-scale, the same
     budget alias_spark_tables spends building the broadcast join table."""
-    canon_pdf = old_canon.toPandas()
-    old_map = dict(
-        zip(canon_pdf["entity_id"].astype("int64"),
-            canon_pdf["canonical_id"].astype("int64"))
-    )
-    new_map, remap_rows = _incremental_canon_pure(old_map, old_alias_pdf,
-                                                  new_alias_pdf)
-    remap = local_frame(spark, remap_rows, REMAP_DDL)
-    items = sorted(new_map.items())
-    new_canon = spark.createDataFrame(
-        pd.DataFrame({"entity_id": [k for k, _ in items],
-                      "canonical_id": [v for _, v in items]}),
-        schema="entity_id long, canonical_id long",
-    )
-    return new_canon, remap
+    from .pipeline import canon_dict, canon_frame
+
+    new_map, remap_rows = _incremental_canon_pure(
+        canon_dict(old_canon), old_alias_pdf, new_alias_pdf)
+    return canon_frame(spark, new_map), local_frame(spark, remap_rows,
+                                                    REMAP_DDL)
 
 
 def _incremental_canon_distributed(
@@ -399,6 +397,108 @@ def _prune_parts_by_stats(base: str, prefix: str, pids: list[int],
     return keep
 
 
+def _rewrite_parts(
+    spark: SparkSession,
+    out_dir: str,
+    tables: list[str],
+    rewrites: dict[str, tuple],
+    keys: set[int],
+    retain: int | None,
+) -> dict[str, dict]:
+    """The copy-on-write loop behind :func:`apply_dictionary_update` and
+    :func:`relink_parts`. ``rewrites`` maps each table to rewrite to
+    ``(key_cols, rewrite)``; ``tables`` lists the sinks under ``out_dir``.
+
+    Each table's snapshot is read once, and that one read drives its part
+    pruning, its part-id claim and its commit. With ``key_cols``, the live
+    parts holding one of ``keys`` in those columns are found (footer-stats
+    pruning, then one semi-join over the surviving candidates) and each is
+    committed as a fresh part ``rewrite(old_pid)``. Without, one part
+    ``rewrite(None)`` supersedes every live part: the unit-invariant
+    entities dimension. When the KG has an edges sink, each rewritten
+    triples part is followed by its edges part, under the same new part id
+    and derived from the triples bytes just committed. Parts commit
+    without a snapshot; only once every part is written does each table
+    commit one snapshot (triples before edges), so a crash before the
+    first pointer flip publishes nothing and a re-run redoes the update.
+
+    Raises before writing anything if a live edges part is not a live
+    triples part: edges derive from triples, so the sinks diverged (a
+    crash between the triples and the edges pointer flips leaves that).
+    """
+    from .pipeline import edges_from_triples
+
+    follow = "triples" in rewrites and "edges" in tables
+    order = list(rewrites)
+    if follow:
+        order.insert(order.index("triples") + 1, "edges")
+    snaps = {t: lineage.current_snapshot(out_dir, table=t) for t in order}
+    live = {t: sorted(p["part_id"] for p in snaps[t].get("manifest", [])
+                      if p.get("rows", 1) > 0) for t in order}
+    if follow and not set(live["edges"]) <= set(live["triples"]):
+        raise RuntimeError(
+            f"edges parts {sorted(set(live['edges']) - set(live['triples']))} "
+            "are not live triples parts; sinks are out of sync")
+    entries: dict[str, list[dict]] = {t: [] for t in order}
+    written: dict[str, list[tuple[int, int]]] = {t: [] for t in order}
+
+    def commit(table: str, pid: int, df: DataFrame, old_pids: list[int]):
+        entries[table] += map(lineage._snapshot_entry, lineage.commit_part(
+            spark, out_dir, table, pid, df, supersedes=old_pids,
+            snapshot=False))
+        written[table] += [(old, pid) for old in old_pids]
+
+    for table, (key_cols, rewrite) in rewrites.items():
+        if not live[table]:
+            continue
+        # stream_triples: micro-batch ids are an open-ended sequence owned
+        # by the streaming checkpoint, so a resumed stream would claim
+        # max+1 next and dynamic-overwrite the rewritten part. Rewrites
+        # live in a disjoint id range instead (still int32 — batch_id
+        # partition values are inferred as int). Batch sinks keep clear of
+        # every deterministic ingest range (see the constants)
+        next_pid = max(
+            max(p["part_id"] for p in snaps[table]["manifest"]) + 1,
+            _STREAM_REWRITE_PID_BASE if table == "stream_triples"
+            else _BATCH_REWRITE_PID_BASE)
+        if key_cols is None:
+            commit(table, next_pid, rewrite(None), live[table])
+            continue
+        # Iceberg-style two-phase pruning: footer min/max stats drop every
+        # part whose id ranges can't contain a key (no data IO), then the
+        # exact semi-join scans only the surviving candidates —
+        # O(metadata) + O(candidate parts), never a full table scan
+        base, prefix = lineage._table_base(out_dir, table)
+        candidates = _prune_parts_by_stats(base, prefix, live[table],
+                                           key_cols, keys)
+        if not candidates:
+            continue
+        parts = lineage.read_parts(
+            spark, *[f"{base}/{prefix}={p}" for p in candidates], base=base)
+        ids = F.broadcast(local_frame(spark, [(k,) for k in sorted(keys)],
+                                      "key long"))
+        hit = functools.reduce(operator.or_,
+                               [parts[c] == ids["key"] for c in key_cols])
+        affected = sorted(r[prefix] for r in parts.join(ids, hit, "leftsemi")
+                          .select(prefix).distinct().collect())
+        for old_pid in affected:
+            commit(table, next_pid, rewrite(old_pid), [old_pid])
+            if table == "triples" and follow:
+                commit("edges", next_pid, edges_from_triples(
+                    lineage.committed_triples(spark, out_dir, next_pid)),
+                    [old_pid])
+            next_pid += 1
+    stats: dict[str, dict] = {}
+    for table in order:
+        if written[table]:
+            n = lineage.write_snapshot(spark, out_dir,
+                                       snaps[table].get("n_parts"),
+                                       table=table, add_parts=entries[table],
+                                       retain=retain)
+            stats[table] = {"rewritten": written[table], "snapshot_id": n}
+    return stats
+
+
 def relink_parts(
     spark: SparkSession,
     out_dir: str,
@@ -418,10 +518,9 @@ def relink_parts(
     entity its mention actually matched. Re-linking the affected parts'
     mentions against the reduced dictionary recomputes exactly what a
     from-scratch run would produce (test-enforced), while untouched parts
-    are never read (footer-stats pruning + semi-join, same as
-    :func:`apply_dictionary_update`). Commits are copy-on-write with the
-    same tombstone protocol and one snapshot per table, so time travel and
-    crashes behave identically. Pass ``canon_ids`` from
+    are never read. The pruning, the copy-on-write commits and the
+    snapshots are :func:`apply_dictionary_update`'s (one shared loop), so
+    time travel and crashes behave identically. Pass ``canon_ids`` from
     :func:`~char_ner_spark.removal.stale_canonical_ids` (∪ the split
     piece ids, conservatively).
 
@@ -429,8 +528,8 @@ def relink_parts(
     entities dimension is refreshed from ``alias_pdf`` + the new canon
     when the sink exists.
     """
-    from .pipeline import (edges_from_triples, entities_table,
-                           extract_triples, link_pairs, middles_table)
+    from .pipeline import (entities_table, extract_triples, link_pairs,
+                           middles_table)
 
     tables = lineage.snapshot_tables(out_dir)
     for need in ("mentions", "triples"):
@@ -441,86 +540,27 @@ def relink_parts(
             )
     if not canon_ids:
         return {}
-    snap = lineage.current_snapshot(out_dir, table="triples")
-    manifest = [p for p in snap.get("manifest", []) if p.get("rows", 1) > 0]
-    if not manifest:
-        return {}
-    base, prefix = lineage._table_base(out_dir, "triples")
-    pids = sorted(p["part_id"] for p in manifest)
-    candidates = _prune_parts_by_stats(base, prefix, pids, ("subj", "obj"),
-                                       set(canon_ids))
-    affected: list[int] = []
-    if candidates:
-        live = lineage.read_parts(
-            spark, *[f"{base}/{prefix}={p}" for p in candidates], base=base)
-        ids_df = F.broadcast(spark.createDataFrame(
-            pd.DataFrame({"cid": sorted(canon_ids)}), schema="cid long"))
-        affected = sorted(
-            r[prefix]
-            for r in live.join(ids_df, (live.subj == F.col("cid"))
-                               | (live.obj == F.col("cid")), "leftsemi")
-            .select(prefix).distinct().collect()
-        )
-    stats: dict[str, dict] = {}
-    if affected:
-        next_pid = max(max(p["part_id"] for p in snap["manifest"]) + 1,
-                       _BATCH_REWRITE_PID_BASE)
-        middles = middles_table(spark)
-        mbase, _ = lineage._table_base(out_dir, "mentions")
-        written = {"triples": [], "edges": []}
-        entries = {"triples": [], "edges": []}
-        for old_pid in affected:
-            mdir = f"{mbase}/{prefix}={old_pid}"
-            if not os.path.isdir(mdir):
-                raise FileNotFoundError(
-                    f"mentions part {old_pid} missing at {mdir}; cannot "
-                    "re-link its triples"
-                )
-            mentions = lineage.read_parts(spark, mdir).drop("part_id")
-            linked = link_pairs(mentions,
-                                {"bands": dict_state["bands"]},
-                                alias_pdf=alias_pdf)
-            new_triples = extract_triples(linked, dict_state["canon"],
-                                          middles)
-            entries["triples"] += map(
-                lineage._snapshot_entry, lineage.commit_part(
-                    spark, out_dir, "triples", next_pid, new_triples,
-                    supersedes=[old_pid], snapshot=False))
-            written["triples"].append((old_pid, next_pid))
-            if "edges" in tables:
-                entries["edges"] += map(
-                    lineage._snapshot_entry, lineage.commit_part(
-                        spark, out_dir, "edges", next_pid,
-                        edges_from_triples(lineage.committed_triples(
-                            spark, out_dir, next_pid)),
-                        supersedes=[old_pid], snapshot=False))
-                written["edges"].append((old_pid, next_pid))
-            next_pid += 1
-        for t, w in written.items():
-            if w:
-                n = lineage.write_snapshot(spark, out_dir,
-                                           snap.get("n_parts"), table=t,
-                                           add_parts=entries[t],
-                                           retain=retain)
-                stats[t] = {"rewritten": w, "snapshot_id": n}
+    middles = middles_table(spark)
+    mbase, prefix = lineage._table_base(out_dir, "mentions")
+
+    def relinked(old_pid: int) -> DataFrame:
+        mdir = f"{mbase}/{prefix}={old_pid}"
+        if not os.path.isdir(mdir):
+            raise FileNotFoundError(
+                f"mentions part {old_pid} missing at {mdir}; cannot "
+                "re-link its triples"
+            )
+        mentions = lineage.read_parts(spark, mdir).drop(prefix)
+        linked = link_pairs(mentions, {"bands": dict_state["bands"]},
+                            alias_pdf=alias_pdf)
+        return extract_triples(linked, dict_state["canon"], middles)
+
+    rewrites = {"triples": (("subj", "obj"), relinked)}
     if "entities" in tables:
-        esnap = lineage.current_snapshot(out_dir, table="entities")
-        old_pids = sorted(p["part_id"] for p in esnap.get("manifest", [])
-                          if p.get("rows", 1) > 0)
-        if old_pids:
-            epid = max(max(p["part_id"] for p in esnap["manifest"]) + 1,
-                       _BATCH_REWRITE_PID_BASE)
-            ents = lineage.commit_part(
-                spark, out_dir, "entities", epid,
-                entities_table(spark, alias_pdf, dict_state["canon"]),
-                supersedes=old_pids, snapshot=False)
-            n = lineage.write_snapshot(
-                spark, out_dir, esnap.get("n_parts"), table="entities",
-                add_parts=[*map(lineage._snapshot_entry, ents)],
-                retain=retain)
-            stats["entities"] = {"rewritten": [(p, epid) for p in old_pids],
-                                 "snapshot_id": n}
-    return stats
+        rewrites["entities"] = (None, lambda _: entities_table(
+            spark, alias_pdf, dict_state["canon"]))
+    return _rewrite_parts(spark, out_dir, tables, rewrites, set(canon_ids),
+                          retain)
 
 
 def apply_dictionary_update(
@@ -540,12 +580,14 @@ def apply_dictionary_update(
     every untouched old one; previously committed snapshots keep
     referencing the old directories, so pinned time-travel reads see
     exactly the pre-update table. Superseded parts are tombstoned in the
-    new snapshot (rows=0 — readers already skip zero-row parts). Each
-    table's rewrite commits as one snapshot, so a crash mid-table publishes
-    nothing for that table, and a re-run redoes it from the unchanged
-    snapshot. Old directories become orphans once the snapshots
-    referencing them expire; reclaim with
-    :func:`~char_ner_spark.lineage.gc_orphan_parts`.
+    new snapshot (rows=0 — readers already skip zero-row parts). No
+    snapshot is written until every part of the update is, then each
+    table commits one, so a crash before the first pointer flip publishes
+    nothing and a re-run redoes the update from the unchanged snapshots.
+    A crash between two tables' pointer flips is still a window: the
+    re-run finds the edges sink out of sync with triples and raises.
+    Old directories become orphans once the snapshots referencing them
+    expire; reclaim with :func:`~char_ner_spark.lineage.gc_orphan_parts`.
 
     * ``triples`` / ``stream_triples`` — :func:`recanonicalize_triples`
       per part. Part-local distinct is globally correct: work units
@@ -553,18 +595,18 @@ def apply_dictionary_update(
       pages file to exactly one micro-batch), so a (url, sent_idx)
       collision never spans parts. Stream rewrites take part ids from a
       range disjoint from the streaming checkpoint's batch-id sequence.
-    * ``edges`` — re-DERIVED from the rewritten triples part (remapping
-      edge weights directly would double-count triples that collapse
-      under the merge, because partial weights lose the per-triple key).
-      Requires the triples sink; raises if ``out_dir`` has edges but no
-      triples.
+    * ``edges`` — re-DERIVED from each rewritten triples part, under its
+      part id (remapping edge weights directly would double-count triples
+      that collapse under the merge, because partial weights lose the
+      per-triple key). Requires the triples sink; raises if ``out_dir``
+      has edges but no triples.
     * ``entities`` — canonical_id remap; pass ``alias_pdf`` + ``canon``
       to refresh the dimension with the delta's new entities too.
 
     Returns ``{table: {"rewritten": [(old_pid, new_pid), ...],
     "snapshot_id": N}}``.
     """
-    from .pipeline import edges_from_triples, entities_table
+    from .pipeline import entities_table
 
     tables = lineage.snapshot_tables(out_dir)
     if "edges" in tables and "triples" not in tables:
@@ -575,119 +617,44 @@ def apply_dictionary_update(
         )
     # the remap to the driver in ONE action: bounded by touched components
     # (the same broadcast-sized contract the per-part joins rely on). Its
-    # keys drive the footer-stats pruning below, and the per-part joins
-    # read it back as a local relation instead of recomputing the CC
+    # keys drive the part pruning, and the per-part joins read it back as
+    # a local relation instead of recomputing the CC
     remap_pdf = remap.toPandas()
     if len(remap_pdf) == 0 and alias_pdf is None:
         return {}
     remap = local_frame(spark, remap_pdf, REMAP_DDL)
-    remap_keys = {int(k) for k in remap_pdf["old_canonical_id"]}
-    stats: dict[str, dict] = {}
-    rewritten_triples: dict[int, int] = {}  # old part → its rewrite
 
-    for table in tables:
-        if table not in ("triples", "stream_triples", "edges", "entities"):
-            continue  # the mentions sink carries no canonical ids
-        snap = lineage.current_snapshot(out_dir, table=table)
-        manifest = [p for p in snap.get("manifest", []) if p.get("rows", 1) > 0]
-        if not manifest:
-            continue
-        next_pid = max(p["part_id"] for p in snap["manifest"]) + 1
-        if table == "stream_triples":
-            # micro-batch ids are an open-ended sequence owned by the
-            # streaming checkpoint: a resumed stream would claim max+1 next
-            # and dynamic-overwrite the rewritten part. Rewrites live in a
-            # disjoint id range instead (still int32 — batch_id partition
-            # values are inferred as int)
-            next_pid = max(next_pid, _STREAM_REWRITE_PID_BASE)
-        else:
-            # keep clear of every deterministic ingest range (see constant)
-            next_pid = max(next_pid, _BATCH_REWRITE_PID_BASE)
+    def remapped(table: str):
         base, prefix = lineage._table_base(out_dir, table)
-        written: list[tuple[int, int]] = []
-        entries: list[dict] = []
-        if table == "entities" and alias_pdf is not None and canon is not None:
+
+        def rewrite(old_pid: int) -> DataFrame:
+            part = lineage.read_parts(
+                spark, f"{base}/{prefix}={old_pid}").drop("part_id")
+            if table != "entities":
+                return recanonicalize_triples(part, remap)
+            return (
+                part.join(F.broadcast(remap),
+                          part.canonical_id == remap.old_canonical_id, "left")
+                .withColumn("canonical_id",
+                            F.coalesce("new_canonical_id", "canonical_id"))
+                .select(*part.columns)
+            )
+        return rewrite
+
+    rewrites: dict[str, tuple] = {}
+    for table in tables:
+        if table in ("triples", "stream_triples"):
+            rewrites[table] = (("subj", "obj"), remapped(table))
+        elif table == "entities" and alias_pdf is not None \
+                and canon is not None:
             # full dimension refresh (new entities entered the dictionary):
             # ONE new part supersedes every old one — the dimension is
             # unit-invariant, run_partitioned writes it as a single part
-            old_pids = sorted(p["part_id"] for p in manifest)
-            entries += map(lineage._snapshot_entry, lineage.commit_part(
-                spark, out_dir, "entities", next_pid,
-                entities_table(spark, alias_pdf, canon),
-                supersedes=old_pids, snapshot=False))
-            written = [(p, next_pid) for p in old_pids]
-        else:
-            key_cols = {"triples": ("subj", "obj"),
-                        "stream_triples": ("subj", "obj"),
-                        "edges": ("src", "dst"),
-                        "entities": ("canonical_id",)}[table]
-            # Iceberg-style two-phase pruning: footer min/max stats drop
-            # every part whose id ranges can't contain a remapped id (no
-            # data IO), then the exact semi-join scans only the surviving
-            # candidates — O(metadata) + O(candidate parts), never a full
-            # table scan to locate the delta
-            pids = sorted(p["part_id"] for p in manifest)
-            candidates = _prune_parts_by_stats(base, prefix, pids, key_cols,
-                                               remap_keys)
-            if not candidates:
-                continue
-            live = lineage.read_parts(
-                spark, *[f"{base}/{prefix}={p}" for p in candidates],
-                base=base)
-            if table == "edges":
-                cond = ((live.src == remap.old_canonical_id)
-                        | (live.dst == remap.old_canonical_id))
-            elif table == "entities":
-                cond = live.canonical_id == remap.old_canonical_id
-            else:
-                cond = ((live.subj == remap.old_canonical_id)
-                        | (live.obj == remap.old_canonical_id))
-            affected = sorted(
-                r[prefix]
-                for r in live.join(F.broadcast(remap), cond, "leftsemi")
-                .select(prefix).distinct().collect()
-            )
-            for old_pid in affected:
-                part_df = lineage.read_parts(
-                    spark, f"{base}/{prefix}={old_pid}").drop("part_id")
-                if table == "stream_triples":
-                    # per-part distinct is globally safe for the stream too:
-                    # the file source delivers each pages file to exactly one
-                    # micro-batch, so a url never spans batch partitions
-                    new_df = recanonicalize_triples(part_df, remap)
-                elif table == "triples":
-                    new_df = recanonicalize_triples(part_df, remap)
-                    rewritten_triples[old_pid] = next_pid
-                elif table == "edges":
-                    if old_pid not in rewritten_triples:
-                        # edges derive from triples, so a remap that hits an
-                        # edges part must have hit the matching triples part
-                        # — anything else means the sinks diverged; fail loud
-                        raise RuntimeError(
-                            f"edges part {old_pid} affected but the triples "
-                            "part was not rewritten; sinks are out of sync"
-                        )
-                    new_df = edges_from_triples(lineage.committed_triples(
-                        spark, out_dir, rewritten_triples[old_pid]))
-                else:
-                    new_df = (
-                        part_df.join(
-                            F.broadcast(remap),
-                            part_df.canonical_id == remap.old_canonical_id,
-                            "left")
-                        .withColumn("canonical_id",
-                                    F.coalesce("new_canonical_id",
-                                               "canonical_id"))
-                        .select(*part_df.columns)
-                    )
-                entries += map(lineage._snapshot_entry, lineage.commit_part(
-                    spark, out_dir, table, next_pid, new_df,
-                    supersedes=[old_pid], snapshot=False))
-                written.append((old_pid, next_pid))
-                next_pid += 1
-        if written:
-            n = lineage.write_snapshot(spark, out_dir, snap.get("n_parts"),
-                                       table=table, add_parts=entries,
-                                       retain=retain)
-            stats[table] = {"rewritten": written, "snapshot_id": n}
-    return stats
+            rewrites[table] = (None, lambda _: entities_table(
+                spark, alias_pdf, canon))
+        elif table == "entities":
+            rewrites[table] = (("canonical_id",), remapped(table))
+        # edges follow their triples part; mentions carry no canonical ids
+    return _rewrite_parts(spark, out_dir, tables, rewrites,
+                          {int(k) for k in remap_pdf["old_canonical_id"]},
+                          retain)

@@ -704,7 +704,8 @@ def read_table(spark: SparkSession, out_dir: str, table: str,
                snapshot_id: int | None = None) -> DataFrame:
     """Read any snapshotted sink via its pointer (pin ``snapshot_id`` for
     time travel); falls back to a directory glob when no snapshot exists.
-    Zero-row parts are skipped — a replayed streaming micro-batch that
+    The parts are read through :func:`read_parts`, so the read launches
+    no schema-inference job. Zero-row parts are skipped — a replayed streaming micro-batch that
     converged to empty commits rows=0 with NO partition directory on disk
     (the replay removed the stale one), so its path must not reach the
     reader."""
@@ -736,7 +737,7 @@ def read_table(spark: SparkSession, out_dir: str, table: str,
                 return local_frame(spark, [], StructType.fromJson(
                     json.loads(snap["schema_json"])))
             return spark.read.option("basePath", base).parquet(base).limit(0)
-        return spark.read.option("basePath", base).parquet(*paths)
+        return read_parts(spark, *paths, base=base)
     return spark.read.option("basePath", base).parquet(
         os.path.join(base, f"{prefix}=*")
     )

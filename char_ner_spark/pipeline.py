@@ -869,6 +869,25 @@ def entities_table(spark: SparkSession, alias_pdf: pd.DataFrame,
 # ---------------------------------------------------------------------------
 
 
+def canon_frame(spark: SparkSession, canon_map: dict[int, int]) -> DataFrame:
+    """``{entity_id: canonical_id}`` as the canonical-map frame
+    (``entity_id long, canonical_id long``, sorted by entity id)."""
+    items = sorted(canon_map.items())
+    return spark.createDataFrame(
+        pd.DataFrame({"entity_id": [k for k, _ in items],
+                      "canonical_id": [v for _, v in items]}),
+        schema="entity_id long, canonical_id long",
+    )
+
+
+def canon_dict(canon: DataFrame) -> dict[int, int]:
+    """The canonical-map frame collected to ``{entity_id: canonical_id}``:
+    dictionary-scale, one collect."""
+    pdf = canon.toPandas()
+    return dict(zip(pdf["entity_id"].astype("int64"),
+                    pdf["canonical_id"].astype("int64")))
+
+
 def build_dictionary_state(
     spark: SparkSession,
     alias_pdf: pd.DataFrame,
@@ -889,17 +908,7 @@ def build_dictionary_state(
 
     alias_tables = alias_spark_tables(spark, alias_pdf)
     if len(alias_pdf) <= cc_distributed_threshold:
-        canon_map = union_find_canonical(alias_pdf)
-        items = sorted(canon_map.items())
-        canon = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "entity_id": [k for k, _ in items],
-                    "canonical_id": [v for _, v in items],
-                }
-            ),
-            schema="entity_id long, canonical_id long",
-        )
+        canon = canon_frame(spark, union_find_canonical(alias_pdf))
     else:
         canon = canonical_map(spark.createDataFrame(alias_pdf))
     return {**alias_tables, "canon": canon}

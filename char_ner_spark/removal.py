@@ -52,20 +52,12 @@ def remove_aliases(
     ``union_find_canonical(old minus removed)`` (test-enforced).
     """
     from .incremental import REMAP_DDL
-    from .pipeline import alias_spark_tables
+    from .pipeline import alias_spark_tables, canon_dict, canon_frame
 
-    canon_pdf = dict_state["canon"].toPandas()
-    old_map = dict(zip(canon_pdf["entity_id"].astype("int64"),
-                       canon_pdf["canonical_id"].astype("int64")))
-    new_map, remap_rows, splits = _remove_pure(old_map, old_alias_pdf,
-                                               removed_pdf)
+    new_map, remap_rows, splits = _remove_pure(
+        canon_dict(dict_state["canon"]), old_alias_pdf, removed_pdf)
     remap = local_frame(spark, sorted(set(remap_rows)), REMAP_DDL)
-    items = sorted(new_map.items())
-    new_canon = spark.createDataFrame(
-        pd.DataFrame({"entity_id": [k for k, _ in items],
-                      "canonical_id": [v for _, v in items]}),
-        schema="entity_id long, canonical_id long",
-    )
+    new_canon = canon_frame(spark, new_map)
     # bands: delta-proportional anti-join (same incrementality as the
     # additive side) — removal is keyed by (entity_id, normalized alias),
     # so prior is excluded from the key and every matching row goes
@@ -149,8 +141,8 @@ def stale_canonical_ids(dict_state: dict[str, DataFrame],
     old winner was the removed row (whose canonical id IS a touched id),
     and an unlinked mention can never become linked by a removal. Feed
     the result to :func:`~char_ner_spark.incremental.relink_parts`."""
-    canon_pdf = dict_state["canon"].toPandas()
-    old_map = dict(zip(canon_pdf["entity_id"].astype("int64"),
-                       canon_pdf["canonical_id"].astype("int64")))
+    from .pipeline import canon_dict
+
+    old_map = canon_dict(dict_state["canon"])
     return {old_map[int(e)] for e in removed_pdf["entity_id"]
             if int(e) in old_map}

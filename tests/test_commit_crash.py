@@ -9,7 +9,9 @@ that performs that step:
 * ``pointer`` — after ``snapshot-N.json`` is written, before the
   ``current`` pointer flips (the ``os.replace`` onto ``current``);
 * ``mid_cow`` — between two copy-on-write part commits of one table
-  (``lineage.commit_part``).
+  (``lineage.commit_part``);
+* between an update's triples part and its edges part, and between its
+  triples and edges pointer flips (``lineage.write_snapshot``).
 
 Each is driven through ``run_partitioned``, ``ingest_pages`` and
 ``apply_dictionary_update``. After the crash the operation is resumed or
@@ -239,12 +241,10 @@ def test_update_crash_reruns_to_clean(spark, kg, tmp_path, monkeypatch,
     _assert_pinned_still_read(spark, d, pinned)
 
 
-@pytest.mark.xfail(strict=True, raises=RuntimeError,
-                   reason="an update commits one snapshot per table: after "
-                          "a crash between the triples and the edges "
-                          "snapshot, a re-run finds the sinks out of sync "
-                          "(needs a multi-table commit)")
 def test_update_crash_between_tables(spark, kg, tmp_path, monkeypatch):
+    """Each edges part commits right after its triples part, before any
+    pointer flips, so a crash at the first edges part publishes nothing
+    and the re-run gives the clean update."""
     from char_ner_spark.incremental import apply_dictionary_update
 
     d = _copy(kg["build"], tmp_path / "kg")
@@ -253,6 +253,29 @@ def test_update_crash_between_tables(spark, kg, tmp_path, monkeypatch):
     with pytest.raises(Crash):
         apply_dictionary_update(spark, d, kg["remap"])
     monkeypatch.undo()
+    assert _tables(spark, d) == kg["clean"]["build"]
+    apply_dictionary_update(spark, d, kg["remap"])
+    assert _tables(spark, d) == kg["clean"]["update"]
+
+
+@pytest.mark.xfail(strict=True, raises=RuntimeError,
+                   reason="an update flips one snapshot pointer per table: "
+                          "after a crash between the triples and the edges "
+                          "flip, a re-run finds the sinks out of sync "
+                          "(ROADMAP item 10: one KG commit)")
+def test_update_crash_between_pointer_flips(spark, kg, tmp_path,
+                                            monkeypatch):
+    from char_ner_spark.incremental import apply_dictionary_update
+
+    d = _copy(kg["build"], tmp_path / "kg")
+    _crash_on_call(monkeypatch, lineage, "write_snapshot", 1,
+                   lambda *a, **kw: kw.get("table") == "edges")
+    with pytest.raises(Crash):
+        apply_dictionary_update(spark, d, kg["remap"])
+    monkeypatch.undo()
+    tables = _tables(spark, d)
+    assert tables["edges"] == kg["clean"]["build"]["edges"]
+    assert tables["triples"] == kg["clean"]["update"]["triples"]
     apply_dictionary_update(spark, d, kg["remap"])
     assert _tables(spark, d) == kg["clean"]["update"]
 

@@ -22,10 +22,16 @@ from char_ner_spark.fixtures import make_alias_table, make_pages
 from char_ner_spark.linking import union_find_canonical
 
 #: jobs apply_dictionary_update issues for a one-alias delta on a 1-part
-#: triples + edges KG, measured: 1 to collect the remap, then per table
-#: the semi-join that finds the affected part (2), the rewrite's shuffle
-#: (1–2) and the commit (write + read-back checksum)
-APPLY_JOB_BUDGET = 14
+#: triples + edges KG, measured: 1 to collect the remap, 3 for the one
+#: semi-join that finds the affected triples part, 4 for that part's
+#: commit (the rewrite's query stages with the write, then the read-back
+#: checksum) and EDGES_COMMIT_JOBS for the edges part that follows it
+APPLY_JOB_BUDGET = 11
+
+#: jobs relink_parts issues to re-link the 2 affected parts of a 2-part
+#: triples + edges + mentions + entities KG and refresh its entities,
+#: measured; a grouped rewrite would not grow with the parts rewritten
+RELINK_JOB_BUDGET = 30
 
 #: jobs one work unit's edges commit issues, measured: the edges part is
 #: an aggregate over the unit's committed triples part, so its write is a
@@ -83,6 +89,8 @@ def test_bookkeeping_issues_no_jobs(spark, tmp_path):
     d = str(tmp_path)
     lineage.commit_part(spark, d, "triples", 0, _triples_df(spark),
                         rows_in=3, n_parts=2)
+    _, n = _jobs(spark, lambda: lineage.read_table(spark, d, "triples"))
+    assert n == 0
     _, n = _jobs(spark, lambda: lineage.write_snapshot(
         spark, d, 2, add_part={"part_id": 1, "rows": 2,
                                "checksum": "00000000000000ab"}))
@@ -189,10 +197,25 @@ def test_relink_snapshot_equals_heal(spark, tmp_path):
     state = build_dictionary_state(spark, alias)
     new_state, _, _ = remove_aliases(spark, state, alias, removed)
     reduced = alias.drop(index=removed.index)
-    stats = relink_parts(spark, d, new_state, reduced,
-                         canon_ids=stale_canonical_ids(state, removed))
+    stale = stale_canonical_ids(state, removed)
+    stats, n = _jobs(spark, lambda: relink_parts(
+        spark, d, new_state, reduced, canon_ids=stale))
     assert stats.get("triples", {}).get("rewritten")
+    assert n <= RELINK_JOB_BUDGET, n
     _assert_snapshot_matches_disk(spark, d, stats)
+
+    # an edges pointer left behind the triples one (a crash between the
+    # two pointer flips) is found from the snapshots, before any Spark job
+    edges = lineage.current_snapshot(d, table="edges")
+    with open(os.path.join(lineage._snapshot_dir(d, "edges"), "current"),
+              "w") as f:
+        f.write(str(edges["parent_id"]))
+
+    def relink_out_of_sync():
+        with pytest.raises(RuntimeError, match="out of sync"):
+            relink_parts(spark, d, new_state, reduced, canon_ids=stale)
+
+    assert _jobs(spark, relink_out_of_sync)[1] == 0
 
 
 def _spark_manifest_append(spark, out_dir, rows):

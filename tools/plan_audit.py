@@ -20,11 +20,24 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+#: the run-specific parts of a captured plan: Spark's plan ids and the
+#: random names of the audit's temp directories. Masked, so docs/PLANS.md
+#: changes only when a plan does
+_VOLATILE = [
+    (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
+    (re.compile(r"file:[^\s\],]*/(plan_audit_train_|plan_bgp_)[^/\s\],]+"),
+     r"file:<tmp>/\1<random>"),
+]
+
+
 def fmt(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    text = buf.getvalue()
+    for pattern, mask in _VOLATILE:
+        text = pattern.sub(mask, text)
+    return text
 
 
 def main() -> int:
