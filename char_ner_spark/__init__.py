@@ -30,11 +30,11 @@ _EXPORTS = {
     "tag_pages": "pipeline",
     "link_pairs": "pipeline",
     "extract_triples": "pipeline",
-    "connected_components": "pipeline",
-    "canonical_map": "pipeline",
     "edges_from_triples": "pipeline",
     "entities_table": "pipeline",
     "middles_table": "pipeline",
+    # graph analytics
+    "connected_components": "graph",
     # lineage / snapshots / resume
     "run_partitioned": "lineage",
     "read_table": "lineage",

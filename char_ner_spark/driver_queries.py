@@ -67,9 +67,9 @@ def _kg_gold_paths() -> dict[str, str]:
     # into a spurious text change. Golden SEMANTICS stay guarded by the
     # driver's value-hash gate itself (Spark output vs freshly staged
     # golden run); if those semantics are ever intentionally changed, bump
-    # this literal (`_code_fp(oracle, fixtures, tagger, textops, linking,
-    # relations, spans, driver_queries)` prints the new value) so stale
-    # /tmp stagings from the old semantics cannot be read back.
+    # this literal to the first 12 hex digits of the sha256 over the bytes
+    # of those eight source files, in the order listed, so stale /tmp
+    # stagings from the old semantics cannot be read back.
     code_fp = "089e310dc884"
     tmp = tempfile.gettempdir()
     paths = {
@@ -132,30 +132,18 @@ def _fn_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fn_kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tagger stage alone (extract_text + BiLSTM + Viterbi inside the
-    vectorized UDFs), hash-checked against the golden run's mention table —
+    """Tagger stage alone (extract_text + BiLSTM + Viterbi inside
+    tag_pages' one vectorized UDF), hash-checked against the golden run's mention table —
     scores included (e6 fixed-point; batch composition is provably
     score-invariant, tests/test_tagger_oracle.py)."""
-    from .pipeline import extract_text_df, tag_mentions
+    from .pipeline import tag_pages
 
     alias, pages_pdf = _kg_corpus()
     pages = spark.createDataFrame(pages_pdf)
-    return tag_mentions(extract_text_df(pages)).selectExpr(
+    return tag_pages(pages).selectExpr(
         "url", "sent_idx", "begin", "end", "surface", "ner_type", "lang",
         "CAST(FLOOR(CAST(score AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS score_e6",
     )
-
-
-def _code_fp(*modules) -> str:
-    """Source fingerprint for staged-fixture cache keys (stale /tmp files
-    from a previous code revision must never survive a semantic change)."""
-    import hashlib
-
-    h = hashlib.sha256()
-    for mod in modules:
-        with open(mod.__file__, "rb") as f:
-            h.update(f.read())
-    return h.hexdigest()[:12]
 
 
 def _conll_fixture_path() -> str:

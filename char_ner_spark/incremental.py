@@ -14,8 +14,10 @@ delta:
   dictionary size. Because the canonical id is defined as the MIN entity
   id of a component (a history-independent function of the merged alias
   set), the incremental result provably equals a full recompute — and the
-  tests assert exactly that, against both the driver union-find oracle
-  and the distributed CC path.
+  tests assert exactly that, against the driver union-find oracle. The
+  contracted graph is solved by driver union-find: its inputs are the
+  driver-side alias frames, and the canonical map it updates is collected
+  whole and broadcast anyway.
 
 * :func:`recanonicalize_triples` / :func:`apply_dictionary_update` —
   remap already-materialized triples through the (old → new) canonical-id
@@ -61,12 +63,6 @@ _STREAM_REWRITE_PID_BASE = 1 << 30
 #: pid already manifested and silently skip the unit
 _BATCH_REWRITE_PID_BASE = 1 << 28
 
-#: above this many delta rows the contracted CC runs distributed (same
-#: dispatch rule as build_dictionary_state — the contracted graph is tiny
-#: relative to the dictionary, so the driver path covers even large
-#: dictionaries as long as the DELTA is broadcast-sized)
-CC_DISTRIBUTED_THRESHOLD = 1_000_000
-
 
 def _normed_pairs(alias_pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(
@@ -82,15 +78,14 @@ def incremental_canon(
     old_canon: DataFrame,
     old_alias_pdf: pd.DataFrame,
     new_alias_pdf: pd.DataFrame,
-    cc_distributed_threshold: int = CC_DISTRIBUTED_THRESHOLD,
 ) -> tuple[DataFrame, DataFrame]:
     """Update the canonical map for a dictionary delta.
 
     Returns ``(new_canon, remap)``:
 
     * ``new_canon`` — (entity_id, canonical_id) covering the UNION
-      dictionary, equal to ``canonical_map(old ∪ delta)`` recomputed from
-      scratch (min-entity-id representative is history-independent, so
+      dictionary, equal to ``union_find_canonical(old ∪ delta)`` recomputed
+      from scratch (min-entity-id representative is history-independent, so
       incremental ≡ full; test-enforced).
     * ``remap`` — (old_canonical_id, new_canonical_id), non-identity rows
       only: the contracted nodes whose component gained a smaller member.
@@ -109,15 +104,18 @@ def incremental_canon(
     contract(m) = old canonical id when m is a known entity, else m
     itself. All old members of one alias group share one canonical id
     already, so ONE representative node per touched alias is sufficient —
-    that is what keeps the update O(delta).
+    that is what keeps the update O(delta). The old canonical map is
+    collected once: dictionary-scale, the same budget alias_spark_tables
+    spends building the broadcast join table.
     """
+    from .pipeline import canon_dict, canon_frame
+
     if len(new_alias_pdf) == 0:
         return old_canon, local_frame(spark, [], REMAP_DDL)
-    if len(new_alias_pdf) <= cc_distributed_threshold:
-        return _incremental_canon_driver(spark, old_canon, old_alias_pdf,
-                                         new_alias_pdf)
-    return _incremental_canon_distributed(spark, old_canon, old_alias_pdf,
-                                          new_alias_pdf)
+    new_map, remap_rows = _incremental_canon_pure(
+        canon_dict(old_canon), old_alias_pdf, new_alias_pdf)
+    return canon_frame(spark, new_map), local_frame(spark, remap_rows,
+                                                    REMAP_DDL)
 
 
 def _incremental_canon_pure(
@@ -181,101 +179,11 @@ def _incremental_canon_pure(
     return new_map, remap_rows
 
 
-def _incremental_canon_driver(
-    spark: SparkSession,
-    old_canon: DataFrame,
-    old_alias_pdf: pd.DataFrame,
-    new_alias_pdf: pd.DataFrame,
-) -> tuple[DataFrame, DataFrame]:
-    """Driver union-find over the contracted graph (delta is broadcast-
-    sized by contract — the dictionary itself already is, north_rule).
-    The old canonical map is collected once: dictionary-scale, the same
-    budget alias_spark_tables spends building the broadcast join table."""
-    from .pipeline import canon_dict, canon_frame
-
-    new_map, remap_rows = _incremental_canon_pure(
-        canon_dict(old_canon), old_alias_pdf, new_alias_pdf)
-    return canon_frame(spark, new_map), local_frame(spark, remap_rows,
-                                                    REMAP_DDL)
-
-
-def _incremental_canon_distributed(
-    spark: SparkSession,
-    old_canon: DataFrame,
-    old_alias_pdf: pd.DataFrame,
-    new_alias_pdf: pd.DataFrame,
-) -> tuple[DataFrame, DataFrame]:
-    """Same contraction, as DataFrame ops + the iterative Spark CC — the
-    path for deltas past broadcast size. Parity-tested against the driver
-    path (threshold=0 in tests forces this branch)."""
-    from .pipeline import _norm_col, connected_components
-
-    old_df = spark.createDataFrame(
-        old_alias_pdf[["entity_id", "alias"]]
-    ).select(_norm_col(F.col("alias")).alias("alias_norm"),
-             F.col("entity_id").cast("long").alias("entity_id")).distinct()
-    new_df = spark.createDataFrame(
-        new_alias_pdf[["entity_id", "alias"]]
-    ).select(_norm_col(F.col("alias")).alias("alias_norm"),
-             F.col("entity_id").cast("long").alias("entity_id")).distinct()
-    touched = new_df.select("alias_norm").distinct()
-    # one representative node per touched OLD alias group: every old member
-    # shares one canonical id, min() is just a deterministic pick
-    old_rep = (
-        old_df.join(touched, "alias_norm")
-        .join(old_canon, "entity_id")
-        .groupBy("alias_norm")
-        .agg(F.min("canonical_id").alias("node"))
-    )
-    new_nodes = (
-        new_df.join(old_canon, "entity_id", "left")
-        .select("alias_norm",
-                F.coalesce("canonical_id", "entity_id").alias("node"))
-    )
-    by_norm = new_nodes.union(old_rep.select("alias_norm", "node")).distinct()
-    # contracted star edges per alias group (same shape as alias_edges)
-    mins = by_norm.groupBy("alias_norm").agg(
-        F.min("node").alias("src"), F.count("*").alias("n")
-    )
-    edges = (
-        by_norm.join(mins.filter("n > 1"), "alias_norm")
-        .filter(F.col("node") != F.col("src"))
-        .select("src", F.col("node").alias("dst"))
-        .distinct()
-    )
-    verts = by_norm.select(F.col("node").alias("id")).distinct()
-    cc = connected_components(verts, edges)  # (entity_id=node, canonical_id)
-    remap = (
-        cc.filter(F.col("entity_id") != F.col("canonical_id"))
-        .select(F.col("entity_id").alias("old_canonical_id"),
-                F.col("canonical_id").alias("new_canonical_id"))
-        .localCheckpoint()
-    )
-    relabeled = (
-        old_canon.join(
-            remap, old_canon.canonical_id == remap.old_canonical_id, "left"
-        )
-        .select("entity_id",
-                F.coalesce("new_canonical_id", "canonical_id").alias(
-                    "canonical_id"))
-    )
-    brand_new = (
-        new_df.select("entity_id").distinct()
-        .join(old_canon.select("entity_id"), "entity_id", "left_anti")
-        .join(remap, F.col("entity_id") == remap.old_canonical_id, "left")
-        .select("entity_id",
-                F.coalesce("new_canonical_id", "entity_id").alias(
-                    "canonical_id"))
-    )
-    return relabeled.union(brand_new), remap
-
-
 def update_dictionary_state(
     spark: SparkSession,
     dict_state: dict[str, DataFrame],
     old_alias_pdf: pd.DataFrame,
     new_alias_pdf: pd.DataFrame,
-    cc_distributed_threshold: int = CC_DISTRIBUTED_THRESHOLD,
 ) -> tuple[dict[str, DataFrame], DataFrame]:
     """Dictionary-delta refresh of the unit-invariant pipeline state.
 
@@ -290,9 +198,7 @@ def update_dictionary_state(
     from .pipeline import alias_spark_tables
 
     new_canon, remap = incremental_canon(
-        spark, dict_state["canon"], old_alias_pdf, new_alias_pdf,
-        cc_distributed_threshold=cc_distributed_threshold,
-    )
+        spark, dict_state["canon"], old_alias_pdf, new_alias_pdf)
     delta_bands = alias_spark_tables(spark, new_alias_pdf)["bands"]
     # all-column dedup: identical to rebuilding the table from the union
     # dictionary (re-sent identical rows collapse; genuinely conflicting

@@ -664,10 +664,10 @@ def compact_table(spark: SparkSession, out_dir: str, table: str = "triples",
         files = [f for f in os.listdir(part) if f.endswith(".parquet")]
         if len(files) <= target_files:
             continue
-        live = spark.read.parquet(part)
+        live = read_parts(spark, part)
         before = table_checksum(live)
         live.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-        after = table_checksum(spark.read.parquet(tmp))
+        after = table_checksum(read_parts(spark, tmp))
         if after != before:
             shutil.rmtree(tmp)
             raise RuntimeError(

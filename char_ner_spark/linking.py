@@ -156,7 +156,8 @@ class AliasIndex:
 
 def union_find_canonical(alias_df: pd.DataFrame) -> dict[int, int]:
     """entity_id → canonical_id (min id of its connected component; edges =
-    entities sharing a normalized alias). Oracle for the Spark CC stage."""
+    entities sharing a normalized alias). The canonicalization of both the
+    Spark pipeline (build_dictionary_state) and the oracle."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:

@@ -1,17 +1,16 @@
 """The KG-construction pipeline, expressed Spark-first (SURVEY.md §3.2).
 
-Plan shape (hot path, 3 shuffles):
+Plan shape (hot path):
   pages parquet scan (url,html,lang pruned columns)
-   → mapInPandas extract_text                       [Arrow crossing 1]
-   → repartition(lang, salted url-hash)             [shuffle 1 — lang-pure,
-     sortWithinPartitions(length(text))              skew-defused batches]
-   → mapInPandas tag_mentions                       [Arrow crossing 2]
-   → broadcast-join alias dict (exact) +
-     MinHash-band join (fuzzy, AQE skew-handled)    [shuffle 2 on band keys]
-   → window top-1 candidate per mention
-   → window lead() per sentence → template join     [shuffle 3 on (url,sent)]
-   → broadcast-join canonical map (CC output)
-   → triples
+   → repartition(salted url-hash)                   [shuffle 1 — skew-
+     sortWithinPartitions(length(html))              defused batches]
+   → mapInPandas tag_pages (extract_text + tag)     [Arrow crossing 1]
+   → distinct surfaces → mapInPandas broadcast
+     alias-index probe (link_pairs)                 [Arrow crossing 2]
+   → broadcast-join of each mention and its successor to their links
+   → broadcast-join relation templates on the gap text
+   → broadcast-join canonical map (driver union-find output)
+   → distinct → triples
 
 All Python crossings are Arrow-vectorized (no per-row Python —
 BASELINE.json input_hint). The pure semantics live in textops/tagger/
@@ -69,7 +68,7 @@ def extract_text_df(pages: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# stage 2: tag_mentions (fused M1+M2+M4+M5; SURVEY §2.9)
+# stage 2: tag_pages (fused extract + M1+M2+M4+M5; SURVEY §2.9)
 # ---------------------------------------------------------------------------
 
 _MENTION_SCHEMA = T.StructType(
@@ -145,14 +144,6 @@ def _tag_pdf(pdf: pd.DataFrame,
                 out["next_gap"].append(sent[e : nxt[0]] if nxt else None)
                 out["next_surface"].append(sent[nxt[0] : nxt[1]] if nxt else None)
     return pd.DataFrame(out)
-
-
-def _tag_batches_fn(weights_map: dict[str, dict] | None = None):
-    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _tag_pdf(pdf, weights_map)
-
-    return go
 
 
 def _tag_pages_batches_fn(weights_map: dict[str, dict] | None = None):
@@ -287,24 +278,12 @@ def _resolve_salt(df: DataFrame, salt: int | str) -> tuple[DataFrame, int]:
     return df, derived
 
 
-def tag_mentions(extracted: DataFrame, salt: int | str = 16,
-                 weights_map: dict[str, dict] | None = None) -> DataFrame:
-    """(url, text, lang) → mentions. Salted lang repartition keeps batches
-    language-homogeneous (per-lang weight dispatch, north_star) while
-    defusing host/domain/lang skew; length sort minimizes padding waste."""
-    extracted, salt = _resolve_salt(extracted.select("url", "text", "lang"), salt)
-    return (
-        _salted_repartition(extracted, salt)
-        .sortWithinPartitions(F.length("text"))
-        .mapInPandas(_tag_batches_fn(weights_map), schema=_MENTION_SCHEMA)
-    )
-
-
 def tag_pages(pages: DataFrame, salt: int | str = 16,
               weights_map: dict[str, dict] | None = None) -> DataFrame:
     """pages(url, html, lang) → mentions, extracting text inside the same
-    UDF (used by run_pipeline; extract_text_df stays the byte-identity
-    surface). html length is the padding-sort proxy for text length.
+    UDF: the tagger's one batch entry point (extract_text_df stays the
+    byte-identity surface). html length is the padding-sort proxy for
+    text length.
     salt="auto" derives the value from measured domain skew
     (:func:`derive_salt`) and logs the evidence through observe; the
     default stays a fixed seed because the per-row url-hash key is
@@ -599,117 +578,7 @@ def link_pairs(mentions: DataFrame, alias_tables: dict[str, DataFrame],
 
 
 # ---------------------------------------------------------------------------
-# stage 4: canonicalization — iterative connected components (SURVEY §2.9 M7)
-# ---------------------------------------------------------------------------
-
-
-def alias_edges(alias_df: DataFrame) -> DataFrame:
-    """Entities sharing a normalized alias → undirected edge list (src<dst).
-
-    STAR edges per alias group (every member → the group's min member), not
-    a chain: a k-member group contributes diameter ≤ 2 instead of k-1, so
-    min-label propagation converges in O(#overlapping groups) rounds rather
-    than O(largest group) — a 30-entity shared alias was one `max_iter`
-    away from silently wrong labels (round-1 verdict).
-
-    Built as MIN-agg + re-join, not collect_set: this is the
-    beyond-broadcast-dictionary path, where a pathological shared alias
-    ("inc", "news") can have millions of members — a collected member array
-    would land on one reducer, while the agg+join form stays linear per
-    group and AQE skew-splits the hot join."""
-    normed = alias_df.select(
-        _norm_col(F.col("alias")).alias("alias_norm"),
-        F.col("entity_id").cast("long").alias("entity_id"),
-    ).distinct()
-    mins = normed.groupBy("alias_norm").agg(
-        F.min("entity_id").alias("src"), F.count("*").alias("n")
-    )
-    return (
-        normed.join(mins.filter("n > 1"), "alias_norm")
-        .filter(F.col("entity_id") != F.col("src"))
-        .select("src", F.col("entity_id").alias("dst"))
-        .distinct()
-    )
-
-
-def connected_components(vertices: DataFrame, edges: DataFrame,
-                         max_iter: int = 50) -> DataFrame:
-    """Min-label propagation CC with pointer jumping, to fixpoint.
-
-    Each round: label := min(label, neighbors' labels), then one
-    shortcutting join label := label(label) — the pointer-jumping step halves
-    the remaining propagation depth, so convergence is O(log diameter)
-    rounds, not O(diameter) (round-1 verdict: a >max_iter-diameter chain
-    silently returned wrong labels). localCheckpoint() per round cuts
-    lineage (SURVEY §4.2).
-    vertices: (id:long); edges: (src:long, dst:long) → (entity_id, canonical_id).
-
-    Raises ``RuntimeError`` if the fixpoint is not reached within
-    ``max_iter`` rounds — non-convergence must never return silently-wrong
-    canonical ids (2^50 pointer-jumped hops ≫ any real graph)."""
-    # the CC working set (entity graph) is orders of magnitude smaller than
-    # the page stream — keep it on few partitions so each iteration is a
-    # handful of tasks, not shuffle_partitions-many
-    npart = max(2, int(vertices.sparkSession.conf.get("spark.sql.shuffle.partitions")) // 8)
-    sym = edges.select("src", "dst").union(edges.select(F.col("dst").alias("src"),
-                                                        F.col("src").alias("dst")))
-    sym = sym.repartition(npart, "src").localCheckpoint()
-    labels = (
-        vertices.select(F.col("id"), F.col("id").alias("label"))
-        .repartition(npart, "id")
-        .localCheckpoint()
-    )
-    from pyspark.sql import Observation
-
-    for it in range(max_iter):
-        nbr_min = (
-            sym.join(labels, sym.src == labels.id, "inner")
-            .groupBy(F.col("dst").alias("id2"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        stepped = (
-            labels.withColumnRenamed("label", "old")
-            .join(nbr_min, F.col("id") == F.col("id2"), "left")
-            .select(
-                "id",
-                F.least(F.col("old"), F.coalesce("nbr_label", F.col("old"))).alias("label"),
-                F.col("old"),
-            )
-        )
-        # pointer jumping: label := label(label) (labels are vertex ids, so
-        # the lookup is a self-join on the same small table)
-        jump = stepped.select(
-            F.col("id").alias("label"), F.col("label").alias("label2")
-        )
-        obs = Observation(f"cc_changed_{it}")
-        new_labels = (
-            stepped.join(jump, "label", "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce("label2", F.col("label"))).alias("label"),
-                "old",
-            )
-            .observe(obs, F.sum((F.col("label") != F.col("old")).cast("long")).alias("n"))
-            .select("id", "label")
-        ).localCheckpoint()  # eager: materializes and fires the observation
-        labels = new_labels
-        if int(obs.get["n"] or 0) == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} rounds "
-            "(component diameter exceeds max_iter); raise max_iter"
-        )
-    return labels.select(F.col("id").alias("entity_id"), F.col("label").alias("canonical_id"))
-
-
-def canonical_map(alias_df: DataFrame) -> DataFrame:
-    verts = alias_df.select(F.col("entity_id").cast("long").alias("id")).distinct()
-    return connected_components(verts, alias_edges(alias_df))
-
-
-# ---------------------------------------------------------------------------
-# stage 5: triples via per-sentence windows (SURVEY §2.5 W2, §2.9 M8)
+# stage 4: triples via per-sentence windows (SURVEY §2.5 W2, §2.9 M8)
 # ---------------------------------------------------------------------------
 
 
@@ -891,26 +760,19 @@ def canon_dict(canon: DataFrame) -> dict[int, int]:
 def build_dictionary_state(
     spark: SparkSession,
     alias_pdf: pd.DataFrame,
-    cc_distributed_threshold: int = 1_000_000,
 ) -> dict[str, DataFrame]:
     """Unit-invariant dictionary-side state: alias join tables + canonical
     map. Built once and shared across work units / scaling runs (the page
     stream scales with the corpus; this scales with the dictionary).
 
-    Canonicalization dispatches by dictionary size, same adaptive rule as
-    the link join: a broadcast-sized alias table (it is literally broadcast
-    for linking) canonicalizes with driver-side union-find in milliseconds,
-    while the iterative Spark CC — ~6s of fixed scheduling latency for its
-    join/agg rounds regardless of data size — is reserved for dictionaries
-    past ``cc_distributed_threshold`` rows. Both paths are parity-tested
-    (test_canonical_map_matches_union_find runs them against each other)."""
+    The alias dictionary is a driver-side pandas frame and the canonical
+    map is broadcast into the triples join, so canonicalization is driver
+    union-find over the alias graph (``linking.union_find_canonical``,
+    min entity id per connected component)."""
     from .linking import union_find_canonical
 
     alias_tables = alias_spark_tables(spark, alias_pdf)
-    if len(alias_pdf) <= cc_distributed_threshold:
-        canon = canon_frame(spark, union_find_canonical(alias_pdf))
-    else:
-        canon = canonical_map(spark.createDataFrame(alias_pdf))
+    canon = canon_frame(spark, union_find_canonical(alias_pdf))
     return {**alias_tables, "canon": canon}
 
 
@@ -923,9 +785,8 @@ def run_pipeline(
     weights_map: dict[str, dict] | None = None,
 ) -> dict[str, DataFrame]:
     """Full KG pipeline. Returns DataFrames; the tagger/link stages are
-    persisted and (when dict_state is not pre-supplied) the CC stage runs
-    concurrently with the tagger materialization — both are driver-submitted
-    jobs, and local/cluster executors interleave their tasks."""
+    persisted and (when dict_state is not pre-supplied) the driver builds
+    the dictionary state while the executors materialize the tagger."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import StorageLevel

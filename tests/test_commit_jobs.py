@@ -33,6 +33,19 @@ APPLY_JOB_BUDGET = 11
 #: measured; a grouped rewrite would not grow with the parts rewritten
 RELINK_JOB_BUDGET = 30
 
+#: jobs build_dictionary_state issues, measured: its alias tables and
+#: its union-find canonical map are driver-side frames
+DICT_STATE_JOBS = 0
+
+#: jobs a one-alias update_dictionary_state issues, measured: 1 to collect
+#: the old canonical map for the driver union-find over the contracted graph
+DICT_UPDATE_JOBS = 1
+
+#: jobs compact_table issues to compact one 4-file part, measured: both
+#: reads (the live part and its coalesced copy) take their schema from the
+#: parquet footer, so none of the jobs infers a schema
+COMPACT_JOBS = 5
+
 #: jobs one work unit's edges commit issues, measured: the edges part is
 #: an aggregate over the unit's committed triples part, so its write is a
 #: shuffle map stage plus the write stage, then the read-back checksum
@@ -216,6 +229,37 @@ def test_relink_snapshot_equals_heal(spark, tmp_path):
             relink_parts(spark, d, new_state, reduced, canon_ids=stale)
 
     assert _jobs(spark, relink_out_of_sync)[1] == 0
+
+
+def test_dictionary_state_job_budget(spark):
+    """Canonicalization runs on the driver: building the dictionary state
+    and a one-alias update issue no Spark CC rounds."""
+    from char_ner_spark.incremental import update_dictionary_state
+    from char_ner_spark.pipeline import build_dictionary_state
+
+    alias = make_alias_table(60, seed=7)
+    state, n = _jobs(spark, lambda: build_dictionary_state(spark, alias))
+    assert n <= DICT_STATE_JOBS, n
+    delta = pd.DataFrame(
+        [(int(alias["entity_id"].iloc[3]), "Bridge Corp",
+          alias["alias"].iloc[0], "en", 0.5, "ORG")],
+        columns=list(alias.columns))
+    (new_state, _), n = _jobs(spark, lambda: update_dictionary_state(
+        spark, state, alias, delta))
+    assert n <= DICT_UPDATE_JOBS, n
+    want = union_find_canonical(pd.concat([alias, delta], ignore_index=True))
+    canon = new_state["canon"].toPandas()
+    assert dict(zip(canon["entity_id"], canon["canonical_id"])) == want
+
+
+def test_compact_table_job_budget(spark, tmp_path):
+    d = str(tmp_path)
+    lineage.commit_part(spark, d, "triples", 0,
+                        _triples_df(spark, 40).repartition(4),
+                        rows_in=40, n_parts=1)
+    stats, n = _jobs(spark, lambda: lineage.compact_table(spark, d))
+    assert stats == {0: (4, 1)}
+    assert n <= COMPACT_JOBS, n
 
 
 def _spark_manifest_append(spark, out_dir, rows):

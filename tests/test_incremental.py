@@ -87,25 +87,6 @@ def test_incremental_equals_full_recompute(spark, base_alias, delta_alias):
     assert all(k != v for k, v in r.items())
 
 
-def test_incremental_distributed_path_parity(spark, base_alias, delta_alias):
-    from char_ner_spark.incremental import incremental_canon
-    from char_ner_spark.pipeline import build_dictionary_state
-
-    state = build_dictionary_state(spark, base_alias)
-    canon_d, remap_d = incremental_canon(spark, state["canon"], base_alias,
-                                         delta_alias,
-                                         cc_distributed_threshold=0)
-    want = union_find_canonical(pd.concat([base_alias, delta_alias],
-                                          ignore_index=True))
-    assert _canon_dict(canon_d) == want
-    canon_s, remap_s = incremental_canon(spark, state["canon"], base_alias,
-                                         delta_alias)
-    assert (
-        set(map(tuple, remap_d.toPandas().itertuples(index=False)))
-        == set(map(tuple, remap_s.toPandas().itertuples(index=False)))
-    )
-
-
 def test_empty_delta_is_identity(spark, base_alias):
     from char_ner_spark.incremental import incremental_canon
     from char_ner_spark.pipeline import build_dictionary_state

@@ -40,6 +40,21 @@ def fmt(df) -> str:
     return text
 
 
+def clip(plan: str) -> str:
+    """The plan's leading whole lines that fit in 4,000 characters, plus a
+    note of how many lines were dropped."""
+    lines = plan.strip().split("\n")
+    kept, size = 0, 0
+    for line in lines:
+        if size + len(line) > 4000:
+            break
+        size += len(line) + 1
+        kept += 1
+    dropped = len(lines) - kept
+    tail = [f"... ({dropped} of {len(lines)} lines dropped)"] if dropped else []
+    return "\n".join(lines[:kept] + tail)
+
+
 def main() -> int:
     from pyspark.sql import functions as F
 
@@ -340,7 +355,7 @@ def main() -> int:
         for desc, ok in checks:
             ok_all &= ok
             out.append(f"- {'PASS' if ok else 'FAIL'}: {desc}")
-        out.append("\n```\n" + plan.strip()[:4000] + "\n```\n")
+        out.append("\n```\n" + clip(plan) + "\n```\n")
     os.makedirs("docs", exist_ok=True)
     with open("docs/PLANS.md", "w") as f:
         f.write("\n".join(out))
