@@ -25,10 +25,12 @@ from __future__ import annotations
 
 import datetime as dt
 import fcntl
+import functools
 import json
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 
 import pandas as pd
 import pyarrow as pa
@@ -196,7 +198,8 @@ ONE_TASK_CHECKSUM_BYTES = 4 << 20
 
 
 def commit_part(spark: SparkSession, out_dir: str, table: str, pid: int,
-                df: DataFrame, rows_in: int | None = None,
+                df: DataFrame,
+                rows_in: int | Callable[[], int] | None = None,
                 n_parts: int | None = None, schema_json: str | None = None,
                 supersedes: tuple[int, ...] | list[int] = (),
                 snapshot: bool = True,
@@ -220,8 +223,10 @@ def commit_part(spark: SparkSession, out_dir: str, table: str, pid: int,
     Copy-on-write callers pass ``snapshot=False`` and commit one snapshot
     per table for all their parts (``write_snapshot``'s ``add_parts``, one
     :func:`_snapshot_entry` per returned row), so no reader sees a
-    half-applied rewrite. ``rows_in`` defaults to the rows written and
-    ``schema_json`` (recorded in the snapshot) to the read-back schema.
+    half-applied rewrite. ``rows_in`` defaults to the rows written; a
+    callable is called after the write (an observed count the write's
+    action fills in). ``schema_json`` (recorded in the snapshot) defaults
+    to the read-back schema.
     Returns the commit rows (``LINEAGE_COLS``), the part's own row first."""
     base, prefix = _table_base(out_dir, table)
     part_path = os.path.join(base, f"{prefix}={pid}")
@@ -244,6 +249,8 @@ def commit_part(spark: SparkSession, out_dir: str, table: str, pid: int,
         schema_json = schema_json or back.schema.json()
     else:
         n, checksum = 0, "0" * 16  # a root-layout part that received no rows
+    if callable(rows_in):
+        rows_in = rows_in()
     now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     rows = [{"stage": table, "part_id": pid,
              "rows_in": n if rows_in is None else rows_in, "rows_out": n,
@@ -299,13 +306,8 @@ def _commit_unit(spark: SparkSession, out_dir: str, pid: int,
                     spark, slice_df.observe(
                         obs, F.count(F.lit(1)).alias("rows_in")),
                     **pipeline_kw)
-                try:
-                    rows_in = int(obs.get["rows_in"])
-                except Py4JJavaError:
-                    # a unit whose pages yield no mentions: AQE drops the
-                    # empty cached scan, and the observed count with it,
-                    # from the pipeline's first action — count the slice
-                    rows_in = slice_df.count()
+                rows_in = functools.cache(
+                    lambda: _observed_rows(obs, slice_df))
             df = out[table]
         written += commit_part(spark, out_dir, table, pid, df, rows_in,
                                **commit_kw)
@@ -313,8 +315,20 @@ def _commit_unit(spark: SparkSession, out_dir: str, pid: int,
         # done with this unit — release the cached tagger output before the
         # next unit persists its own (K~10k units would otherwise pile up
         # cached blocks for the whole session; ADVICE r1)
-        out["mentions"].unpersist()
+        out["passed"].unpersist()
     return written
+
+
+def _observed_rows(obs: Observation, slice_df: DataFrame) -> int:
+    """The pages a unit's pipeline read, observed by the first action over
+    it — the unit's first data write, so it costs no job of its own."""
+    try:
+        return int(obs.get["rows_in"])
+    except Py4JJavaError:
+        # a unit whose pages yield no mentions: AQE drops the empty cached
+        # scan, and the observed count with it, from the pipeline's first
+        # action — count the slice
+        return slice_df.count()
 
 
 def run_partitioned(

@@ -127,8 +127,9 @@ class AliasIndex:
         """Vectorized probe: exact winners are dict lookups against the
         precomputed per-norm best; MinHash banding for the (minority)
         non-exact remainder runs as ONE textops.minhash_bands_batch call —
-        the Arrow hot path of link_pairs' broadcast probe. Bit-identical to
-        the historical per-surface link() (fuzzy only when no exact hit)."""
+        the probe of pipeline.kg_pass and of link_pairs' broadcast path.
+        Bit-identical to the historical per-surface link() (fuzzy only
+        when no exact hit)."""
         from .textops import minhash_bands_batch
 
         norms = (

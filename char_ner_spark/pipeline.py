@@ -1,16 +1,22 @@
 """The KG-construction pipeline, expressed Spark-first (SURVEY.md §3.2).
 
-Plan shape (hot path):
+Plan shape (hot path, a dictionary within ``broadcast_max_rows``):
   pages parquet scan (url,html,lang pruned columns)
    → repartition(salted url-hash)                   [shuffle 1 — skew-
      sortWithinPartitions(length(html))              defused batches]
-   → mapInPandas tag_pages (extract_text + tag)     [Arrow crossing 1]
-   → distinct surfaces → mapInPandas broadcast
-     alias-index probe (link_pairs)                 [Arrow crossing 2]
-   → broadcast-join of each mention and its successor to their links
-   → broadcast-join relation templates on the gap text
-   → broadcast-join canonical map (driver union-find output)
-   → distinct → triples
+   → mapInPandas kg_pass, one Python pass per batch [the one Arrow
+     crossing]: extract_text + tag → probe each surface against the
+     worker-resident AliasIndex → match each linked mention and its linked
+     successor against the relation templates → canonical ids from the
+     broadcast driver map
+   → persist: mention rows + one array<struct<subj,pred,obj,conf>> column
+   → mentions = the mention columns; triples = explode → distinct
+                                                    [shuffle 2]
+
+A dictionary beyond ``broadcast_max_rows`` takes the staged plan instead:
+tag_pages → link_pairs (distributed LSH join) → extract_triples (template
+and canonical-map broadcast joins); relink_parts runs the same staged
+stages over stored mentions.
 
 All Python crossings are Arrow-vectorized (no per-row Python —
 BASELINE.json input_hint). The pure semantics live in textops/tagger/
@@ -84,9 +90,9 @@ _MENTION_SCHEMA = T.StructType(
         T.StructField("lang", T.StringType()),
         # text between this mention and the next one in the same sentence,
         # plus that mention's surface — carries exactly what relation-template
-        # matching and pair-linking need, so triple assembly is pure
-        # broadcast-join DataFrame ops (no window shuffle, no third Python
-        # crossing)
+        # matching and pair-linking need, so neither needs a window shuffle:
+        # kg_pass matches pairs inside the tagger's own batch, and the
+        # staged extract_triples joins them against broadcast tables
         T.StructField("next_gap", T.StringType()),
         T.StructField("next_surface", T.StringType()),
     ]
@@ -290,12 +296,16 @@ def tag_pages(pages: DataFrame, salt: int | str = 16,
     skew-immune (see :func:`_salted_repartition`) and the extra sampled
     probe job is only worth paying when the caller wants the skew metrics
     recorded."""
+    return _page_batches(pages, salt).mapInPandas(
+        _tag_pages_batches_fn(weights_map), schema=_MENTION_SCHEMA)
+
+
+def _page_batches(pages: DataFrame, salt: int | str) -> DataFrame:
+    """The tagger's input: (url, html, lang) spread by the salted url hash,
+    each partition sorted by html length."""
     pages, salt = _resolve_salt(pages.select("url", "html", "lang"), salt)
-    return (
-        _salted_repartition(pages, salt)
-        .sortWithinPartitions(F.length("html"))
-        .mapInPandas(_tag_pages_batches_fn(weights_map), schema=_MENTION_SCHEMA)
-    )
+    return _salted_repartition(pages, salt).sortWithinPartitions(
+        F.length("html"))
 
 
 # ---------------------------------------------------------------------------
@@ -444,24 +454,38 @@ def _alias_fingerprint(alias_pdf: pd.DataFrame) -> str:
     return f"{len(alias_pdf)}-{int(h.sum()) & 0xFFFFFFFFFFFFFFFF:016x}"
 
 
-_ALIAS_BC_CACHE: dict[tuple[str, str], object] = {}
+_BC_CACHE: dict[tuple[str, str], object] = {}
+
+
+def _cached_broadcast(spark: SparkSession, fp: str, value):
+    """Driver-side cache of a dictionary-scale broadcast, keyed by
+    (applicationId, content fingerprint): run_partitioned runs a pass once
+    per work unit (K ~ 10k), and re-broadcasting the identical dictionary
+    per unit is pure wasted shipment. applicationId in the key keeps a
+    restarted SparkContext from resurrecting a dead broadcast."""
+    key = (spark.sparkContext.applicationId, fp)
+    bc = _BC_CACHE.get(key)
+    if bc is None:
+        if len(_BC_CACHE) >= 8:  # bound driver-held broadcasts
+            _BC_CACHE.clear()
+        bc = spark.sparkContext.broadcast(value)
+        _BC_CACHE[key] = bc
+    return bc
 
 
 def _alias_broadcast(spark: SparkSession, alias_pdf: pd.DataFrame):
-    """Driver-side cache of the dictionary broadcast, keyed by
-    (applicationId, content fingerprint): run_partitioned calls the link
-    stage once per work unit (K ~ 10k), and re-broadcasting the identical
-    dictionary per unit is pure wasted shipment. applicationId in the key
-    keeps a restarted SparkContext from resurrecting a dead broadcast."""
+    """The alias dictionary's broadcast and its content fingerprint."""
     fp = _alias_fingerprint(alias_pdf)
-    key = (spark.sparkContext.applicationId, fp)
-    bc = _ALIAS_BC_CACHE.get(key)
-    if bc is None:
-        if len(_ALIAS_BC_CACHE) >= 4:  # bound driver-held broadcasts
-            _ALIAS_BC_CACHE.clear()
-        bc = spark.sparkContext.broadcast(alias_pdf)
-        _ALIAS_BC_CACHE[key] = bc
-    return bc, fp
+    return _cached_broadcast(spark, f"alias-{fp}", alias_pdf), fp
+
+
+def _canon_broadcast(spark: SparkSession, canon_map: dict[int, int]):
+    """The ``{entity_id: canonical_id}`` driver map as a broadcast."""
+    h = pd.util.hash_pandas_object(
+        pd.DataFrame({"e": list(canon_map), "c": list(canon_map.values())},
+                     dtype="int64"), index=False)
+    fp = f"{len(canon_map)}-{int(h.sum()) & 0xFFFFFFFFFFFFFFFF:016x}"
+    return _cached_broadcast(spark, f"canon-{fp}", canon_map)
 
 
 def _worker_alias_index(bc, fp):
@@ -708,6 +732,84 @@ def extract_triples(linked_pairs: DataFrame, canon: DataFrame, middles: DataFram
     return trip
 
 
+# ---------------------------------------------------------------------------
+# the fused pass: tag, link, relate and canonicalize in one mapInPandas
+# ---------------------------------------------------------------------------
+
+#: the fused pass's output: the mention rows plus, on each mention that has
+#: a linked successor, the triples of that pair
+_PASS_SCHEMA = T.StructType(_MENTION_SCHEMA.fields + [
+    T.StructField("triples", T.ArrayType(T.StructType([
+        T.StructField("subj", T.LongType()),
+        T.StructField("pred", T.StringType()),
+        T.StructField("obj", T.LongType()),
+        T.StructField("conf", T.DoubleType()),
+    ]))),
+])
+
+
+def _pair_triples(m: pd.DataFrame, index,
+                  canon: dict[int, int]) -> pd.Series:
+    """Per mention row of one tagged batch: the triples of the mention and
+    its sentence successor when both link, else None. The staged plan's
+    semantics (link_pairs + extract_triples): only immediate successors
+    pair, every template hit emits, conf is the weaker link score rounded
+    to 6 places, ids map through the canonical map."""
+    surfaces = list(dict.fromkeys(m["surface"]))  # ⊇ every next_surface
+    hit = dict(zip(surfaces, index.link_batch(surfaces)))
+    out: list = []
+    for surface, nxt, gap, lang in zip(m["surface"], m["next_surface"],
+                                       m["next_gap"], m["lang"]):
+        left = hit[surface]
+        right = hit[nxt] if nxt is not None else None
+        if left is None or right is None:
+            out.append(None)
+            continue
+        conf = round(min(left[1], right[1]), 6)
+        rows = []
+        for pred, subj_left in relations.match_middles(lang, gap):
+            subj, obj = (left[0], right[0]) if subj_left else (right[0], left[0])
+            rows.append({"subj": canon.get(subj, subj), "pred": pred,
+                         "obj": canon.get(obj, obj), "conf": conf})
+        out.append(rows or None)
+    # object dtype even when empty: Arrow converts no float column to a list
+    return pd.Series(out, index=m.index, dtype=object)
+
+
+def kg_pass(pages: DataFrame, alias_pdf: pd.DataFrame,
+            canon_map: dict[int, int], salt: int | str = 16,
+            weights_map: dict[str, dict] | None = None) -> DataFrame:
+    """pages(url, html, lang) → :data:`_PASS_SCHEMA` rows in ONE Python
+    pass per page batch: extract + tag (:func:`_tag_pdf`), probe every
+    surface against the worker-resident AliasIndex of the broadcast
+    dictionary, match each linked pair against the relation templates and
+    map its ids through the broadcast canonical map. Rows equal
+    :func:`tag_pages`' plus the triples column; :func:`pass_triples` equals
+    ``extract_triples(link_pairs(tag_pages(...)))`` row for row."""
+    spark = pages.sparkSession
+    alias_bc, fp = _alias_broadcast(spark, alias_pdf)
+    canon_bc = _canon_broadcast(spark, canon_map)
+    tag = _tag_pages_batches_fn(weights_map)
+
+    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        index = _worker_alias_index(alias_bc, fp)
+        canon = canon_bc.value
+        for m in tag(batches):
+            yield m.assign(triples=_pair_triples(m, index, canon))
+
+    return _page_batches(pages, salt).mapInPandas(go, schema=_PASS_SCHEMA)
+
+
+def pass_triples(passed: DataFrame) -> DataFrame:
+    """The triples of a :func:`kg_pass` frame, in extract_triples' columns;
+    its one shuffle is the final dedup."""
+    return (
+        passed.select("url", "sent_idx", F.explode("triples").alias("t"))
+        .select("t.subj", "t.pred", "t.obj", "url", "sent_idx", "t.conf")
+        .distinct()
+    )
+
+
 def edges_from_triples(triples: DataFrame) -> DataFrame:
     """Graph materialization: (src, dst, rel, weight=sum conf)."""
     return (
@@ -760,20 +862,23 @@ def canon_dict(canon: DataFrame) -> dict[int, int]:
 def build_dictionary_state(
     spark: SparkSession,
     alias_pdf: pd.DataFrame,
-) -> dict[str, DataFrame]:
+) -> dict:
     """Unit-invariant dictionary-side state: alias join tables + canonical
     map. Built once and shared across work units / scaling runs (the page
     stream scales with the corpus; this scales with the dictionary).
 
-    The alias dictionary is a driver-side pandas frame and the canonical
-    map is broadcast into the triples join, so canonicalization is driver
-    union-find over the alias graph (``linking.union_find_canonical``,
-    min entity id per connected component)."""
+    The alias dictionary is a driver-side pandas frame and canonicalization
+    is driver union-find over the alias graph
+    (``linking.union_find_canonical``, min entity id per connected
+    component). The map is kept both as the driver dict ``canon_map``,
+    which the fused pass broadcasts, and as the frame ``canon``, which the
+    staged triples join and the copy-on-write paths read."""
     from .linking import union_find_canonical
 
     alias_tables = alias_spark_tables(spark, alias_pdf)
-    canon = canon_frame(spark, union_find_canonical(alias_pdf))
-    return {**alias_tables, "canon": canon}
+    canon_map = union_find_canonical(alias_pdf)
+    return {**alias_tables, "canon": canon_frame(spark, canon_map),
+            "canon_map": canon_map}
 
 
 def run_pipeline(
@@ -781,42 +886,51 @@ def run_pipeline(
     pages: DataFrame,
     alias_pdf: pd.DataFrame,
     salt: int | str = 16,
-    dict_state: dict[str, DataFrame] | None = None,
+    dict_state: dict | None = None,
     weights_map: dict[str, dict] | None = None,
+    broadcast_max_rows: int = 5_000_000,
 ) -> dict[str, DataFrame]:
-    """Full KG pipeline. Returns DataFrames; the tagger/link stages are
-    persisted and (when dict_state is not pre-supplied) the driver builds
-    the dictionary state while the executors materialize the tagger."""
-    from concurrent.futures import ThreadPoolExecutor
+    """Full KG pipeline. Returns DataFrames, all lazy; the tagger output is
+    persisted so the tagger runs once for every sink.
 
+    With the dictionary within ``broadcast_max_rows``, one
+    :func:`kg_pass` per page batch tags, links, relates and canonicalizes;
+    mentions are its mention columns and triples :func:`pass_triples`.
+    Beyond it, the staged plan runs: :func:`tag_pages`, then
+    :func:`link_pairs`' distributed LSH join and :func:`extract_triples`.
+    Both give the same rows. ``dict_state`` defaults to
+    :func:`build_dictionary_state`; one without ``canon_map`` (from an
+    incremental update) has its canonical-map frame collected."""
     from pyspark import StorageLevel
 
-    extracted = extract_text_df(pages)
-    # the tagger stage feeds multiple consumers (linking join, triple window,
-    # mention sink) — persist so the BiLSTM UDF runs exactly once; same for
-    # the linked stream (triples + downstream sinks)
-    mentions = tag_pages(pages, salt=salt, weights_map=weights_map).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
     if dict_state is None:
-        with ThreadPoolExecutor(2) as pool:
-            f_dict = pool.submit(build_dictionary_state, spark, alias_pdf)
-            f_tag = pool.submit(mentions.count)
-            dict_state = f_dict.result()
-            f_tag.result()
-    alias_tables = {"bands": dict_state["bands"]}
+        dict_state = build_dictionary_state(spark, alias_pdf)
     canon = dict_state["canon"]
-    # linked is NOT persisted: it is two broadcast joins over the persisted
-    # mentions, so recomputation (for the mention/link sinks) is cheap
-    linked = link_pairs(mentions, alias_tables, alias_pdf=alias_pdf)
-    triples = extract_triples(linked, canon, middles_table(spark))
-    ents = entities_table(spark, alias_pdf, canon)
+    if len(alias_pdf) <= broadcast_max_rows:
+        canon_map = dict_state.get("canon_map")
+        if canon_map is None:
+            canon_map = canon_dict(canon)
+        # the pass feeds the triples, mentions and edges sinks — persist so
+        # the tagger runs exactly once
+        passed = kg_pass(pages, alias_pdf, canon_map, salt=salt,
+                         weights_map=weights_map).persist(
+            StorageLevel.MEMORY_AND_DISK)
+        mentions = passed.select(*_MENTION_SCHEMA.fieldNames())
+        triples = pass_triples(passed)
+    else:
+        passed = mentions = tag_pages(
+            pages, salt=salt, weights_map=weights_map).persist(
+            StorageLevel.MEMORY_AND_DISK)
+        linked = link_pairs(mentions, {"bands": dict_state["bands"]},
+                            alias_pdf=alias_pdf,
+                            broadcast_max_rows=broadcast_max_rows)
+        triples = extract_triples(linked, canon, middles_table(spark))
     return {
-        "extracted": extracted,
+        "extracted": extract_text_df(pages),
+        "passed": passed,
         "mentions": mentions,
-        "linked": linked,
         "canon": canon,
-        "entities": ents,
+        "entities": entities_table(spark, alias_pdf, canon),
         "triples": triples,
         "edges": edges_from_triples(triples),
     }

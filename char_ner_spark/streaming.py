@@ -163,7 +163,10 @@ def stream_triples(
     retain: int | None = None,
 ):
     """The FULL KG pipeline as a stream: pages file-source → foreachBatch
-    running the same batch stages (fused extract+tag → link → canonicalize →
+    running :func:`~char_ner_spark.pipeline.run_pipeline` on each
+    micro-batch (with a dictionary within its broadcast budget, one
+    :func:`~char_ner_spark.pipeline.kg_pass` per page batch: extract + tag
+    → link → relate → canonicalize, then explode + distinct of its
     triples) → parquet partitioned by micro-batch id.
 
     Exactly-once: the write is keyed by ``batch_id`` with dynamic partition
@@ -194,16 +197,14 @@ def stream_triples(
     (read back from out_dir).
     """
     from .lineage import commit_part
-    from .pipeline import build_dictionary_state, extract_triples, link_pairs, middles_table, tag_pages
+    from .pipeline import build_dictionary_state, run_pipeline
 
     dict_state = build_dictionary_state(spark, alias_pdf)
-    alias_tables = {"bands": dict_state["bands"]}
-    middles = middles_table(spark)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        mentions = tag_pages(batch_df, salt=salt)
-        linked = link_pairs(mentions, alias_tables, alias_pdf=alias_pdf)
-        triples = extract_triples(linked, dict_state["canon"], middles)
+        out = run_pipeline(spark, batch_df, alias_pdf, salt=salt,
+                           dict_state=dict_state)
+        triples = out["triples"]
         # commit_part replaces this batch's batch_id=N partition (a replay
         # that now yields no triples removes the stale one) and commits it
         commit_part(
@@ -218,6 +219,7 @@ def stream_triples(
             ).schema.json(),
             retain=retain,
         )
+        out["passed"].unpersist()
 
     q = (
         stream_pages(spark, pages_dir)

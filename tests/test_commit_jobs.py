@@ -51,6 +51,15 @@ COMPACT_JOBS = 5
 #: shuffle map stage plus the write stage, then the read-back checksum
 EDGES_COMMIT_JOBS = 3
 
+#: jobs one run_partitioned build issues (1 unit, all four sinks),
+#: measured: 5 for the triples commit (the query stages of the unit's one
+#: tag-link-relate pass and its distinct with the write, then the
+#: read-back checksum), 2 for the mentions commit over the persisted pass,
+#: EDGES_COMMIT_JOBS for the edges part and 3 for the entities commit. The
+#: staged plan (a separate probe job, link_pairs' eager checkpoint and
+#: the triples joins) issued 19
+BUILD_JOB_BUDGET = 13
+
 _groups = itertools.count()
 
 
@@ -155,6 +164,29 @@ def test_edges_commit_job_count(spark, tmp_path, monkeypatch):
                             str(tmp_path), n_parts=1,
                             sinks=("triples", "edges"))
     assert counts == [EDGES_COMMIT_JOBS]
+
+
+def test_build_job_budget(spark, tmp_path):
+    """A whole one-unit build with every sink stays within its job budget;
+    the stored triples equal the oracle's."""
+    from char_ner_spark.oracle import run_oracle
+
+    alias = make_alias_table(60, seed=7)
+    pages = make_pages(30, seed=7, alias_df=alias)
+    d = str(tmp_path)
+    rows, n = _jobs(spark, lambda: lineage.run_partitioned(
+        spark, spark.createDataFrame(pages), alias, d, n_parts=1,
+        sinks=("triples", "edges", "mentions", "entities")))
+    assert {r["stage"] for r in rows} == {"triples", "edges", "mentions",
+                                          "entities"}
+    assert n <= BUILD_JOB_BUDGET, n
+    cols = ["subj", "pred", "obj", "url", "sent_idx", "conf"]
+    got = lineage.read_triples(spark, d).toPandas()[cols]
+    want = run_oracle(pages, alias)["triples"][cols]
+    assert sorted(map(tuple, got.itertuples(index=False))) == \
+        sorted(map(tuple, want.itertuples(index=False)))
+    assert {r["rows_in"] for r in rows if r["stage"] != "entities"} == \
+        {len(pages)}
 
 
 def _bridge_delta(alias, triples_pdf):

@@ -159,7 +159,8 @@ def test_recanonicalize_triples_equals_recompute(spark, base_alias, kg_run):
     from char_ner_spark.incremental import (recanonicalize_triples,
                                             update_dictionary_state)
     from char_ner_spark.pipeline import (build_dictionary_state,
-                                         extract_triples, middles_table)
+                                         extract_triples, link_pairs,
+                                         middles_table)
 
     _, out = kg_run
     triples_old = out["triples"]
@@ -169,7 +170,9 @@ def test_recanonicalize_triples_equals_recompute(spark, base_alias, kg_run):
     new_state, remap = update_dictionary_state(spark, state2, base_alias,
                                                delta)
     assert remap.count() >= 1
-    want = extract_triples(out["linked"], new_state["canon"],
+    linked = link_pairs(out["mentions"], {"bands": state2["bands"]},
+                        alias_pdf=base_alias)
+    want = extract_triples(linked, new_state["canon"],
                            middles_table(spark)).toPandas()
     got = recanonicalize_triples(triples_old, remap).toPandas()
     key = lambda df: set(

@@ -126,6 +126,33 @@ def main() -> int:
         ],
     ))
 
+    # 5c. run_pipeline's triples over the fused pass: a dictionary within
+    # the broadcast budget tags, links, relates and canonicalizes in ONE
+    # MapInPandas fed by the salted repartition; the mention stream meets
+    # no join, and the only other shuffle is the final distinct
+    from char_ner_spark.pipeline import run_pipeline
+
+    run = run_pipeline(spark, pages, alias, dict_state=ds)
+    p5c = fmt(run["triples"])
+    tree = p5c.split("\n\n")[0]
+    at = tree.find("MapInPandas")
+    exchanges = [m.start() for m in re.finditer(r"(?<!Broadcast)Exchange",
+                                                tree)]
+    sections.append((
+        "run_pipeline triples (one tag-link-relate pass)", p5c,
+        [
+            ("one Exchange before a single MapInPandas",
+             tree.count("MapInPandas") == 1
+             and sum(x > at for x in exchanges) == 1),
+            ("no BroadcastHashJoin or SortMergeJoin on the mention stream",
+             "BroadcastHashJoin" not in p5c and "SortMergeJoin" not in p5c),
+            ("one more Exchange, for the final distinct",
+             sum(x < at for x in exchanges) == 1
+             and "HashAggregate" in tree[:at]),
+        ],
+    ))
+    run["passed"].unpersist()
+
     # 12. training gradient job (round 5): the epoch/batch filter must
     # prune JVM-side BEFORE the Python crossing, and the job must be
     # shuffle-free (scan → filter → MapInPandas) — at 10^12 docs the
