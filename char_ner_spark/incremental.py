@@ -181,10 +181,10 @@ def _incremental_canon_pure(
 
 def update_dictionary_state(
     spark: SparkSession,
-    dict_state: dict[str, DataFrame],
+    dict_state: dict,
     old_alias_pdf: pd.DataFrame,
     new_alias_pdf: pd.DataFrame,
-) -> tuple[dict[str, DataFrame], DataFrame]:
+) -> tuple[dict, DataFrame]:
     """Dictionary-delta refresh of the unit-invariant pipeline state.
 
     Returns ``(new_state, remap)`` where ``new_state`` is a drop-in for
@@ -193,19 +193,24 @@ def update_dictionary_state(
     * ``bands`` — the banded MinHash join table gains ONLY the delta's
       rows (band signatures are per-alias, so the old table is reusable
       verbatim; dedup handles re-sent alias rows).
-    * ``canon`` — :func:`incremental_canon` over the contracted graph.
+    * ``canon`` / ``canon_map`` — the canonical map
+      :func:`incremental_canon` computes over the contracted graph, from
+      the state's ``canon_map`` (no collect), as a frame and as the driver
+      dict.
     """
-    from .pipeline import alias_spark_tables
+    from .pipeline import alias_spark_tables, canon_frame
 
-    new_canon, remap = incremental_canon(
-        spark, dict_state["canon"], old_alias_pdf, new_alias_pdf)
+    new_map, remap_rows = _incremental_canon_pure(
+        dict_state["canon_map"], old_alias_pdf, new_alias_pdf)
     delta_bands = alias_spark_tables(spark, new_alias_pdf)["bands"]
     # all-column dedup: identical to rebuilding the table from the union
     # dictionary (re-sent identical rows collapse; genuinely conflicting
     # rows — same alias, different prior — survive in both, as a full
     # rebuild would keep them)
     bands = dict_state["bands"].unionByName(delta_bands).dropDuplicates()
-    return {"bands": bands, "canon": new_canon}, remap
+    return ({"bands": bands, "canon": canon_frame(spark, new_map),
+             "canon_map": new_map},
+            local_frame(spark, remap_rows, REMAP_DDL))
 
 
 # ---------------------------------------------------------------------------
@@ -408,7 +413,7 @@ def _rewrite_parts(
 def relink_parts(
     spark: SparkSession,
     out_dir: str,
-    dict_state: dict[str, DataFrame],
+    dict_state: dict,
     alias_pdf: pd.DataFrame,
     canon_ids: set[int],
     retain: int | None = None,

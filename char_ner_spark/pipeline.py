@@ -1,6 +1,6 @@
 """The KG-construction pipeline, expressed Spark-first (SURVEY.md §3.2).
 
-Plan shape (hot path, a dictionary within ``broadcast_max_rows``):
+Plan shape (hot path, a dictionary within ``BROADCAST_MAX_ROWS``):
   pages parquet scan (url,html,lang pruned columns)
    → repartition(salted url-hash)                   [shuffle 1 — skew-
      sortWithinPartitions(length(html))              defused batches]
@@ -13,7 +13,7 @@ Plan shape (hot path, a dictionary within ``broadcast_max_rows``):
    → mentions = the mention columns; triples = explode → distinct
                                                     [shuffle 2]
 
-A dictionary beyond ``broadcast_max_rows`` takes the staged plan instead:
+A dictionary beyond ``BROADCAST_MAX_ROWS`` takes the staged plan instead:
 tag_pages → link_pairs (distributed LSH join) → extract_triples (template
 and canonical-map broadcast joins); relink_parts runs the same staged
 stages over stored mentions.
@@ -454,38 +454,39 @@ def _alias_fingerprint(alias_pdf: pd.DataFrame) -> str:
     return f"{len(alias_pdf)}-{int(h.sum()) & 0xFFFFFFFFFFFFFFFF:016x}"
 
 
-_BC_CACHE: dict[tuple[str, str], object] = {}
+_BC_CACHE: dict[tuple, tuple[object, object]] = {}
 
 
-def _cached_broadcast(spark: SparkSession, fp: str, value):
+def _cached_broadcast(spark: SparkSession, key, value):
     """Driver-side cache of a dictionary-scale broadcast, keyed by
-    (applicationId, content fingerprint): run_partitioned runs a pass once
-    per work unit (K ~ 10k), and re-broadcasting the identical dictionary
-    per unit is pure wasted shipment. applicationId in the key keeps a
-    restarted SparkContext from resurrecting a dead broadcast."""
-    key = (spark.sparkContext.applicationId, fp)
-    bc = _BC_CACHE.get(key)
-    if bc is None:
+    (applicationId, ``key``): run_partitioned runs a pass once per work
+    unit (K ~ 10k), and re-broadcasting the identical dictionary per unit
+    is pure wasted shipment. applicationId in the key keeps a restarted
+    SparkContext from resurrecting a dead broadcast. The entry holds the
+    value too, so an ``id()`` in ``key`` cannot be reused by another
+    object while the entry lives."""
+    full = (spark.sparkContext.applicationId, key)
+    hit = _BC_CACHE.get(full)
+    if hit is None:
         if len(_BC_CACHE) >= 8:  # bound driver-held broadcasts
             _BC_CACHE.clear()
-        bc = spark.sparkContext.broadcast(value)
-        _BC_CACHE[key] = bc
-    return bc
+        hit = (value, spark.sparkContext.broadcast(value))
+        _BC_CACHE[full] = hit
+    return hit[1]
 
 
 def _alias_broadcast(spark: SparkSession, alias_pdf: pd.DataFrame):
     """The alias dictionary's broadcast and its content fingerprint."""
     fp = _alias_fingerprint(alias_pdf)
-    return _cached_broadcast(spark, f"alias-{fp}", alias_pdf), fp
+    return _cached_broadcast(spark, ("alias", fp), alias_pdf), fp
 
 
 def _canon_broadcast(spark: SparkSession, canon_map: dict[int, int]):
-    """The ``{entity_id: canonical_id}`` driver map as a broadcast."""
-    h = pd.util.hash_pandas_object(
-        pd.DataFrame({"e": list(canon_map), "c": list(canon_map.values())},
-                     dtype="int64"), index=False)
-    fp = f"{len(canon_map)}-{int(h.sum()) & 0xFFFFFFFFFFFFFFFF:016x}"
-    return _cached_broadcast(spark, f"canon-{fp}", canon_map)
+    """The ``{entity_id: canonical_id}`` driver map as a broadcast, keyed
+    by the map's identity: every unit of a build passes the same
+    ``dict_state["canon_map"]``, so no unit hashes the dictionary-scale
+    map again (dictionary states are never mutated, only replaced)."""
+    return _cached_broadcast(spark, ("canon", id(canon_map)), canon_map)
 
 
 def _worker_alias_index(bc, fp):
@@ -504,9 +505,14 @@ def _worker_alias_index(bc, fp):
     return idx
 
 
+#: the largest alias dictionary the linker broadcasts to every worker;
+#: beyond it linking takes the distributed LSH join
+BROADCAST_MAX_ROWS = 5_000_000
+
+
 def link_pairs(mentions: DataFrame, alias_tables: dict[str, DataFrame],
                alias_pdf: pd.DataFrame | None = None,
-               broadcast_max_rows: int = 5_000_000) -> DataFrame:
+               broadcast_max_rows: int = BROADCAST_MAX_ROWS) -> DataFrame:
     """Link each mention AND its sentence-adjacent successor in one pass:
     two broadcast joins against a RAW-surface winner table — no shuffle of
     the mention stream, and (critically) no normalization of it either.
@@ -872,7 +878,9 @@ def build_dictionary_state(
     (``linking.union_find_canonical``, min entity id per connected
     component). The map is kept both as the driver dict ``canon_map``,
     which the fused pass broadcasts, and as the frame ``canon``, which the
-    staged triples join and the copy-on-write paths read."""
+    staged triples join and the copy-on-write paths read; the dictionary
+    updates (``incremental.update_dictionary_state``,
+    ``removal.remove_aliases``) return both as well."""
     from .linking import union_find_canonical
 
     alias_tables = alias_spark_tables(spark, alias_pdf)
@@ -888,32 +896,27 @@ def run_pipeline(
     salt: int | str = 16,
     dict_state: dict | None = None,
     weights_map: dict[str, dict] | None = None,
-    broadcast_max_rows: int = 5_000_000,
 ) -> dict[str, DataFrame]:
     """Full KG pipeline. Returns DataFrames, all lazy; the tagger output is
     persisted so the tagger runs once for every sink.
 
-    With the dictionary within ``broadcast_max_rows``, one
+    With the dictionary within :data:`BROADCAST_MAX_ROWS`, one
     :func:`kg_pass` per page batch tags, links, relates and canonicalizes;
     mentions are its mention columns and triples :func:`pass_triples`.
     Beyond it, the staged plan runs: :func:`tag_pages`, then
     :func:`link_pairs`' distributed LSH join and :func:`extract_triples`.
     Both give the same rows. ``dict_state`` defaults to
-    :func:`build_dictionary_state`; one without ``canon_map`` (from an
-    incremental update) has its canonical-map frame collected."""
+    :func:`build_dictionary_state`."""
     from pyspark import StorageLevel
 
     if dict_state is None:
         dict_state = build_dictionary_state(spark, alias_pdf)
     canon = dict_state["canon"]
-    if len(alias_pdf) <= broadcast_max_rows:
-        canon_map = dict_state.get("canon_map")
-        if canon_map is None:
-            canon_map = canon_dict(canon)
+    if len(alias_pdf) <= BROADCAST_MAX_ROWS:
         # the pass feeds the triples, mentions and edges sinks — persist so
         # the tagger runs exactly once
-        passed = kg_pass(pages, alias_pdf, canon_map, salt=salt,
-                         weights_map=weights_map).persist(
+        passed = kg_pass(pages, alias_pdf, dict_state["canon_map"],
+                         salt=salt, weights_map=weights_map).persist(
             StorageLevel.MEMORY_AND_DISK)
         mentions = passed.select(*_MENTION_SCHEMA.fieldNames())
         triples = pass_triples(passed)
@@ -921,9 +924,8 @@ def run_pipeline(
         passed = mentions = tag_pages(
             pages, salt=salt, weights_map=weights_map).persist(
             StorageLevel.MEMORY_AND_DISK)
-        linked = link_pairs(mentions, {"bands": dict_state["bands"]},
-                            alias_pdf=alias_pdf,
-                            broadcast_max_rows=broadcast_max_rows)
+        # no alias_pdf: a dictionary this size takes the distributed join
+        linked = link_pairs(mentions, {"bands": dict_state["bands"]})
         triples = extract_triples(linked, canon, middles_table(spark))
     return {
         "extracted": extract_text_df(pages),

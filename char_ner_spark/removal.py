@@ -29,14 +29,15 @@ from .session import local_frame
 
 def remove_aliases(
     spark: SparkSession,
-    dict_state: dict[str, DataFrame],
+    dict_state: dict,
     old_alias_pdf: pd.DataFrame,
     removed_pdf: pd.DataFrame,
-) -> tuple[dict[str, DataFrame], DataFrame, dict[int, list[int]]]:
+) -> tuple[dict, DataFrame, dict[int, list[int]]]:
     """Delete alias rows; returns ``(new_state, remap, splits)``.
 
     * ``new_state`` — bands table without the removed rows + the updated
-      canonical map (only affected components re-clustered).
+      canonical map (only affected components re-clustered), as the frame
+      ``canon`` and the driver dict ``canon_map``.
     * ``remap`` — (old_canonical_id, new_canonical_id) rows for entities
       whose component SPLIT away from its old min; empty when every
       affected component stayed connected.
@@ -52,10 +53,10 @@ def remove_aliases(
     ``union_find_canonical(old minus removed)`` (test-enforced).
     """
     from .incremental import REMAP_DDL
-    from .pipeline import alias_spark_tables, canon_dict, canon_frame
+    from .pipeline import alias_spark_tables, canon_frame
 
     new_map, remap_rows, splits = _remove_pure(
-        canon_dict(dict_state["canon"]), old_alias_pdf, removed_pdf)
+        dict_state["canon_map"], old_alias_pdf, removed_pdf)
     remap = local_frame(spark, sorted(set(remap_rows)), REMAP_DDL)
     new_canon = canon_frame(spark, new_map)
     # bands: delta-proportional anti-join (same incrementality as the
@@ -68,7 +69,8 @@ def remove_aliases(
         ["band_idx", "band_hash", "alias_norm", "entity_id"],
         "left_anti",
     )
-    return {"bands": bands, "canon": new_canon}, remap, splits
+    return ({"bands": bands, "canon": new_canon, "canon_map": new_map},
+            remap, splits)
 
 
 def _remove_pure(
@@ -127,7 +129,7 @@ def _remove_pure(
     return new_map, remap_rows, splits
 
 
-def stale_canonical_ids(dict_state: dict[str, DataFrame],
+def stale_canonical_ids(dict_state: dict,
                         removed_pdf: pd.DataFrame) -> set[int]:
     """Canonical ids whose materialized triples may be stale after the
     removal — the OLD canonical of every entity that lost an alias row.
@@ -141,8 +143,6 @@ def stale_canonical_ids(dict_state: dict[str, DataFrame],
     old winner was the removed row (whose canonical id IS a touched id),
     and an unlinked mention can never become linked by a removal. Feed
     the result to :func:`~char_ner_spark.incremental.relink_parts`."""
-    from .pipeline import canon_dict
-
-    old_map = canon_dict(dict_state["canon"])
+    old_map = dict_state["canon_map"]
     return {old_map[int(e)] for e in removed_pdf["entity_id"]
             if int(e) in old_map}

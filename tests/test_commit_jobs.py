@@ -37,9 +37,9 @@ RELINK_JOB_BUDGET = 30
 #: its union-find canonical map are driver-side frames
 DICT_STATE_JOBS = 0
 
-#: jobs a one-alias update_dictionary_state issues, measured: 1 to collect
-#: the old canonical map for the driver union-find over the contracted graph
-DICT_UPDATE_JOBS = 1
+#: jobs a one-alias update_dictionary_state issues, measured: the driver
+#: union-find over the contracted graph reads the state's canon_map dict
+DICT_UPDATE_JOBS = 0
 
 #: jobs compact_table issues to compact one 4-file part, measured: both
 #: reads (the live part and its coalesced copy) take their schema from the

@@ -134,12 +134,13 @@ def test_link_pairs_broadcast_budget_fallback_identical(spark, corpus):
 
 
 @pytest.mark.parametrize("case", ["seeded", "weights_map", "staged"])
-def test_fused_pass_equals_staged(spark, corpus, case):
+def test_fused_pass_equals_staged(spark, corpus, case, monkeypatch):
     """run_pipeline's one-pass triples and mentions equal the staged
     composition extract_triples(link_pairs(tag_pages(...))) and tag_pages,
     every column bit for bit: with seeded weights, with a weights_map, and
-    with a broadcast_max_rows that forces run_pipeline onto the staged
+    with a BROADCAST_MAX_ROWS that forces run_pipeline onto the staged
     plan."""
+    from char_ner_spark import pipeline
     from char_ner_spark.pipeline import (build_dictionary_state,
                                          extract_triples, link_pairs,
                                          middles_table, run_pipeline,
@@ -155,9 +156,10 @@ def test_fused_pass_equals_staged(spark, corpus, case):
         if case == "weights_map":
             weights_map = {lang: load_weights(save_weights(lang, wdir))
                            for lang in LANGS}
-        out = run_pipeline(spark, pages, alias, weights_map=weights_map,
-                           broadcast_max_rows=0 if case == "staged"
-                           else 5_000_000)
+        if case == "staged":
+            monkeypatch.setattr(pipeline, "BROADCAST_MAX_ROWS", 0)
+        out = run_pipeline(spark, pages, alias, weights_map=weights_map)
+        assert ("triples" in out["passed"].columns) == (case != "staged")
         state = build_dictionary_state(spark, alias)
         mentions = tag_pages(pages, weights_map=weights_map)
         staged = extract_triples(
