@@ -320,8 +320,9 @@ def _commit_unit(spark: SparkSession, out_dir: str, pid: int,
 
 
 def _observed_rows(obs: Observation, slice_df: DataFrame) -> int:
-    """The pages a unit's pipeline read, observed by the first action over
-    it — the unit's first data write, so it costs no job of its own."""
+    """The pages a unit's (or a streamed micro-batch's) pipeline read,
+    observed by the first action over it — the first data write, so it
+    costs no job of its own."""
     try:
         return int(obs.get["rows_in"])
     except Py4JJavaError:

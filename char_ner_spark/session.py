@@ -23,6 +23,20 @@ Centralizes the configs SURVEY.md §4.2 pins down:
     JVM default. Executors keep the default: on a cluster they are
     long-lived, which is where C2 pays off. Under spark-submit the driver
     JVM starts before this code runs, so it keeps the default.
+  - Python workers start from :mod:`char_ner_spark.worker_daemon`
+    (``spark.python.daemon.module``). It drops Spark's ``pyspark.zip``,
+    ``py4j-*-src.zip`` and spark-core jar from the worker's ``sys.path``
+    and ``sys.path_importer_cache`` when the installed pyspark and py4j
+    import without them and have the same ``version.py`` text, and
+    otherwise leaves the path as Spark built it; it never drops a
+    ``--py-files`` archive. Workers then import the pyspark the driver
+    uses, and each task's ``importlib.invalidate_caches()`` walks no zip
+    directory: 0.1-0.2 ms instead of 0.15-0.28 s of CPU. The module is
+    named only for a local master whose workers find this package when
+    they start (:func:`workers_find_package`), because the daemon is
+    imported before any ``--py-files`` archive reaches a worker.
+    ``extra_conf={"spark.python.daemon.module": "pyspark.daemon"}``
+    restores Spark's default.
 
 ``local_frame`` builds the driver-side frames (template table, remaps,
 typed empty frames) so they plan as a JVM ``LocalTableScan``.
@@ -31,6 +45,7 @@ typed empty frames) so they plan as a JVM ``LocalTableScan``.
 from __future__ import annotations
 
 import os
+import site
 
 import pandas as pd
 import pyarrow as pa
@@ -61,6 +76,26 @@ ARROW_BATCH_ROWS = 2048
 DRIVER_JIT_OPTIONS = ("-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
                       " -XX:C1MaxInlineSize=70 -XX:C1InlineStackLimit=10"
                       " -XX:C1MaxInlineLevel=15")
+
+
+#: the Python worker daemon build_session names (see the module docstring)
+WORKER_DAEMON_MODULE = "char_ner_spark.worker_daemon"
+
+
+def workers_find_package() -> bool:
+    """Whether a local Python worker daemon finds this copy of the package
+    when it starts. Spark runs it as ``python -m`` in the JVM's working
+    directory, with the JVM's ``PYTHONPATH`` after Spark's own archives;
+    a JVM this process starts inherits both. spark-submit starts the JVM
+    first (``PYSPARK_GATEWAY_PORT`` is set), and that JVM's ``PYTHONPATH``
+    lacks the driver's ``--py-files``."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = list(site.getsitepackages())
+    if not os.environ.get("PYTHONSAFEPATH"):
+        paths.append(os.getcwd())
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        paths += os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    return os.path.realpath(root) in {os.path.realpath(p) for p in paths if p}
 
 
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
@@ -115,6 +150,9 @@ def build_session(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
     )
+    if master.startswith("local") and workers_find_package():
+        builder = builder.config("spark.python.daemon.module",
+                                 WORKER_DAEMON_MODULE)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

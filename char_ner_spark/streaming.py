@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .session import local_frame
@@ -196,20 +196,24 @@ def stream_triples(
     Returns the drained-stream StreamingQuery's final triples DataFrame
     (read back from out_dir).
     """
-    from .lineage import commit_part
+    from .lineage import _observed_rows, commit_part
     from .pipeline import build_dictionary_state, run_pipeline
 
     dict_state = build_dictionary_state(spark, alias_pdf)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        out = run_pipeline(spark, batch_df, alias_pdf, salt=salt,
-                           dict_state=dict_state)
+        # the batch's page count rides the write's action, as in
+        # lineage._commit_unit: no count job of its own
+        obs = Observation(f"stream_pages_in_{batch_id}")
+        out = run_pipeline(
+            spark, batch_df.observe(obs, F.count(F.lit(1)).alias("rows_in")),
+            alias_pdf, salt=salt, dict_state=dict_state)
         triples = out["triples"]
         # commit_part replaces this batch's batch_id=N partition (a replay
         # that now yields no triples removes the stale one) and commits it
         commit_part(
             spark, out_dir, "stream_triples", int(batch_id), triples,
-            rows_in=batch_df.count(),
+            rows_in=lambda: _observed_rows(obs, batch_df),
             # schema as READ: data cols + the batch_id partition column as
             # INT — Spark's partition-value inference types batch_id=N dirs
             # as int, so recording long here would make an all-empty

@@ -315,6 +315,56 @@ def test_stream_triples_per_batch_lineage_rows(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+#: jobs one stream_triples micro-batch issues, measured: the query stages
+#: of the batch's one-pass pipeline with its triples write, then the
+#: read-back checksum. The page count rides the write as an observed
+#: metric; a batch_df.count() for it issued 2 more (7)
+STREAM_BATCH_JOBS = 5
+
+
+def test_stream_triples_micro_batch_job_count(spark, tmp_path):
+    """One micro-batch issues STREAM_BATCH_JOBS Spark jobs, all under the
+    query run's job group, and still records the pages it read."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from char_ner_spark import lineage
+
+    class RunIds(StreamingQueryListener):
+        def __init__(self):
+            self.ids = []
+
+        def onQueryStarted(self, event):
+            self.ids.append(str(event.runId))
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    alias = make_alias_table(50, seed=42)
+    pdf = make_pages(20, seed=42, alias_df=alias)
+    src, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    spark.createDataFrame(pdf).coalesce(1).write.parquet(src)  # one batch
+    runs = RunIds()
+    spark.streams.addListener(runs)
+    try:
+        got = ST.stream_triples(spark, src, alias, out, str(tmp_path / "ck"))
+    finally:
+        spark.streams.removeListener(runs)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(runs.ids) == 1
+    assert len(sc.statusTracker().getJobIdsForGroup(runs.ids[0])) == \
+        STREAM_BATCH_JOBS
+    m = lineage.read_manifest(spark, out).toPandas()
+    assert m.rows_in.tolist() == [len(pdf)]
+    assert got.count() > 0
+
+
 def test_stream_replay_with_empty_batch_clears_stale_partition(spark):
     """ADVICE r2: dynamic partition overwrite only replaces partitions that
     RECEIVE rows. A replay whose micro-batch now yields ZERO triples (here:
