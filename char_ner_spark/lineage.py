@@ -11,10 +11,11 @@ it stopped, and re-running a completed unit rewrites identical bytes.
 At 100 TB scale K is sized so one unit ≈ a few hundred GB (K ~ 10k); units
 are embarrassingly parallel across job submissions too.
 
-Every writer commits a part through :func:`commit_part`. Only two of its
-steps are Spark jobs: the data write, and the checksum of the part as read
-back from disk (the read takes its schema from the parquet footer, so it
-launches no schema-inference job). The rest is driver-only file IO: the
+Every writer commits a part through :func:`commit_part`, and a commit is
+one Spark job: the data write. The part's row count and checksum are
+observed on the rows as the write writes them (``df.observe``) and
+cross-checked against the row counts in the part's parquet footers, so
+the part is not read back. The rest is driver-only file IO: the
 table's ``snapshot-N.json`` and its ``current`` pointer flip, the only
 commit record — every read of commit state comes from them. Work-unit
 input counters use ``df.observe`` (SURVEY §2.1 S4) so they ride the
@@ -37,9 +38,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DoubleType, FloatType, StructType
 
 from .session import local_frame
 
@@ -165,6 +166,26 @@ def read_parts(spark: SparkSession, *paths: str,
     return reader.parquet(*paths)
 
 
+def _checksum_aggs(df: DataFrame) -> list[Column]:
+    """The row count and the order-insensitive checksum of ``df`` as
+    aggregate columns ``n`` and ``s``: the xor of per-row xxhash64 over
+    every column in schema order, float and double columns entering
+    integer-stabilized (e6 fixed point). :func:`table_checksum` runs them
+    as a query; :func:`commit_part` observes them on the rows it writes."""
+    h = F.xxhash64(*[
+        F.expr(f"CAST(ROUND(`{f.name}` * 1e6) AS BIGINT)")
+        if isinstance(f.dataType, (DoubleType, FloatType))
+        else F.col(f.name)
+        for f in df.schema.fields
+    ])
+    # bit_xor: order-insensitive, overflow-free
+    return [F.count(h).alias("n"), F.bit_xor(h).alias("s")]
+
+
+def _checksum(n, s) -> tuple[int, str]:
+    return int(n), format((int(s or 0)) & 0xFFFFFFFFFFFFFFFF, "016x")
+
+
 def table_checksum(df: DataFrame) -> tuple[int, str]:
     """(row_count, order-insensitive checksum) of ANY sink DataFrame —
     xor of per-row xxhash64, computed distributed (no collect). Float and
@@ -172,22 +193,11 @@ def table_checksum(df: DataFrame) -> tuple[int, str]:
     units cannot silently drift in confidence/weight/score (ADVICE r1).
     Same recipe as the historical triples checksum (schema column order,
     e6 conf stabilization) — but note it hashes EVERY column of the frame
-    it is given: commit_part feeds it the written part read back, which
-    carries the part_id column, so checksums recorded by round-3 code are
-    not comparable to manifests written before the multi-sink change."""
-    from pyspark.sql.types import DoubleType, FloatType
-
-    cols = [
-        F.expr(f"CAST(ROUND(`{f.name}` * 1e6) AS BIGINT)")
-        if isinstance(f.dataType, (DoubleType, FloatType))
-        else F.col(f.name)
-        for f in df.schema.fields
-    ]
-    h = df.select(F.xxhash64(*cols).alias("h")).agg(
-        F.count("h").alias("n"),
-        F.expr("bit_xor(h)").alias("s"),  # order-insensitive, overflow-free
-    ).collect()[0]
-    return int(h["n"]), format((int(h["s"] or 0)) & 0xFFFFFFFFFFFFFFFF, "016x")
+    it is given: a committed part's checksum covers its part_id column,
+    so checksums recorded by round-3 code are not comparable to manifests
+    written before the multi-sink change."""
+    h = df.agg(*_checksum_aggs(df)).collect()[0]
+    return _checksum(h["n"], h["s"])
 
 
 #: parts up to this size are checksummed in one task: the aggregate then
@@ -195,6 +205,29 @@ def table_checksum(df: DataFrame) -> tuple[int, str]:
 #: stage plus a result stage. Spark's default per-file open cost — below
 #: it, splitting a part's scan across cores saves nothing
 ONE_TASK_CHECKSUM_BYTES = 4 << 20
+
+
+def _written_checksum(spark: SparkSession, part_path: str,
+                      obs: Observation) -> tuple[int, str]:
+    """(rows, checksum) of the part just written to ``part_path``.
+
+    The count and checksum ``obs`` observed on the rows as the write
+    wrote them stand if the part's parquet footers hold as many rows
+    (driver-side file IO, no job). Otherwise, or when the observation is
+    missing (reading it raises, as :func:`_observed_rows` allows for),
+    the part is read back and checksummed: one more job."""
+    footer_rows = sum(pq.read_metadata(f).num_rows
+                      for f in _data_files(part_path))
+    try:
+        seen = obs.get
+    except Py4JJavaError:
+        seen = None
+    if seen is not None and seen["n"] == footer_rows:
+        return _checksum(seen["n"], seen["s"])
+    back = read_parts(spark, part_path)
+    size = sum(os.path.getsize(f) for f in _data_files(part_path))
+    return table_checksum(
+        back.coalesce(1) if size <= ONE_TASK_CHECKSUM_BYTES else back)
 
 
 def commit_part(spark: SparkSession, out_dir: str, table: str, pid: int,
@@ -209,8 +242,17 @@ def commit_part(spark: SparkSession, out_dir: str, table: str, pid: int,
     sink:
 
     1. write the part directory (overwrite, so a retry is idempotent) —
-       a Spark job;
-    2. read the part back from disk and checksum it — a Spark job;
+       the commit's one Spark job. The rows it writes are observed
+       (``df.observe``) into the part's row count and checksum:
+       :func:`table_checksum`'s recipe over the columns the part holds on
+       disk (``part_id`` included; a root-layout part keeps its key only
+       in the directory name). The observation sits in the write's result
+       stage, whose accumulator updates Spark merges from one successful
+       attempt per task, so a retried task cannot enter it twice;
+    2. check the observed count against the parquet footers' row counts
+       and take the schema from the footer — driver-side file IO
+       (:func:`_written_checksum`, which falls back to reading the part
+       back when the two disagree);
     3. with ``snapshot``, commit the next snapshot of ``table`` (previous
        entries + this part's) and flip its ``current`` pointer — driver
        only (:func:`write_snapshot`, which serializes concurrent commits).
@@ -226,27 +268,27 @@ def commit_part(spark: SparkSession, out_dir: str, table: str, pid: int,
     half-applied rewrite. ``rows_in`` defaults to the rows written; a
     callable is called after the write (an observed count the write's
     action fills in). ``schema_json`` (recorded in the snapshot) defaults
-    to the read-back schema.
+    to the schema the part is read back with.
     Returns the commit rows (``LINEAGE_COLS``), the part's own row first."""
     base, prefix = _table_base(out_dir, table)
     part_path = os.path.join(base, f"{prefix}={pid}")
-    keyed = df.withColumn(prefix, F.lit(pid))
+    obs = Observation()
     if _TABLE_LAYOUT.get(table, (table,))[0] == "":
         # root layout (the streaming sink): the part key lives only in the
         # directory name. Dynamic overwrite replaces a partition only if it
         # RECEIVES rows, so drop this one first: a replay that now yields
         # nothing must converge to no directory, not to the stale one
         shutil.rmtree(part_path, ignore_errors=True)
-        keyed.write.mode("overwrite").option(
+        df.observe(obs, *_checksum_aggs(df)).withColumn(
+            prefix, F.lit(pid)).write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic").partitionBy(prefix).parquet(base)
     else:
-        keyed.write.mode("overwrite").parquet(part_path)
+        keyed = df.withColumn(prefix, F.lit(pid))
+        keyed.observe(obs, *_checksum_aggs(keyed)).write.mode(
+            "overwrite").parquet(part_path)
     if os.path.isdir(part_path):
-        back = read_parts(spark, part_path)
-        size = sum(os.path.getsize(f) for f in _data_files(part_path))
-        n, checksum = table_checksum(
-            back.coalesce(1) if size <= ONE_TASK_CHECKSUM_BYTES else back)
-        schema_json = schema_json or back.schema.json()
+        n, checksum = _written_checksum(spark, part_path, obs)
+        schema_json = schema_json or read_parts(spark, part_path).schema.json()
     else:
         n, checksum = 0, "0" * 16  # a root-layout part that received no rows
     if callable(rows_in):
@@ -449,7 +491,7 @@ def run_partitioned(
 
         written.extend(commit_part(
             spark, out_dir, "entities", 0,
-            entities_table(spark, alias_pdf, dict_state["canon"]),
+            entities_table(spark, alias_pdf, dict_state["canon_map"]),
             rows_in=len(alias_pdf), **commit_kw))
     return sorted(written, key=lambda r: (r["stage"], r["part_id"]))
 

@@ -825,20 +825,32 @@ def edges_from_triples(triples: DataFrame) -> DataFrame:
     )
 
 
+#: column types of the entities dimension
+ENTITIES_DDL = ("entity_id long, canonical_id long, canonical_name string, "
+                "lang string")
+
+
 def entities_table(spark: SparkSession, alias_pdf: pd.DataFrame,
-                   canon: DataFrame) -> DataFrame:
-    """Entity dimension: dictionary rows ⋈ canonical map. Unit-invariant —
+                   canon: DataFrame | dict[int, int]) -> DataFrame:
+    """Entity dimension: one row per dictionary entity with its canonical
+    id (null for an entity the canonical map lacks). Unit-invariant —
     identical whichever work unit (or job) computes it, so the lineage
-    layer materializes it once per run, not per unit."""
-    return (
-        spark.createDataFrame(
-            alias_pdf[["entity_id", "canonical_name", "lang"]].drop_duplicates(
-                "entity_id"
-            )
-        )
-        .join(canon, "entity_id", "left")
-        .select("entity_id", "canonical_id", "canonical_name", "lang")
-    )
+    layer materializes it once per run, not per unit.
+
+    Built on the driver from the canonical map, given as the driver dict
+    (a dictionary state's ``canon_map``) or as the frame (collected: no
+    Spark job for :func:`canon_frame`'s local frame). The left merge runs
+    in pandas and the result is a ``LocalTableScan``, so writing it is
+    one Spark job."""
+    if isinstance(canon, DataFrame):
+        canon = dict(canon.select("entity_id", "canonical_id").collect())
+    cmap = pd.DataFrame({
+        "entity_id": pd.Series(list(canon), dtype="int64"),
+        "canonical_id": pd.Series(list(canon.values()), dtype="Int64")})
+    ents = alias_pdf[["entity_id", "canonical_name", "lang"]].drop_duplicates(
+        "entity_id").astype({"entity_id": "int64"})
+    return local_frame(spark, ents.merge(cmap, on="entity_id", how="left"),
+                       ENTITIES_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -848,12 +860,14 @@ def entities_table(spark: SparkSession, alias_pdf: pd.DataFrame,
 
 def canon_frame(spark: SparkSession, canon_map: dict[int, int]) -> DataFrame:
     """``{entity_id: canonical_id}`` as the canonical-map frame
-    (``entity_id long, canonical_id long``, sorted by entity id)."""
+    (``entity_id long, canonical_id long``, sorted by entity id), a
+    driver-side ``LocalTableScan``: collecting it issues no Spark job."""
     items = sorted(canon_map.items())
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         pd.DataFrame({"entity_id": [k for k, _ in items],
                       "canonical_id": [v for _, v in items]}),
-        schema="entity_id long, canonical_id long",
+        "entity_id long, canonical_id long",
     )
 
 
@@ -932,7 +946,8 @@ def run_pipeline(
         "passed": passed,
         "mentions": mentions,
         "canon": canon,
-        "entities": entities_table(spark, alias_pdf, canon),
+        "entities": entities_table(spark, alias_pdf,
+                                   dict_state["canon_map"]),
         "triples": triples,
         "edges": edges_from_triples(triples),
     }

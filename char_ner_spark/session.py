@@ -39,7 +39,8 @@ Centralizes the configs SURVEY.md §4.2 pins down:
     restores Spark's default.
 
 ``local_frame`` builds the driver-side frames (template table, remaps,
-typed empty frames) so they plan as a JVM ``LocalTableScan``.
+canonical map, entities dimension, typed empty frames) so they plan as a
+JVM ``LocalTableScan``.
 """
 
 from __future__ import annotations
@@ -49,6 +50,7 @@ import site
 
 import pandas as pd
 import pyarrow as pa
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType, StructType
@@ -111,6 +113,15 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     return f"{min(kb // 2048, 16 * 1024)}m"
 
 
+def _master_cores(master: str, cpus: int) -> int:
+    """Task slots of a ``local[N]`` / ``local[N,F]`` master; ``cpus`` for
+    ``local[*]`` and for a cluster master."""
+    if not master.startswith("local"):
+        return cpus
+    n = master.partition("[")[2].rstrip("]").split(",")[0]
+    return cpus if n in ("", "*") else int(n)
+
+
 def build_session(
     app_name: str = "char_ner_spark",
     master: str | None = None,
@@ -119,20 +130,30 @@ def build_session(
 ) -> SparkSession:
     """Create (or get) a SparkSession with the engine's config profile.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
-    cluster pass ``None`` and let spark-submit supply the master.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally. Under
+    spark-submit (which starts the JVM first and sets
+    ``PYSPARK_GATEWAY_PORT``) it defaults to the master spark-submit was
+    given. ``shuffle_partitions`` defaults to the master's task slots
+    (``$SPARK_GRAFT_CPUS`` for ``local[*]`` and cluster masters).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    if master is None:
+    builder = SparkSession.builder.appName(app_name)
+    if master is not None:
+        builder = builder.master(master)
+    elif "PYSPARK_GATEWAY_PORT" in os.environ:
+        # spark-submit's JVM holds the master as a system property, which
+        # a SparkConf reads once the gateway is up
+        SparkContext._ensure_initialized()
+        master = SparkConf().get("spark.master", "")
+    else:
         master = f"local[{cpus}]"
+        builder = builder.master(master)
     if shuffle_partitions is None:
         # local: one wave; cluster: override to 2-3x total cores
-        n = master.split("[")[1].rstrip("]") if "[" in master else str(cpus)
-        shuffle_partitions = cpus if n == "*" else int(n)
+        shuffle_partitions = _master_cores(master, cpus)
 
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
+        builder
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -4,8 +4,9 @@ one table.
 A crash is injected at one step of a commit by monkeypatching the function
 that performs that step:
 
-* ``checksum`` — after a part's data write, before its checksum
-  (``lineage.table_checksum``);
+* ``checksum`` — after a part's data write, before its observed
+  checksum is checked against the parquet footers
+  (``lineage._written_checksum``);
 * ``pointer`` — after ``snapshot-N.json`` is written, before the
   ``current`` pointer flips (the ``os.replace`` onto ``current``);
 * ``mid_cow`` — between two copy-on-write part commits of one table
@@ -60,7 +61,7 @@ def _crash_on_call(monkeypatch, owner, name, nth, when=None):
 
 def _inject(monkeypatch, point, nth):
     if point == "checksum":
-        _crash_on_call(monkeypatch, lineage, "table_checksum", nth)
+        _crash_on_call(monkeypatch, lineage, "_written_checksum", nth)
     elif point == "pointer":
         _crash_on_call(monkeypatch, os, "replace", nth,
                        lambda src, dst, *a, **kw:

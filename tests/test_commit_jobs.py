@@ -23,15 +23,15 @@ from char_ner_spark.linking import union_find_canonical
 
 #: jobs apply_dictionary_update issues for a one-alias delta on a 1-part
 #: triples + edges KG, measured: 1 to collect the remap, 3 for the one
-#: semi-join that finds the affected triples part, 4 for that part's
-#: commit (the rewrite's query stages with the write, then the read-back
-#: checksum) and EDGES_COMMIT_JOBS for the edges part that follows it
-APPLY_JOB_BUDGET = 11
+#: semi-join that finds the affected triples part, 3 for that part's
+#: commit (the rewrite's query stages with the write) and
+#: EDGES_COMMIT_JOBS for the edges part that follows it
+APPLY_JOB_BUDGET = 9
 
 #: jobs relink_parts issues to re-link the 2 affected parts of a 2-part
 #: triples + edges + mentions + entities KG and refresh its entities,
 #: measured; a grouped rewrite would not grow with the parts rewritten
-RELINK_JOB_BUDGET = 30
+RELINK_JOB_BUDGET = 24
 
 #: jobs build_dictionary_state issues, measured: its alias tables and
 #: its union-find canonical map are driver-side frames
@@ -48,17 +48,17 @@ COMPACT_JOBS = 5
 
 #: jobs one work unit's edges commit issues, measured: the edges part is
 #: an aggregate over the unit's committed triples part, so its write is a
-#: shuffle map stage plus the write stage, then the read-back checksum
-EDGES_COMMIT_JOBS = 3
+#: shuffle map stage plus the write stage
+EDGES_COMMIT_JOBS = 2
 
 #: jobs one run_partitioned build issues (1 unit, all four sinks),
-#: measured: 5 for the triples commit (the query stages of the unit's one
-#: tag-link-relate pass and its distinct with the write, then the
-#: read-back checksum), 2 for the mentions commit over the persisted pass,
-#: EDGES_COMMIT_JOBS for the edges part and 3 for the entities commit. The
-#: staged plan (a separate probe job, link_pairs' eager checkpoint and
-#: the triples joins) issued 19
-BUILD_JOB_BUDGET = 13
+#: measured: 4 for the triples commit (the query stages of the unit's one
+#: tag-link-relate pass and its distinct with the write), 1 for the
+#: mentions commit over the persisted pass, EDGES_COMMIT_JOBS for the
+#: edges part and 1 for the entities commit (a driver-side frame). Each
+#: commit's checksum rides its write. The staged plan (a separate probe
+#: job, link_pairs' eager checkpoint and the triples joins) issued 19
+BUILD_JOB_BUDGET = 8
 
 _groups = itertools.count()
 
@@ -88,6 +88,19 @@ def _triples_df(spark, n=3):
                     "sent_idx int, conf double")
 
 
+def _assert_entries_on_disk(spark, out_dir, table):
+    """Each live entry of ``table``'s current snapshot records the (rows,
+    checksum) of its part as read back from disk."""
+    base, prefix = lineage._table_base(out_dir, table)
+    snap = lineage.current_snapshot(out_dir, table=table)
+    for p in snap["manifest"]:
+        if p["checksum"].startswith("superseded-by:"):
+            continue
+        back = lineage.read_parts(spark, f"{base}/{prefix}={p['part_id']}")
+        assert (p["rows"], p["checksum"]) == lineage.table_checksum(back), \
+            (table, p)
+
+
 def _assert_snapshot_matches_disk(spark, out_dir, stats):
     """In the current snapshot of each table a copy-on-write call rewrote,
     every live entry records the (rows, checksum) of its part on disk, and
@@ -98,13 +111,7 @@ def _assert_snapshot_matches_disk(spark, out_dir, stats):
                  if p["checksum"].startswith("superseded-by:")}
         assert tombs == {old: f"superseded-by:{new}"
                          for old, new in st["rewritten"]}, table
-        base, prefix = lineage._table_base(out_dir, table)
-        for p in snap["manifest"]:
-            if p["part_id"] not in tombs:
-                back = lineage.read_parts(
-                    spark, f"{base}/{prefix}={p['part_id']}")
-                assert (p["rows"], p["checksum"]) == \
-                    lineage.table_checksum(back), (table, p)
+        _assert_entries_on_disk(spark, out_dir, table)
 
 
 def test_bookkeeping_issues_no_jobs(spark, tmp_path):
@@ -124,13 +131,13 @@ def test_bookkeeping_issues_no_jobs(spark, tmp_path):
     assert n == 0
 
 
-def test_part_commit_is_two_jobs(spark, tmp_path):
-    """Write + checksum of the part read back from disk; the recorded
-    checksum is table_checksum's recipe over those bytes."""
+def test_part_commit_is_one_job(spark, tmp_path):
+    """The write is the commit's one job: the checksum observed on the rows
+    written is table_checksum's recipe over the part read back from disk."""
     d = str(tmp_path)
     rows, n = _jobs(spark, lambda: lineage.commit_part(
         spark, d, "triples", 0, _triples_df(spark), rows_in=3, n_parts=1))
-    assert n == 2
+    assert n == 1
     part = os.path.join(d, "triples", "part_id=0")
     back = spark.read.parquet(part)
     assert (rows[0]["rows_out"], rows[0]["checksum"]) == \
@@ -142,6 +149,129 @@ def test_part_commit_is_two_jobs(spark, tmp_path):
                                  "checksum": rows[0]["checksum"]}]
     assert snap["schema_json"] == back.schema.json()
     assert snap["checksum_ver"] == lineage.CHECKSUM_VER == 2
+
+
+def _count_read_backs(monkeypatch) -> list:
+    """Record each table_checksum call lineage makes: a commit makes one
+    only when it reads its part back."""
+    calls, real = [], lineage.table_checksum
+    monkeypatch.setattr(lineage, "table_checksum",
+                        lambda df: (calls.append(1), real(df))[1])
+    return calls
+
+
+def test_observed_checksum_equals_disk(spark, tmp_path, monkeypatch):
+    """A root-layout part (keyed by its directory name only) written from
+    three tasks and a zero-row part record the checksum of the bytes on
+    disk without reading the part back."""
+    d = str(tmp_path)
+    df = _triples_df(spark, 40).repartition(3)
+    for table, pid, frame, want in (("stream_triples", 7, df, 40),
+                                    ("triples", 0, df.limit(0), 0)):
+        read_back = _count_read_backs(monkeypatch)
+        rows = lineage.commit_part(spark, d, table, pid, frame, n_parts=1)
+        monkeypatch.undo()
+        assert (read_back, rows[0]["rows_out"]) == ([], want), table
+        _assert_entries_on_disk(spark, d, table)
+    # the root layout hashes the part without its batch_id key, as the
+    # leaf read back holds it
+    back = lineage.read_parts(spark, os.path.join(d, "batch_id=7"))
+    assert "batch_id" not in back.columns
+
+
+@pytest.mark.parametrize("miss", ["footer_count", "observation"])
+def test_checksum_falls_back_to_read_back(spark, tmp_path, monkeypatch,
+                                          miss):
+    """A footer row count that differs from the observed count, or a write
+    whose observation is missing, takes the read-back checksum: one more
+    job, and the entry still records the bytes on disk."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql import Observation
+
+    if miss == "footer_count":
+        real = lineage.pq.read_metadata
+        monkeypatch.setattr(lineage.pq, "read_metadata", lambda f: type(
+            "Meta", (), {"num_rows": real(f).num_rows + 1})())
+    else:
+        class Unobserved(Observation):
+            @property
+            def get(self):
+                raise Py4JJavaError("no observed metrics", spark._jvm.java
+                                    .lang.IllegalStateException("none"))
+
+        monkeypatch.setattr(lineage, "Observation", Unobserved)
+    read_back = _count_read_backs(monkeypatch)
+    d = str(tmp_path)
+    rows, n = _jobs(spark, lambda: lineage.commit_part(
+        spark, d, "triples", 0, _triples_df(spark, 10), n_parts=1))
+    assert (n, read_back, rows[0]["rows_out"]) == (2, [1], 10)
+    monkeypatch.undo()
+    _assert_entries_on_disk(spark, d, "triples")
+
+
+#: commits a part whose write stage fails the first attempt of task 1
+#: (after its first rows have passed the observation) under a
+#: ``local[2,3]`` master, narrow and after a shuffle; prints, per case,
+#: the recorded (rows, checksum), table_checksum of the part on disk, the
+#: read-back checksums the commit took and whether the failure fired
+_RETRIED_COMMIT = """
+import json, os, sys
+from pyspark import TaskContext
+from pyspark.sql import SparkSession, functions as F
+from char_ner_spark import lineage
+
+spark = (SparkSession.builder.master("local[2,3]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+out, marks = sys.argv[1], sys.argv[2]
+
+def fail_first(i):
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 1 and ctx.attemptNumber() == 0 and i % 1000 == 999:
+        open(os.path.join(marks, str(i)), "w").close()
+        raise RuntimeError("injected first-attempt failure")
+    return i * 3
+
+udf = F.udf(fail_first, "long")
+read_back = []
+real = lineage.table_checksum
+lineage.table_checksum = lambda df: (read_back.append(1), real(df))[1]
+res = {}
+for case, src in (("narrow", spark.range(0, 5000, 1, 3)),
+                  ("shuffled", spark.range(0, 5000, 1, 2).repartition(3))):
+    df = src.select("id", udf("id").alias("v"),
+                    (F.col("id") / 7).alias("conf"))
+    read_back.clear()
+    row = lineage.commit_part(spark, out, case, 0, df, n_parts=1)[0]
+    seen = list(read_back)
+    disk = real(lineage.read_parts(spark, f"{out}/{case}/part_id=0"))
+    res[case] = [[row["rows_out"], row["checksum"]], list(disk), seen,
+                 len(os.listdir(marks))]
+    for f in os.listdir(marks):
+        os.remove(os.path.join(marks, f))
+print(json.dumps(res))
+spark.stop()
+"""
+
+
+def test_observed_checksum_survives_task_retry(tmp_path):
+    """A task attempt that fails after its first rows passed the
+    observation leaves no trace in the recorded checksum: Spark merges a
+    result task's metrics from its successful attempt only."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (repo, os.environ.get("PYTHONPATH")) if p))
+    marks = tmp_path / "marks"
+    marks.mkdir()
+    res = subprocess.run(
+        [sys.executable, "-c", _RETRIED_COMMIT, str(tmp_path / "out"),
+         str(marks)],
+        capture_output=True, text=True, env=env, cwd=tmp_path, timeout=300)
+    assert res.returncode == 0, res.stderr[-3000:]
+    got = json.loads(res.stdout.strip().splitlines()[-1])
+    for case, (recorded, disk, read_back, failures) in got.items():
+        assert failures == 1, case  # the first attempt failed once
+        assert read_back == [], case  # the observation stood
+        assert recorded == disk and recorded[0] == 5000, case
 
 
 def test_edges_commit_job_count(spark, tmp_path, monkeypatch):
@@ -180,6 +310,8 @@ def test_build_job_budget(spark, tmp_path):
     assert {r["stage"] for r in rows} == {"triples", "edges", "mentions",
                                           "entities"}
     assert n <= BUILD_JOB_BUDGET, n
+    for table in ("triples", "edges", "mentions", "entities"):
+        _assert_entries_on_disk(spark, d, table)
     cols = ["subj", "pred", "obj", "url", "sent_idx", "conf"]
     got = lineage.read_triples(spark, d).toPandas()[cols]
     want = run_oracle(pages, alias)["triples"][cols]

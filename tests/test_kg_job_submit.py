@@ -81,3 +81,29 @@ def test_spark_submit_job_runs_and_resumes(spark, tmp_path):
     second = _run_job(zpath, pages_dir, out_dir, "--compact")
     assert second["units_run"] == 0          # full resume: nothing re-runs
     assert second["triples"] == first["triples"]
+
+
+#: prints the master and shuffle partitions build_session gives a driver
+#: spark-submit started
+_SUBMIT_MASTER = """
+from char_ner_spark.session import build_session
+spark = build_session("submit_master")
+print(spark.sparkContext.master,
+      spark.conf.get("spark.sql.shuffle.partitions"))
+spark.stop()
+"""
+
+
+def test_build_session_keeps_submit_master(tmp_path):
+    """Under spark-submit, build_session leaves the master to spark-submit
+    and sizes the shuffle partitions from it."""
+    script = tmp_path / "submit_master.py"
+    script.write_text(_SUBMIT_MASTER)
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", PYTHONPATH=os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p))
+    res = subprocess.run(
+        [_spark_submit(), "--master", "local[1]",
+         "--conf", "spark.ui.enabled=false", str(script)],
+        capture_output=True, text=True, env=env, cwd=tmp_path, timeout=300)
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert res.stdout.strip().splitlines()[-1] == "local[1] 1"

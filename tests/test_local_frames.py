@@ -116,3 +116,24 @@ def test_empty_pagerank_is_local(spark):
         ranks = pagerank(edges, **kw)
         _assert_local(ranks)
         assert ranks.count() == 0
+
+
+def test_canon_and_entities_are_local(spark):
+    """The canonical map and the entities dimension are driver-side
+    frames; the dimension's left merge with the map plans no join."""
+    from char_ner_spark.pipeline import (ENTITIES_DDL, build_dictionary_state,
+                                         canon_frame, entities_table)
+
+    d = _dict([(1, "a"), (2, "a"), (3, "c")])
+    canon = build_dictionary_state(spark, d)["canon"]
+    _assert_local(canon)
+    ents = entities_table(spark, d, canon_frame(spark, {1: 1, 2: 1}))
+    _assert_local(ents)
+    assert "Join" not in ents._jdf.queryExecution().executedPlan().toString()
+    assert ents.schema == local_frame(spark, [], ENTITIES_DDL).schema
+    want = [(1, 1, "E1", "en"), (2, 1, "E2", "en"), (3, None, "E3", "en")]
+    assert sorted(tuple(r) for r in ents.collect()) == want
+    # the same dimension from the driver dict a dictionary state carries
+    ents = entities_table(spark, d, {1: 1, 2: 1})
+    _assert_local(ents)
+    assert sorted(tuple(r) for r in ents.collect()) == want

@@ -25,19 +25,26 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 #: changes only when a plan does
 _VOLATILE = [
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
-    (re.compile(r"file:[^\s\],]*/(plan_audit_train_|plan_bgp_)[^/\s\],]+"),
+    (re.compile(r"file:[^\s\],]*/(plan_audit_train_|plan_bgp_|plan_commit_)"
+                r"[^/\s\],]+"),
      r"file:<tmp>/\1<random>"),
+    (re.compile(r"(?<=path=)/[^\s\],]*/(plan_commit_)[^/\s\],]+"),
+     r"<tmp>/\1<random>"),
+    (re.compile(r"[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}"), "<uuid>"),
 ]
+
+
+def mask(text: str) -> str:
+    for pattern, repl in _VOLATILE:
+        text = pattern.sub(repl, text)
+    return text
 
 
 def fmt(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
-    text = buf.getvalue()
-    for pattern, mask in _VOLATILE:
-        text = pattern.sub(mask, text)
-    return text
+    return mask(buf.getvalue())
 
 
 def clip(plan: str) -> str:
@@ -372,6 +379,60 @@ def main() -> int:
             ("all JVM (no Python eval in the plan)", "EvalPython" not in p16),
             ("map-side partial aggregation for the per-entity counts",
              "partial_count" in p16 or "HashAggregate" in p16),
+        ],
+    ))
+
+    # 17. part commits: lineage.commit_part observes each part's row count
+    # and checksum on the rows its write writes. The observation must sit
+    # directly under WriteFiles, in the write's result stage: Spark merges
+    # a result task's metrics from one successful attempt, while a shuffle
+    # map stage below an Exchange may re-run and count rows twice. The
+    # entities dimension is a driver-side frame, so its write scans a
+    # LocalTableScan and joins nothing. The plans are the executed ones a
+    # one-unit, four-sink build records in the SQL status store
+    from char_ner_spark import lineage
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = store.executionsList().size()
+    with tempfile.TemporaryDirectory(prefix="plan_commit_") as td:
+        lineage.run_partitioned(
+            spark, spark.createDataFrame(make_pages(20, seed=42,
+                                                    alias_df=alias)),
+            alias, td, n_parts=1,
+            sinks=("triples", "edges", "mentions", "entities"))
+    runs = store.executionsList()
+    writes = {}
+    for i in range(before, runs.size()):
+        plan = mask(runs.apply(i).physicalPlanDescription())
+        hit = re.search(r"InsertIntoHadoopFsRelationCommand\n.*?"
+                        r"plan_commit_<random>/(\w+)/part_id=", plan, re.S)
+        if hit:
+            writes[hit.group(1)] = plan
+
+    def observed_in_write(plan: str) -> bool:
+        tree = plan.split("\n\n")[0].splitlines()
+        at = [i for i, line in enumerate(tree) if "WriteFiles" in line]
+        return bool(at) and all(i + 1 < len(tree)
+                                and "CollectMetrics" in tree[i + 1]
+                                for i in at)
+
+    sections.append((
+        "part commits (checksum observed in the write's result stage)",
+        writes.get("triples", ""),
+        [
+            ("one write per sink",
+             sorted(writes) == ["edges", "entities", "mentions", "triples"]),
+            ("CollectMetrics directly under WriteFiles, no Exchange between",
+             len(writes) == 4 and all(map(observed_in_write,
+                                          writes.values()))),
+        ],
+    ))
+    p17 = writes.get("entities", "")
+    sections.append((
+        "entities commit (driver-side dimension)", p17,
+        [
+            ("writes a LocalTableScan", "LocalTableScan" in p17),
+            ("no join", "Join" not in p17),
         ],
     ))
 
