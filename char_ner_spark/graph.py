@@ -86,10 +86,12 @@ def pagerank(edges: DataFrame, alpha: float = 0.85, tol: float = 1e-9,
     the standard Google-matrix completion, so the result is the exact
     stationary distribution the NumPy oracle computes.
 
-    Dispatch: graphs up to ``distributed_threshold`` collapsed edges run
-    as ONE driver-side sparse power iteration (the entity graph is orders
-    of magnitude smaller than the corpus; a Spark round is ~seconds of
-    fixed latency and convergence needs ~130 of them). Past the threshold,
+    Dispatch: the collapsed edge count is observed on the eager checkpoint
+    of the collapsed graph, so it costs no job of its own. Graphs up to
+    ``distributed_threshold`` collapsed edges run as ONE driver-side
+    sparse power iteration (the entity graph is orders of magnitude
+    smaller than the corpus; a Spark round is ~seconds of fixed latency
+    and convergence needs ~130 of them). Past the threshold,
     the distributed loop below: ranks (|V| rows) join the edge table
     pre-partitioned once on ``src`` — the big side never re-shuffles —
     then one aggregation by ``dst``, and EXACTLY ONE Spark job per round
@@ -116,10 +118,13 @@ def pagerank(edges: DataFrame, alpha: float = 0.85, tol: float = 1e-9,
     g = edges.groupBy("src", "dst").agg(F.sum("weight").alias("w"))
     if not weighted:
         g = g.withColumn("w", F.lit(1.0))
-    g = g.localCheckpoint()  # consumed 2-4×: count probe, out_w, trans/collect
+    # eager: consumed 1-3× (out_w, trans/collect); the collapsed edge
+    # count the dispatch reads is observed on the checkpoint's own job
+    n_obs = Observation()
+    g = g.observe(n_obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
     seeds = (personalize.select("entity").distinct().localCheckpoint()
              if personalize is not None else None)
-    if g.count() <= distributed_threshold:
+    if n_obs.get["n"] <= distributed_threshold:
         seed_ids = (frozenset(r["entity"] for r in seeds.collect())
                     if seeds is not None else None)
         return _pagerank_driver(spark, g, alpha, tol, max_iter, exact_iters,

@@ -461,7 +461,8 @@ def relink_parts(
                 f"mentions part {old_pid} missing at {mdir}; cannot "
                 "re-link its triples"
             )
-        mentions = lineage.read_parts(spark, mdir).drop(prefix)
+        # split: link_pairs' AliasIndex probe runs in Python per surface
+        mentions = lineage.read_parts(spark, mdir, one_task=False).drop(prefix)
         linked = link_pairs(mentions, {"bands": dict_state["bands"]},
                             alias_pdf=alias_pdf)
         return extract_triples(linked, dict_state["canon"], middles)
@@ -529,11 +530,13 @@ def apply_dictionary_update(
     # the remap to the driver in ONE action: bounded by touched components
     # (the same broadcast-sized contract the per-part joins rely on). Its
     # keys drive the part pruning, and the per-part joins read it back as
-    # a local relation instead of recomputing the CC
-    remap_pdf = remap.toPandas()
-    if len(remap_pdf) == 0 and alias_pdf is None:
+    # a local relation instead of recomputing the CC. collect(), not
+    # toPandas(): on a local relation it issues no job
+    remap_rows = [tuple(r) for r in remap.select(
+        "old_canonical_id", "new_canonical_id").collect()]
+    if not remap_rows and alias_pdf is None:
         return {}
-    remap = local_frame(spark, remap_pdf, REMAP_DDL)
+    remap = local_frame(spark, remap_rows, REMAP_DDL)
 
     def remapped(table: str):
         base, prefix = lineage._table_base(out_dir, table)
@@ -567,5 +570,5 @@ def apply_dictionary_update(
             rewrites[table] = (("canonical_id",), remapped(table))
         # edges follow their triples part; mentions carry no canonical ids
     return _rewrite_parts(spark, out_dir, tables, rewrites,
-                          {int(k) for k in remap_pdf["old_canonical_id"]},
+                          {int(old) for old, _ in remap_rows},
                           retain)

@@ -148,13 +148,53 @@ def append_manifest(spark: SparkSession, out_dir: str, row: dict) -> None:
     os.replace(tmp, os.path.join(path, name))
 
 
-def read_parts(spark: SparkSession, *paths: str,
-               base: str | None = None) -> DataFrame:
+#: a read of stored parts holding at most this many bytes of data files,
+#: in no more files than the session has task slots, is one partition
+#: (:func:`read_parts`). Spark's default per-file open cost — below it,
+#: splitting a scan across cores saves nothing
+ONE_TASK_BYTES = 4 << 20
+
+
+def _within_one_task(spark: SparkSession, paths: tuple[str, ...]) -> bool:
+    """Whether the data files under ``paths`` hold at most
+    :data:`ONE_TASK_BYTES` in at most ``defaultParallelism`` files. Spark
+    would scan so few small files in one wave of about one file per task,
+    so one task opening them in turn costs little; past either bound (a
+    table of many small parts, where Spark spreads the file opens over
+    every core) the scan keeps its splits. Stops listing at the first path
+    past either bound."""
+    max_files = spark.sparkContext.defaultParallelism
+    n_files = total = 0
+    for path in paths:
+        files = _data_files(path)
+        n_files += len(files)
+        if n_files > max_files:
+            return False
+        total += sum(os.path.getsize(f) for f in files)
+        if total > ONE_TASK_BYTES:
+            return False
+    return True
+
+
+def read_parts(spark: SparkSession, *paths: str, base: str | None = None,
+               one_task: bool = True) -> DataFrame:
     """Read part directories with the schema Spark recorded in the first
     one's parquet footer, so the read launches no schema-inference job
     (the partition column of a ``base``-relative read is still discovered
     from the paths). Without such a footer the read falls back to
-    inference."""
+    inference.
+
+    Parts holding at most :data:`ONE_TASK_BYTES` in at most
+    ``defaultParallelism`` files read as one partition (``coalesce(1)``).
+    Spark reports a file scan's partitioning as unknown, which satisfies
+    no clustered distribution, so a ``distinct``, aggregate or join above
+    it plans an ``Exchange``: with AQE, a query stage submitted as a job
+    of its own. One partition satisfies every distribution, so such a
+    query over small parts runs as one stage. Larger reads, and reads of
+    more files than task slots, keep their file splits. So does a read
+    with ``one_task=False``: pass it when per-row Python work above the
+    scan (a ``mapInPandas`` probe), not the scan, sets the cost, so that
+    work spreads over the cores."""
     reader = spark.read
     files = _data_files(paths[0])
     js = (pq.read_schema(files[0]).metadata or {}).get(_SPARK_ROW_SCHEMA) \
@@ -163,7 +203,9 @@ def read_parts(spark: SparkSession, *paths: str,
         reader = reader.schema(StructType.fromJson(json.loads(js)))
     if base is not None:
         reader = reader.option("basePath", base)
-    return reader.parquet(*paths)
+    df = reader.parquet(*paths)
+    return (df.coalesce(1) if one_task and _within_one_task(spark, paths)
+            else df)
 
 
 def _checksum_aggs(df: DataFrame) -> list[Column]:
@@ -200,13 +242,6 @@ def table_checksum(df: DataFrame) -> tuple[int, str]:
     return _checksum(h["n"], h["s"])
 
 
-#: parts up to this size are checksummed in one task: the aggregate then
-#: needs no shuffle, so the checksum is one Spark job instead of a map
-#: stage plus a result stage. Spark's default per-file open cost — below
-#: it, splitting a part's scan across cores saves nothing
-ONE_TASK_CHECKSUM_BYTES = 4 << 20
-
-
 def _written_checksum(spark: SparkSession, part_path: str,
                       obs: Observation) -> tuple[int, str]:
     """(rows, checksum) of the part just written to ``part_path``.
@@ -215,7 +250,8 @@ def _written_checksum(spark: SparkSession, part_path: str,
     wrote them stand if the part's parquet footers hold as many rows
     (driver-side file IO, no job). Otherwise, or when the observation is
     missing (reading it raises, as :func:`_observed_rows` allows for),
-    the part is read back and checksummed: one more job."""
+    the part is read back (:func:`read_parts`, one partition when small)
+    and checksummed: one more job."""
     footer_rows = sum(pq.read_metadata(f).num_rows
                       for f in _data_files(part_path))
     try:
@@ -224,10 +260,7 @@ def _written_checksum(spark: SparkSession, part_path: str,
         seen = None
     if seen is not None and seen["n"] == footer_rows:
         return _checksum(seen["n"], seen["s"])
-    back = read_parts(spark, part_path)
-    size = sum(os.path.getsize(f) for f in _data_files(part_path))
-    return table_checksum(
-        back.coalesce(1) if size <= ONE_TASK_CHECKSUM_BYTES else back)
+    return table_checksum(read_parts(spark, part_path))
 
 
 def commit_part(spark: SparkSession, out_dir: str, table: str, pid: int,
@@ -665,10 +698,10 @@ def expire_snapshots(out_dir: str, table: str = "triples",
     return expired
 
 
-def compact_table(spark: SparkSession, out_dir: str, table: str = "triples",
-                  target_files: int = 1) -> dict[int, tuple[int, int]]:
+def compact_table(spark: SparkSession, out_dir: str, table: str = "triples"
+                  ) -> dict[int, tuple[int, int]]:
     """Small-file compaction for a snapshotted sink: rewrite each committed
-    part's many shuffle-task files as ``target_files`` coalesced files.
+    part's many shuffle-task files as one coalesced file.
 
     At K ~ 10k work units each leaving shuffle_partitions-many small
     parquet files, scan planning and file-open overhead dominate reads —
@@ -719,11 +752,11 @@ def compact_table(spark: SparkSession, out_dir: str, table: str = "triples",
         elif os.path.isdir(tmp):
             shutil.rmtree(tmp)  # stale tmp from a pre-verify crash
         files = [f for f in os.listdir(part) if f.endswith(".parquet")]
-        if len(files) <= target_files:
+        if len(files) <= 1:
             continue
         live = read_parts(spark, part)
         before = table_checksum(live)
-        live.coalesce(target_files).write.mode("overwrite").parquet(tmp)
+        live.coalesce(1).write.mode("overwrite").parquet(tmp)
         after = table_checksum(read_parts(spark, tmp))
         if after != before:
             shutil.rmtree(tmp)

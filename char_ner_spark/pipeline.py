@@ -920,7 +920,9 @@ def run_pipeline(
     Beyond it, the staged plan runs: :func:`tag_pages`, then
     :func:`link_pairs`' distributed LSH join and :func:`extract_triples`.
     Both give the same rows. ``dict_state`` defaults to
-    :func:`build_dictionary_state`."""
+    :func:`build_dictionary_state`. The result holds no entities
+    dimension: it is unit-invariant, so the writers that store it build it
+    once with :func:`entities_table` over ``out["canon"]``."""
     from pyspark import StorageLevel
 
     if dict_state is None:
@@ -946,8 +948,6 @@ def run_pipeline(
         "passed": passed,
         "mentions": mentions,
         "canon": canon,
-        "entities": entities_table(spark, alias_pdf,
-                                   dict_state["canon_map"]),
         "triples": triples,
         "edges": edges_from_triples(triples),
     }

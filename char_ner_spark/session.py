@@ -5,8 +5,8 @@ Centralizes the configs SURVEY.md §4.2 pins down:
   - Arrow on, bounded batch size (the engine's analog of char-ner's n_batch;
     ref:src/exper.py:~150-220 sorts/pads per batch — here one Arrow record
     batch is one padded tensor)
-  - shuffle partitions sized for the local core count (multi-executor
-    clusters override via spark-submit --conf)
+  - shuffle partitions sized for the master's task slots (multi-executor
+    clusters override via spark-submit --conf spark.sql.shuffle.partitions)
   - python worker reuse so broadcast model weights load once per worker
   - the driver JVM compiles with C1 only, with C1's inlining limits
     raised (``DRIVER_JIT_OPTIONS``). A local session's driver JVM runs
@@ -134,17 +134,22 @@ def build_session(
     spark-submit (which starts the JVM first and sets
     ``PYSPARK_GATEWAY_PORT``) it defaults to the master spark-submit was
     given. ``shuffle_partitions`` defaults to the master's task slots
-    (``$SPARK_GRAFT_CPUS`` for ``local[*]`` and cluster masters).
+    (``$SPARK_GRAFT_CPUS`` for ``local[*]`` and cluster masters); under
+    spark-submit, a ``spark.sql.shuffle.partitions`` it was given wins
+    over that default.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)
     elif "PYSPARK_GATEWAY_PORT" in os.environ:
-        # spark-submit's JVM holds the master as a system property, which
-        # a SparkConf reads once the gateway is up
+        # spark-submit's JVM holds its --master and --conf values as
+        # system properties, which a SparkConf reads once the gateway is up
         SparkContext._ensure_initialized()
-        master = SparkConf().get("spark.master", "")
+        submitted = SparkConf()
+        master = submitted.get("spark.master", "")
+        if shuffle_partitions is None:
+            shuffle_partitions = submitted.get("spark.sql.shuffle.partitions")
     else:
         master = f"local[{cpus}]"
         builder = builder.master(master)

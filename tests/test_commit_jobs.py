@@ -1,5 +1,6 @@
-"""Spark-job budget of the commit protocol, agreement of the O(1)
-copy-on-write snapshots with the parts on disk, and outputs holding a
+"""Spark-job budget of the commit protocol and of the read-back of a
+small stored KG (small parts read as one partition), agreement of the
+O(1) copy-on-write snapshots with the parts on disk, and outputs holding a
 leftover ``_lineage`` manifest, whose rows (from the Spark writer of older
 outputs or the driver-side pyarrow writer) commit state no longer reads;
 also the driver JVM options ``session.build_session`` starts with.
@@ -22,16 +23,22 @@ from char_ner_spark.fixtures import make_alias_table, make_pages
 from char_ner_spark.linking import union_find_canonical
 
 #: jobs apply_dictionary_update issues for a one-alias delta on a 1-part
-#: triples + edges KG, measured: 1 to collect the remap, 3 for the one
-#: semi-join that finds the affected triples part, 3 for that part's
-#: commit (the rewrite's query stages with the write) and
-#: EDGES_COMMIT_JOBS for the edges part that follows it
-APPLY_JOB_BUDGET = 9
+#: triples + edges KG, measured: none to collect the remap (a local
+#: relation), 2 for the one semi-join that finds the affected triples part
+#: (the broadcast key set, then the scan with its distinct part ids), 2
+#: for that part's commit (the broadcast remap, then the remap joins and
+#: the distinct in the write's one stage) and EDGES_COMMIT_JOBS for the
+#: edges part that follows it. Small parts read as one partition, so no
+#: aggregate above a part's scan plans a shuffle
+APPLY_JOB_BUDGET = 5
 
 #: jobs relink_parts issues to re-link the 2 affected parts of a 2-part
 #: triples + edges + mentions + entities KG and refresh its entities,
-#: measured; a grouped rewrite would not grow with the parts rewritten
-RELINK_JOB_BUDGET = 24
+#: measured; a grouped rewrite would not grow with the parts rewritten.
+#: The mentions reads keep their file splits (the Python alias probe above
+#: them spreads over the cores), so each part's surface distinct still
+#: shuffles; the other reads are one partition
+RELINK_JOB_BUDGET = 21
 
 #: jobs build_dictionary_state issues, measured: its alias tables and
 #: its union-find canonical map are driver-side frames
@@ -41,15 +48,16 @@ DICT_STATE_JOBS = 0
 #: union-find over the contracted graph reads the state's canon_map dict
 DICT_UPDATE_JOBS = 0
 
-#: jobs compact_table issues to compact one 4-file part, measured: both
-#: reads (the live part and its coalesced copy) take their schema from the
-#: parquet footer, so none of the jobs infers a schema
-COMPACT_JOBS = 5
+#: jobs compact_table issues to compact one 4-file part, measured: the
+#: live part's checksum, the coalesced write and the copy's checksum. Both
+#: reads take their schema from the parquet footer and read as one
+#: partition, so each checksum aggregate is one job
+COMPACT_JOBS = 3
 
 #: jobs one work unit's edges commit issues, measured: the edges part is
-#: an aggregate over the unit's committed triples part, so its write is a
-#: shuffle map stage plus the write stage
-EDGES_COMMIT_JOBS = 2
+#: an aggregate over the unit's committed triples part, which reads as one
+#: partition, so the aggregate runs in the write's one stage
+EDGES_COMMIT_JOBS = 1
 
 #: jobs one run_partitioned build issues (1 unit, all four sinks),
 #: measured: 4 for the triples commit (the query stages of the unit's one
@@ -58,7 +66,23 @@ EDGES_COMMIT_JOBS = 2
 #: edges part and 1 for the entities commit (a driver-side frame). Each
 #: commit's checksum rides its write. The staged plan (a separate probe
 #: job, link_pairs' eager checkpoint and the triples joins) issued 19
-BUILD_JOB_BUDGET = 8
+BUILD_JOB_BUDGET = 7
+
+#: jobs kg_refresh's 2-hop BGP issues over read_triples of a one-part
+#: KG, measured: the triples read as one partition, so the distinct leg
+#: scans and their join run as one stage under one broadcast
+BGP_JOBS = 2
+
+#: jobs pagerank issues over read_edges of a one-part KG, measured: the
+#: eager checkpoint of the collapsed graph (the edges read as one
+#: partition, so read_edges' and the collapse's aggregates run in its one
+#: stage, which also observes the edge count) and the driver path's
+#: collect
+PAGERANK_JOBS = 2
+
+#: the 2-hop BGP kg_refresh reads back
+BGP_QUERY = ("SELECT ?p ?o ?c WHERE { ?p works_for ?o . "
+             "?o located_in ?c . }")
 
 _groups = itertools.count()
 
@@ -424,6 +448,155 @@ def test_compact_table_job_budget(spark, tmp_path):
     stats, n = _jobs(spark, lambda: lineage.compact_table(spark, d))
     assert stats == {0: (4, 1)}
     assert n <= COMPACT_JOBS, n
+
+
+def _refresh_kg(spark, out_dir, files=1):
+    """A one-part triples + edges KG shaped like kg_refresh's base KG:
+    works_for and located_in triples, each part written as ``files``
+    files. Returns the triples as a pandas frame."""
+    from char_ner_spark.pipeline import edges_from_triples
+
+    n = 48
+    pdf = pd.DataFrame({
+        "subj": [i % 12 for i in range(n)],
+        "pred": ["works_for", "located_in"] * (n // 2),
+        "obj": [(5 * i + 3) % 12 for i in range(n)],
+        "url": [f"u{i}" for i in range(n)], "sent_idx": list(range(n)),
+        "conf": [0.5 + i / 64 for i in range(n)]})
+    lineage.commit_part(spark, out_dir, "triples", 0, spark.createDataFrame(
+        pdf, schema="subj long, pred string, obj long, url string, "
+                    "sent_idx int, conf double").repartition(files),
+                        n_parts=1)
+    lineage.commit_part(spark, out_dir, "edges", 0, edges_from_triples(
+        lineage.committed_triples(spark, out_dir, 0)).repartition(files),
+                        n_parts=1)
+    return pdf
+
+
+def _bgp(spark, out_dir):
+    from char_ner_spark import graph, sparql
+
+    args = sparql.parse(BGP_QUERY)
+    triples = lineage.read_triples(spark, out_dir).drop("part_id")
+    return {(r["p"], r["o"], r["c"]) for r in graph.match_pattern(
+        triples, args.pop("pattern"), **args).collect()}
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_small_parts_read_as_one_partition(spark, tmp_path, monkeypatch):
+    """A part within ONE_TASK_BYTES reads as one partition, so a distinct
+    over it plans no Exchange; past the threshold, or with one_task=False
+    (a read feeding per-row Python work), the read keeps its file splits
+    and plans as before."""
+    d = str(tmp_path)
+    lineage.commit_part(spark, d, "triples", 0,
+                        _triples_df(spark, 40).repartition(4), n_parts=1)
+    part = os.path.join(d, "triples", "part_id=0")
+    small = lineage.read_parts(spark, part)
+    assert small.rdd.getNumPartitions() == 1
+    plan = _plan(small.distinct())
+    assert "Coalesce 1" in plan and "Exchange" not in plan, plan
+    assert lineage.read_parts(
+        spark, part, one_task=False).rdd.getNumPartitions() == 4
+    monkeypatch.setattr(lineage, "ONE_TASK_BYTES", 0)
+    split = lineage.read_parts(spark, part)
+    assert split.rdd.getNumPartitions() == 4
+    plan = _plan(split.distinct())
+    assert "Coalesce" not in plan and "Exchange" in plan, plan
+
+
+def test_many_small_files_keep_their_splits(spark, tmp_path):
+    """A read of more data files than the session has task slots keeps
+    its file splits however few bytes they hold, so many small parts (a
+    stream of micro-batches, uncompacted work units) are not opened one
+    after another in one task."""
+    d = str(tmp_path)
+    slots = spark.sparkContext.defaultParallelism
+    for pid in range(slots + 1):
+        lineage.commit_part(spark, d, "triples", pid,
+                            _triples_df(spark, 2).coalesce(1),
+                            n_parts=slots + 1)
+    paths = [os.path.join(d, "triples", f"part_id={p}")
+             for p in range(slots)]
+    assert lineage.read_parts(spark, *paths).rdd.getNumPartitions() == 1
+    every = lineage.read_triples(spark, d)
+    assert every.rdd.getNumPartitions() > 1
+    plan = _plan(every.distinct())
+    assert "Coalesce" not in plan and "Exchange" in plan, plan
+
+
+def test_read_back_job_budgets(spark, tmp_path):
+    """kg_refresh's read-back over a small stored KG: the 2-hop BGP over
+    read_triples and PageRank over read_edges stay within their budgets
+    and answer as pandas does over the stored triples."""
+    from char_ner_spark import graph
+
+    d = str(tmp_path)
+    pdf = _refresh_kg(spark, d)
+    got, n = _jobs(spark, lambda: _bgp(spark, d))
+    assert n <= BGP_JOBS, n
+    t = pdf.drop_duplicates(["subj", "pred", "obj"])
+    works = t[t.pred == "works_for"].rename(columns={"subj": "p", "obj": "o"})
+    located = t[t.pred == "located_in"].rename(
+        columns={"subj": "o", "obj": "c"})
+    want = works[["p", "o"]].merge(located[["o", "c"]], on="o")
+    assert got and got == set(map(tuple, want.itertuples(index=False)))
+    ranks, n = _jobs(spark, lambda: graph.pagerank(
+        lineage.read_edges(spark, d)).collect())
+    assert n <= PAGERANK_JOBS, n
+    assert {r["entity"] for r in ranks} == set(t.subj) | set(t.obj)
+    assert sum(r["rank"] for r in ranks) == pytest.approx(1.0, abs=1e-9)
+
+
+def test_split_reads_answer_alike(spark, tmp_path, monkeypatch):
+    """With ONE_TASK_BYTES = 0 every read keeps its file splits. A
+    copy-on-write update then records the same snapshot entries, the BGP
+    returns the same solutions and PageRank the same ranks as with small
+    parts read as one partition."""
+    from char_ner_spark import graph
+    from char_ner_spark.incremental import REMAP_DDL, apply_dictionary_update
+    from char_ner_spark.session import local_frame
+
+    runs = []
+    for one_task in (lineage.ONE_TASK_BYTES, 0):
+        monkeypatch.setattr(lineage, "ONE_TASK_BYTES", one_task)
+        d = str(tmp_path / f"kg{one_task}")
+        _refresh_kg(spark, d, files=4)
+        assert lineage.read_triples(spark, d).rdd.getNumPartitions() == \
+            (1 if one_task else 4)
+        stats = apply_dictionary_update(
+            spark, d, local_frame(spark, [(7, 1), (9, 2)], REMAP_DDL))
+        _assert_snapshot_matches_disk(spark, d, stats)
+        entries = {t: [(p["part_id"], p["rows"], p["checksum"])
+                       for p in lineage.current_snapshot(d, table=t)
+                       ["manifest"]] for t in ("triples", "edges")}
+        ranks = {r["entity"]: r["rank"] for r in graph.pagerank(
+            lineage.read_edges(spark, d)).collect()}
+        runs.append((entries, _bgp(spark, d), ranks))
+    (entries, bgp, ranks), (entries0, bgp0, ranks0) = runs
+    assert entries == entries0
+    assert bgp and bgp == bgp0
+    assert ranks.keys() == ranks0.keys()
+    assert all(abs(ranks[v] - ranks0[v]) < 1e-12 for v in ranks)
+
+
+def test_pagerank_on_empty_edges(spark, tmp_path):
+    """PageRank over an empty graph (a zero-row stored edges part, an empty
+    local frame) returns no rows on both paths: the observed edge count
+    fires on an empty checkpoint too."""
+    from char_ner_spark import graph
+    from char_ner_spark.session import local_frame
+
+    ddl = "src long, dst long, rel string, weight double"
+    d = str(tmp_path)
+    lineage.commit_part(spark, d, "edges", 0, local_frame(spark, [], ddl),
+                        n_parts=1)
+    for edges in (lineage.read_edges(spark, d), local_frame(spark, [], ddl)):
+        for kw in ({}, {"distributed_threshold": 0}):
+            assert graph.pagerank(edges, **kw).collect() == []
 
 
 def _spark_manifest_append(spark, out_dir, rows):

@@ -67,7 +67,7 @@ def test_export_pipeline_kg(spark, tmp_path):
     triple, re-readable from the text shards."""
     from char_ner_spark.export import (entities_to_ntriples,
                                        triples_to_ntriples, write_ntriples)
-    from char_ner_spark.pipeline import run_pipeline
+    from char_ner_spark.pipeline import entities_table, run_pipeline
 
     alias = make_alias_table(40, seed=17)
     pages = make_pages(20, seed=17, alias_df=alias)
@@ -76,7 +76,7 @@ def test_export_pipeline_kg(spark, tmp_path):
     if n_triples == 0:
         pytest.skip("fixture produced no triples")
     nt = triples_to_ntriples(out["triples"]).unionAll(
-        entities_to_ntriples(out["entities"]))
+        entities_to_ntriples(entities_table(spark, alias, out["canon"])))
     path = str(tmp_path / "kg_nt")
     write_ntriples(nt, path)
     back = [r.value for r in spark.read.text(path).collect()]

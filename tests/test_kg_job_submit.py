@@ -94,16 +94,30 @@ spark.stop()
 """
 
 
-def test_build_session_keeps_submit_master(tmp_path):
-    """Under spark-submit, build_session leaves the master to spark-submit
-    and sizes the shuffle partitions from it."""
+def _submit_master(tmp_path, *conf: str) -> str:
+    """The last line _SUBMIT_MASTER prints under ``SPARK_GRAFT_CPUS=2
+    spark-submit --master local[1]`` with ``conf`` (``key=value``)."""
     script = tmp_path / "submit_master.py"
     script.write_text(_SUBMIT_MASTER)
     env = dict(os.environ, SPARK_GRAFT_CPUS="2", PYTHONPATH=os.pathsep.join(
         p for p in (REPO, os.environ.get("PYTHONPATH")) if p))
     res = subprocess.run(
         [_spark_submit(), "--master", "local[1]",
-         "--conf", "spark.ui.enabled=false", str(script)],
+         "--conf", "spark.ui.enabled=false",
+         *[a for kv in conf for a in ("--conf", kv)], str(script)],
         capture_output=True, text=True, env=env, cwd=tmp_path, timeout=300)
     assert res.returncode == 0, res.stderr[-3000:]
-    assert res.stdout.strip().splitlines()[-1] == "local[1] 1"
+    return res.stdout.strip().splitlines()[-1]
+
+
+def test_build_session_keeps_submit_master(tmp_path):
+    """Under spark-submit, build_session leaves the master to spark-submit
+    and sizes the shuffle partitions from it."""
+    assert _submit_master(tmp_path) == "local[1] 1"
+
+
+def test_build_session_keeps_submit_shuffle_partitions(tmp_path):
+    """Under spark-submit, a shuffle partition count spark-submit was
+    given wins over the one build_session sizes from the master."""
+    assert _submit_master(
+        tmp_path, "spark.sql.shuffle.partitions=8") == "local[1] 8"

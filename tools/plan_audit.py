@@ -25,7 +25,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 #: changes only when a plan does
 _VOLATILE = [
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
-    (re.compile(r"file:[^\s\],]*/(plan_audit_train_|plan_bgp_|plan_commit_)"
+    (re.compile(r"file:[^\s\],]*/(plan_audit_train_|plan_bgp_|plan_commit_|"
+                r"plan_read_)"
                 r"[^/\s\],]+"),
      r"file:<tmp>/\1<random>"),
     (re.compile(r"(?<=path=)/[^\s\],]*/(plan_commit_)[^/\s\],]+"),
@@ -433,6 +434,56 @@ def main() -> int:
         [
             ("writes a LocalTableScan", "LocalTableScan" in p17),
             ("no join", "Join" not in p17),
+        ],
+    ))
+
+    # 18. stored-table reads: a small part reads as one partition
+    # (lineage.read_parts' coalesce(1)), whose SinglePartition satisfies
+    # every distribution, so neither kg_refresh's 2-hop BGP over
+    # read_triples nor PageRank's collapse over read_edges plans an
+    # Exchange. The collapse plan is the executed one of pagerank's eager
+    # checkpoint, which also observes the collapsed edge count
+    from char_ner_spark import graph
+    from char_ner_spark.pipeline import edges_from_triples
+
+    def one_partition(plan: str) -> bool:
+        coalesced = re.findall(r"\(\d+\) Coalesce\n.*\nArguments: (\d+)",
+                               plan)
+        return bool(coalesced) and set(coalesced) == {"1"}
+
+    with tempfile.TemporaryDirectory(prefix="plan_read_") as kg:
+        lineage.commit_part(spark, kg, "triples", 0, tri_pq, n_parts=1)
+        lineage.commit_part(spark, kg, "edges", 0, edges_from_triples(
+            lineage.committed_triples(spark, kg, 0)), n_parts=1)
+        p18 = fmt(match_pattern(
+            lineage.read_triples(spark, kg).drop("part_id"),
+            [("?p", "works_for", "?o"), ("?o", "located_in", "?c")]))
+        before = store.executionsList().size()
+        graph.pagerank(lineage.read_edges(spark, kg)).collect()
+        runs = store.executionsList()
+        p18b = next((mask(runs.apply(i).physicalPlanDescription())
+                     for i in range(before, runs.size())
+                     if runs.apply(i).description().startswith(
+                         "localCheckpoint")), "")
+    sections.append((
+        "read_triples → 2-hop BGP (one-partition reads, no shuffle)", p18,
+        [
+            ("each leg's scan reads as one partition (Coalesce 1)",
+             len(re.findall(r"\(\d+\) Scan parquet", p18)) == 2
+             and len(re.findall(r"\(\d+\) Coalesce", p18)) == 2
+             and one_partition(p18)),
+            ("no shuffle Exchange", not re.search(r"\bExchange\b", p18)),
+        ],
+    ))
+    sections.append((
+        "read_edges → PageRank collapse (executed, edge count observed)",
+        p18b,
+        [
+            ("the edges scan reads as one partition (Coalesce 1)",
+             one_partition(p18b)),
+            ("no Exchange", "Exchange" not in p18b),
+            ("the edge count is observed on the checkpoint",
+             "CollectMetrics" in p18b),
         ],
     ))
 
