@@ -48,10 +48,6 @@ _EXPORTS = {
     # streaming
     "stream_pages": "streaming",
     "stream_triples": "streaming",
-    "streamed_mentions": "streaming",
-    "windowed_page_counts": "streaming",
-    "dedup_pages_stream": "streaming",
-    "sessionize_stream": "streaming",
     # sources / sinks
     "read_conll": "sources",
     # evaluation

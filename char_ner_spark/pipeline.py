@@ -169,91 +169,6 @@ def _tag_pages_batches_fn(weights_map: dict[str, dict] | None = None):
     return go
 
 
-#: default (seeded-weights) instance — the streaming surface imports this
-_tag_pages_batches = _tag_pages_batches_fn(None)
-
-
-#: domain of a page url (JVM regexp — no Python crossing)
-_DOMAIN_RE = r"^[a-z]+://([^/]+)"
-
-
-def _domain_col(url_col="url"):
-    return F.regexp_extract(F.col(url_col), _DOMAIN_RE, 1)
-
-
-def derive_salt(pages: DataFrame, n_parts: int | None = None,
-                sample_fraction: float = 0.01, seed: int = 42,
-                min_salt: int = 16) -> tuple[int, dict]:
-    """Measure domain skew on a seeded url sample and derive the salt
-    (bucket count) a BOUNDED-key repartition/aggregation needs to stay
-    balanced (round-5 item; A7 per-domain histograms). One extra narrow
-    job: sample 1% of the pruned url column, count per domain, take the
-    max share. salt = next power of two ≥ 2 · max_share · n_parts,
-    clamped to [min_salt, 4·n_parts] — i.e. the hottest domain splits
-    into enough buckets that no partition carries more than ~half a
-    partition's fair share of it. Returns (salt, stats) where stats
-    carries the evidence (max domain share, sampled rows, top domain);
-    callers surface it through ``df.observe`` so it rides the action into
-    the lineage metrics. Scale note: at 100 TB this reads ONE pruned
-    column at 1% — the same probe a real cluster job would run — and the
-    aggregate is partial-agg'd map-side (#domains rows cross the wire)."""
-    if n_parts is None:
-        n_parts = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # one narrow job: per-domain partial counts, then a single-row rollup of
-    # (hottest domain, total sampled rows)
-    row = (
-        pages.select(_domain_col().alias("domain"))
-        .sample(fraction=sample_fraction, seed=seed)
-        .groupBy("domain")
-        .count()
-        .agg(
-            F.max(F.struct(F.col("count"), F.col("domain"))).alias("top"),
-            F.sum("count").alias("total"),
-        )
-        .collect()[0]
-    )
-    total = row["total"] or 0
-    if total == 0:
-        return min_salt, {"max_domain_share_e6": 0, "sampled_rows": 0,
-                          "top_domain": None, "salt": min_salt}
-    top = row["top"]
-    max_share = top["count"] / total
-    salt = min_salt
-    while salt < min(2 * max_share * n_parts, 4 * n_parts):
-        salt *= 2
-    stats = {
-        "max_domain_share_e6": int(max_share * 1_000_000),
-        "sampled_rows": int(total),
-        "top_domain": top["domain"],
-        "salt": int(salt),
-    }
-    return int(salt), stats
-
-
-def domain_histogram(pages: DataFrame, salt: int | str = "auto") -> DataFrame:
-    """Per-domain page count + byte volume (SURVEY §2.4 A7) as a two-stage
-    skew-salted aggregation: stage 1 partial-aggregates on the bounded key
-    (domain, url-hash mod salt) so one hot domain spreads over `salt`
-    reducers; stage 2 merges the ≤ #domains·salt partials. With
-    salt="auto" the bucket count comes from :func:`derive_salt`'s measured
-    skew and the evidence rides the action via ``observe`` (metrics
-    ``domain_salt``). Output is identical to a naive groupBy(domain) —
-    the skew test pins that."""
-    pages, salt = _resolve_salt(pages, salt)
-    stage1 = (
-        pages.select(
-            _domain_col().alias("domain"),
-            F.pmod(F.xxhash64("url"), F.lit(int(salt))).alias("bucket"),
-            F.length("html").alias("n_bytes"),
-        )
-        .groupBy("domain", "bucket")
-        .agg(F.count(F.lit(1)).alias("pages"), F.sum("n_bytes").alias("bytes"))
-    )
-    return stage1.groupBy("domain").agg(
-        F.sum("pages").alias("pages"), F.sum("bytes").alias("bytes")
-    )
-
-
 def _salted_repartition(df: DataFrame, salt: int) -> DataFrame:
     """Spread pages evenly by url hash — the unbounded salt. This defuses
     host/domain/lang skew completely (urls are unique), and the tagger UDF
@@ -262,49 +177,26 @@ def _salted_repartition(df: DataFrame, salt: int) -> DataFrame:
     partitions unevenly — measured stragglers at 32 partitions.) `salt`
     is therefore a hash SEED here, not a bucket count: per-row keys need
     no skew factor, which the domain-skew test pins (one domain = 50% of
-    pages still yields balanced partitions). The measured-skew salt from
-    :func:`derive_salt` parameterizes the bounded-key aggs
-    (:func:`domain_histogram`) where bucket count genuinely matters."""
+    pages still yields balanced partitions)."""
     n = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     return df.repartition(int(n), F.xxhash64("url", F.lit(salt)))
 
 
-def _resolve_salt(df: DataFrame, salt: int | str) -> tuple[DataFrame, int]:
-    """salt="auto" → derive from measured domain skew and attach the
-    evidence to the frame via observe (metrics ``domain_salt``)."""
-    if salt != "auto":
-        return df, int(salt)
-    derived, stats = derive_salt(df)
-    df = df.observe(
-        "domain_salt",
-        F.max(F.lit(stats["salt"])).alias("salt"),
-        F.max(F.lit(stats["max_domain_share_e6"])).alias("max_domain_share_e6"),
-        F.max(F.lit(stats["sampled_rows"])).alias("sampled_rows"),
-    )
-    return df, derived
-
-
-def tag_pages(pages: DataFrame, salt: int | str = 16,
+def tag_pages(pages: DataFrame, salt: int = 16,
               weights_map: dict[str, dict] | None = None) -> DataFrame:
     """pages(url, html, lang) → mentions, extracting text inside the same
     UDF: the tagger's one batch entry point (extract_text_df stays the
     byte-identity surface). html length is the padding-sort proxy for
-    text length.
-    salt="auto" derives the value from measured domain skew
-    (:func:`derive_salt`) and logs the evidence through observe; the
-    default stays a fixed seed because the per-row url-hash key is
-    skew-immune (see :func:`_salted_repartition`) and the extra sampled
-    probe job is only worth paying when the caller wants the skew metrics
-    recorded."""
+    text length."""
     return _page_batches(pages, salt).mapInPandas(
         _tag_pages_batches_fn(weights_map), schema=_MENTION_SCHEMA)
 
 
-def _page_batches(pages: DataFrame, salt: int | str) -> DataFrame:
+def _page_batches(pages: DataFrame, salt: int) -> DataFrame:
     """The tagger's input: (url, html, lang) spread by the salted url hash,
     each partition sorted by html length."""
-    pages, salt = _resolve_salt(pages.select("url", "html", "lang"), salt)
-    return _salted_repartition(pages, salt).sortWithinPartitions(
+    return _salted_repartition(
+        pages.select("url", "html", "lang"), salt).sortWithinPartitions(
         F.length("html"))
 
 
@@ -783,7 +675,7 @@ def _pair_triples(m: pd.DataFrame, index,
 
 
 def kg_pass(pages: DataFrame, alias_pdf: pd.DataFrame,
-            canon_map: dict[int, int], salt: int | str = 16,
+            canon_map: dict[int, int], salt: int = 16,
             weights_map: dict[str, dict] | None = None) -> DataFrame:
     """pages(url, html, lang) → :data:`_PASS_SCHEMA` rows in ONE Python
     pass per page batch: extract + tag (:func:`_tag_pdf`), probe every
@@ -907,7 +799,7 @@ def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     alias_pdf: pd.DataFrame,
-    salt: int | str = 16,
+    salt: int = 16,
     dict_state: dict | None = None,
     weights_map: dict[str, dict] | None = None,
 ) -> dict[str, DataFrame]:

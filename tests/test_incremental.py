@@ -567,3 +567,44 @@ def test_stream_resume_after_cow_keeps_rewrites(spark, base_alias,
     assert any(i < _STREAM_REWRITE_PID_BASE for i in new_ids)
     assert key(after_cow) < key(final_pdf)
     assert len(final_pdf) == len(key(final_pdf))  # no duplicates
+
+
+@pytest.mark.xfail(strict=True, raises=AssertionError,
+                   reason="an update only remaps canonical ids: a delta alias "
+                          "that outbids an old one for a surface changes the "
+                          "link winner and its score, which only a relink "
+                          "picks up (ROADMAP item 15)")
+def test_one_alias_update_matches_oracle_over_union(spark, tmp_path):
+    """After a one-alias update of kg_refresh's shape (200 pages, 500
+    entities), the stored triples equal the oracle's over the union
+    dictionary: same count, same table checksum."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from char_ner_spark import lineage
+    from char_ner_spark.incremental import (apply_dictionary_update,
+                                            update_dictionary_state)
+    from char_ner_spark.oracle import run_oracle
+    from char_ner_spark.pipeline import build_dictionary_state
+
+    alias = make_alias_table(500, seed=7)
+    pages = make_pages(200, seed=7, alias_df=alias)
+    d = str(tmp_path)
+    lineage.run_partitioned(spark, spark.createDataFrame(pages), alias, d,
+                            n_parts=1, sinks=("triples", "edges"))
+    stored = lineage.read_triples(spark, d).drop("part_id").toPandas()
+    ids = sorted(set(stored["subj"]) | set(stored["obj"]))
+    a, b = np.random.RandomState(7).choice(ids, 2, replace=False)
+    a_alias = alias.loc[alias.entity_id == a, "alias"].iloc[0]
+    delta = pd.DataFrame([_row(int(b), "Bridge 0", a_alias)],
+                         columns=ALIAS_COLS)
+    union = pd.concat([alias, delta], ignore_index=True)
+    new_state, remap = update_dictionary_state(
+        spark, build_dictionary_state(spark, alias), alias, delta)
+    apply_dictionary_update(spark, d, remap, alias_pdf=union,
+                            canon=new_state["canon"])
+
+    got = lineage.read_triples(spark, d).drop("part_id")
+    want = spark.createDataFrame(run_oracle(pages, union)["triples"]).select(
+        *[F.col(f.name).cast(f.dataType) for f in got.schema])
+    assert lineage.table_checksum(got) == lineage.table_checksum(want)

@@ -20,206 +20,75 @@ def pages_dir(spark):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_windowed_page_counts_match_batch(spark, pages_dir):
-    ck = tempfile.mkdtemp()
-    try:
-        stream = ST.stream_pages(spark, pages_dir)
-        assert stream.isStreaming
-        # complete mode: the fixture spans ~18 min < the 1h watermark, so in
-        # append mode no window would close before the stream drains
-        res = ST.run_stream_to_memory(
-            spark, ST.windowed_page_counts(stream), "win_counts", ck,
-            output_mode="complete",
-        ).toPandas()
-        # batch oracle: same aggregation without streaming
-        from pyspark.sql import functions as F
-
-        batch = (
-            spark.read.parquet(pages_dir)
-            .groupBy(F.window("warc_ts", "10 minutes").alias("win"), "lang")
-            .agg(F.count(F.lit(1)).alias("n_pages"))
-            .select(F.col("win.start").alias("win_start"), "lang", "n_pages")
-            .toPandas()
-        )
-        got = {(r.win_start, r.lang): r.n_pages for r in res.itertuples()}
-        want = {(r.win_start, r.lang): r.n_pages for r in batch.itertuples()}
-        assert got == want and sum(got.values()) == 30
-    finally:
-        shutil.rmtree(ck, ignore_errors=True)
-
-
-def test_streamed_mentions_match_batch(spark, pages_dir):
-    from char_ner_spark.pipeline import tag_pages
-
-    ck = tempfile.mkdtemp()
-    try:
-        stream = ST.stream_pages(spark, pages_dir)
-        res = ST.run_stream_to_memory(
-            spark, ST.streamed_mentions(stream), "stream_mentions", ck
-        ).toPandas()
-        batch = tag_pages(spark.read.parquet(pages_dir)).toPandas()
-        cols = ["url", "sent_idx", "begin", "end", "surface", "ner_type"]
-        assert set(map(tuple, res[cols].itertuples(index=False))) == set(
-            map(tuple, batch[cols].itertuples(index=False))
-        )
-        assert len(res) > 0
-    finally:
-        shutil.rmtree(ck, ignore_errors=True)
-
-
 def test_stream_exactly_once_on_restart(spark, pages_dir):
-    """Re-running with the same checkpoint reprocesses nothing."""
+    """Re-running with the same checkpoint reprocesses nothing: the second
+    drain commits no snapshot and returns the same rows."""
+    from char_ner_spark import lineage
+
+    alias = make_alias_table(60, seed=42)
     ck = tempfile.mkdtemp()
     out = tempfile.mkdtemp()
-    sink = os.path.join(out, "mentions")
+    sink = os.path.join(out, "triples")
+    key = ["subj", "pred", "obj", "url", "sent_idx", "batch_id"]
 
-    def drain() -> int:
-        q = (
-            ST.streamed_mentions(ST.stream_pages(spark, pages_dir))
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(sink).count()
+    def drain():
+        rows = ST.stream_triples(spark, pages_dir, alias, sink, ck).toPandas()
+        snap = lineage.current_snapshot(sink, table="stream_triples")
+        return sorted(map(tuple, rows[key].itertuples(index=False))), \
+            snap["snapshot_id"]
 
     try:
-        first = drain()
-        assert first > 0
+        first, s1 = drain()
+        assert len(first) > 0
         # restart with same checkpoint + no new input files → nothing re-emitted
-        assert drain() == first
+        second, s2 = drain()
+        assert s2 == s1
+        assert second == first
     finally:
         shutil.rmtree(ck, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
 
 
-def test_sessionize_stream_state_across_microbatches(spark):
-    """applyInPandasWithState sessionizer: two time-ordered files stream as
-    two micro-batches (maxFilesPerTrigger=1); per-user session totals must
-    equal the batch gap-sessionization — i.e. state genuinely carries the
-    last-event time across the batch boundary."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    rng = np.random.RandomState(7)
-    rows = []
-    t0 = 1_700_000_000
-    for uid in range(6):
-        t = t0 + uid
-        for _ in range(40):
-            t += int(rng.choice([60, 300, 2400], p=[0.6, 0.3, 0.1]))
-            rows.append((uid, t))
-    pdf = pd.DataFrame(rows, columns=["user_id", "ts_epoch"])
-    pdf["ts"] = pd.to_datetime(pdf.ts_epoch, unit="s")
-    cut = pdf.ts_epoch.quantile(0.5)
-    d = tempfile.mkdtemp()
-    ck = tempfile.mkdtemp()
-    try:
-        src = os.path.join(d, "events")
-        sdf = spark.createDataFrame(pdf[["user_id", "ts"]])
-        # two files, strictly time-split → micro-batch 2 is entirely later
-        sdf.filter(pdf_cut_expr(cut)).coalesce(1).write.mode("overwrite").parquet(src)
-        sdf.filter(~pdf_cut_expr(cut)).coalesce(1).write.mode("append").parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        res = ST.run_stream_to_memory(
-            spark, ST.sessionize_stream(stream, gap_s=1800), "sess_stream", ck
-        ).toPandas()
-        # ≥2 emissions per user proves multiple micro-batches ran
-        assert res.groupby("user_id").size().min() >= 2
-        got = res.sort_values("last_ts").groupby("user_id").n_sessions.last()
-        batch = (
-            spark.read.parquet(src)
-            .select("user_id", F.unix_timestamp("ts").alias("e"))
-            .toPandas()
-            .sort_values(["user_id", "e"])
-        )
-        for uid, g in batch.groupby("user_id"):
-            n = (g.e.diff().fillna(1e9) > 1800).sum()
-            assert got[uid] == n, (uid, got[uid], n)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(ck, ignore_errors=True)
-
-
-def pdf_cut_expr(cut):
-    from pyspark.sql import functions as F
-
-    return F.unix_timestamp("ts") <= int(cut)
-
-
-def test_dedup_pages_stream_across_microbatches(spark, pages_dir):
-    """withWatermark + dropDuplicates(url): re-streaming the same pages dir
-    twice (two files of identical urls) yields each url once."""
-    d = tempfile.mkdtemp()
-    ck = tempfile.mkdtemp()
-    try:
-        src = os.path.join(d, "dup_pages")
-        batch = spark.read.parquet(pages_dir)
-        batch.coalesce(1).write.mode("overwrite").parquet(src)
-        batch.coalesce(1).write.mode("append").parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        res = ST.run_stream_to_memory(
-            spark, ST.dedup_pages_stream(stream).select("url"), "dedup_stream", ck
-        ).toPandas()
-        n_urls = batch.select("url").distinct().count()
-        assert len(res) == n_urls
-        assert res.url.is_unique
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(ck, ignore_errors=True)
-
-
-def test_sessionize_stream_late_event_never_regresses_state(spark):
-    """A cross-micro-batch LATE event (older than the state's last_ts) must
-    not rewind the session clock: before the fix, last_ts regressed and the
-    next on-time event within the true session faked a session split."""
+def test_stream_triples_returns_committed_rows_after_rewrite(spark, pages_dir):
+    """After a copy-on-write dictionary update the sink keeps the superseded
+    batch_id directories for time travel; a re-drain must return only the
+    rows the current snapshot commits."""
     import pandas as pd
 
+    from char_ner_spark import lineage
+    from char_ner_spark.incremental import (apply_dictionary_update,
+                                            update_dictionary_state)
+    from char_ner_spark.pipeline import build_dictionary_state
+
+    alias = make_alias_table(60, seed=42)
     d = tempfile.mkdtemp()
-    ck = tempfile.mkdtemp()
     try:
-        src = os.path.join(d, "events")
-        t0 = 1_700_000_000
-        # batch 1: two events 600s apart (one session, last_ts = t0+600)
-        b1 = pd.DataFrame({"user_id": [1, 1], "ts_epoch": [t0, t0 + 600]})
-        # batch 2: a LATE event (t0+100, inside the session) then an on-time
-        # event at t0+1200 — still within gap of t0+600, so ONE session total
-        b2 = pd.DataFrame({"user_id": [1, 1], "ts_epoch": [t0 + 100, t0 + 1200]})
-        for i, b in enumerate((b1, b2)):
-            b["ts"] = pd.to_datetime(b.ts_epoch, unit="s")
-            spark.createDataFrame(b[["user_id", "ts"]]).coalesce(1).write.mode(
-                "append" if i else "overwrite"
-            ).parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        res = ST.run_stream_to_memory(
-            spark, ST.sessionize_stream(stream, gap_s=1800), "sess_late", ck
-        ).toPandas()
-        final = res.sort_values("last_ts").groupby("user_id").n_sessions.last()
-        assert final[1] == 1          # regression bug produced 2
-        # state clock is monotone: the late event never became last_ts
-        assert res.last_ts.max() == t0 + 1200
+        out, ck = os.path.join(d, "out"), os.path.join(d, "ck")
+        first = ST.stream_triples(spark, pages_dir, alias, out, ck).toPandas()
+        ids = sorted(set(first.subj) | set(first.obj))
+        lo, hi = int(ids[0]), int(ids[-1])
+        # one alias bridges the smallest and the largest stored id
+        lo_alias = alias.loc[alias.entity_id == lo, "alias"].iloc[0]
+        delta = pd.DataFrame(
+            [(hi, "Bridge 0", lo_alias, "en", 0.5, "ORG")],
+            columns=["entity_id", "canonical_name", "alias", "lang", "prior",
+                     "ner_type"])
+        union = pd.concat([alias, delta], ignore_index=True)
+        new_state, remap = update_dictionary_state(
+            spark, build_dictionary_state(spark, alias), alias, delta)
+        stats = apply_dictionary_update(spark, out, remap, alias_pdf=union,
+                                        canon=new_state["canon"])
+        assert stats["stream_triples"]["rewritten"]
+
+        got = ST.stream_triples(spark, pages_dir, union, out, ck).toPandas()
+        want = lineage.read_table(spark, out, "stream_triples").toPandas()
+        assert len(got) == len(want)
+        key = ["subj", "pred", "obj", "url", "sent_idx", "batch_id"]
+        assert sorted(map(tuple, got[key].itertuples(index=False))) == \
+            sorted(map(tuple, want[key].itertuples(index=False)))
+        assert hi not in set(got.subj) | set(got.obj)
     finally:
         shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(ck, ignore_errors=True)
 
 
 def test_stream_triples_matches_batch_pipeline(spark):

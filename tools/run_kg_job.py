@@ -7,7 +7,7 @@ entities, and edges Iceberg-style.
 
     spark-submit --master <cluster> --py-files char_ner_spark.zip \\
         tools/run_kg_job.py --pages <dir> --out <dir> \\
-        [--alias-parquet <file>] [--n-parts 64] [--salt 16]
+        [--alias-parquet <file>] [--n-parts 64]
 
 Re-running after a crash skips the units each table's current snapshot
 (metadata/) lists.
